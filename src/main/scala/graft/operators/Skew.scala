@@ -23,11 +23,12 @@ object Skew {
     * parallelism, round-robin the rows across the cores; otherwise this
     * is the identity — any real multi-file table at scale already splits,
     * so NO extra pass over raw text is added at 100 TB, where that
-    * exchange would be the dominant cost.
+    * exchange would be the dominant cost. A streaming input is returned
+    * unchanged: `.rdd` cannot run on it.
     */
   def spreadForCompute(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 >= want) df
+    if (df.isStreaming || df.rdd.getNumPartitions * 2 >= want) df
     else df.repartition(want)
   }
 

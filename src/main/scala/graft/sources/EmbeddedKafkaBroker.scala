@@ -20,8 +20,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * protocol.
   *
   * Fetch responses are served in [[fetchBatchSize]]-record batches CYCLING
-  * the four supported codecs (none/gzip/snappy/lz4) so every consume
-  * against this broker also exercises the decompression paths. Batch
+  * codec ids 0-3 (none/gzip/snappy/lz4, through [[KafkaCompress]]) so every
+  * consume against this broker also exercises the decompression paths;
+  * zstd (id 4) is left to the sink's 'compression' option. Batch
   * timestamps are deterministic (fixed epoch + base offset), keeping
   * reads engine-replayable.
   */
@@ -118,8 +119,8 @@ final class EmbeddedKafkaBroker(topic: String, numPartitions: Int,
               else {
                 // serve in fetchBatchSize-record batches so the client's
                 // multi-batch decode path runs on every conversation;
-                // cycle none/gzip/snappy/lz4 per batch so every consume
-                // against this broker also exercises all four codecs
+                // cycle codec ids 0-3 (none/gzip/snappy/lz4) per batch so
+                // every consume against this broker also decompresses
                 val bytes = (offset until hw).grouped(fetchBatchSize)
                   .zipWithIndex.map { case (g, gi) =>
                   KafkaCodec.encodeBatch(g.head, 1723640000000L + g.head,

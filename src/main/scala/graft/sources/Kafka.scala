@@ -27,10 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - APIs: Metadata v0 (partition → leader), ListOffsets v1
   *    (earliest/latest log offsets), Fetch v4 (record batches), Produce v3;
   *  - record batch format v2 (magic 2): varint/zigzag record encoding,
-  *    CRC32C integrity (java.util.zip.CRC32C), compression codecs none +
-  *    gzip (JDK-native) + snappy/lz4 ([[KafkaCompress]]) + zstd
-  *    ([[Zstd]], full RFC 8878) — every codec the protocol defines; the
-  *    are external libraries this build excludes.
+  *    CRC32C integrity (java.util.zip.CRC32C), and every compression codec
+  *    the protocol defines (none/gzip/snappy/lz4/zstd) through
+  *    [[KafkaCompress]].
   *
   * Unlike the driver-buffered WS/AMQP transports, this source is a REAL
   * partitioned, replayable micro-batch stream: offsets are per-partition
@@ -44,6 +43,9 @@ object KafkaCodec {
 
   val ApiProduce = 0; val ApiFetch = 1; val ApiListOffsets = 2; val ApiMetadata = 3
   val ApiSaslHandshake = 17; val ApiSaslAuthenticate = 36
+
+  /** v2 batch bytes after baseOffset and batchLength, through recordCount. */
+  private val BatchHeaderLen = 49
 
   final case class KRecord(offset: Long, timestampMs: Long,
                            key: Array[Byte], value: Array[Byte])
@@ -91,15 +93,25 @@ object KafkaCodec {
       if (n < 0) None
       else { val b = new Array[Byte](n); buf.get(b); Some(new String(b, UTF_8)) }
     }
-    def bytes(): Array[Byte] = {
-      val n = int32()
-      if (n < 0) null else { val b = new Array[Byte](n); buf.get(b); b }
+    def bytes(): Array[Byte] = sized(int32(), "bytes")
+    /** `n` bytes, or null for a negative (null) length. A length past the
+      * end of the buffer is a typed error, not an allocation.
+      */
+    def sized(n: Int, what: String): Array[Byte] =
+      if (n < 0) null else { val b = new Array[Byte](need(n, what)); buf.get(b); b }
+    def skip(n: Int, what: String): Unit =
+      if (n > 0) buf.position(buf.position() + need(n, what))
+    def need(n: Int, what: String): Int = {
+      if (n < 0 || n > buf.remaining())
+        throw new java.io.IOException(s"$what length $n exceeds the ${buf.remaining()} bytes left")
+      n
     }
     def varint(): Int = { val v = uvarlong(); ((v >>> 1) ^ -(v & 1)).toInt }
     def varlong(): Long = { val v = uvarlong(); (v >>> 1) ^ -(v & 1) }
     private def uvarlong(): Long = {
       var v = 0L; var shift = 0; var b = 0
       do {
+        if (!buf.hasRemaining) throw new java.io.IOException("truncated varint")
         b = buf.get() & 0xFF
         v |= (b & 0x7FL) << shift; shift += 7
         if (shift > 63) throw new java.io.IOException("varint too long")
@@ -131,18 +143,7 @@ object KafkaCodec {
       val rb = r.result()
       recs.varint(rb.length); recs.raw(rb)
     }
-    val recBytes = codec match {
-      case 0 => recs.result()
-      case 1 =>
-        val bos = new java.io.ByteArrayOutputStream()
-        val gz = new java.util.zip.GZIPOutputStream(bos)
-        gz.write(recs.result()); gz.close()
-        bos.toByteArray
-      case 2 => KafkaCompress.SnappyStream.compress(recs.result())
-      case 3 => KafkaCompress.Lz4Frame.compress(recs.result())
-      case 4 => Zstd.compress(recs.result())
-      case c => throw new IllegalArgumentException(s"unsupported encode codec $c")
-    }
+    val recBytes = KafkaCompress.compress(codec, recs.result())
     val body = new Writer
     // attributes .. records — the CRC32C input
     body.int16(codec)                   // attributes: compression id
@@ -167,8 +168,10 @@ object KafkaCodec {
 
   /** Decode a record SET (zero or more concatenated v2 batches; the last
     * may be truncated by the broker's max_bytes — skipped, the next fetch
-    * re-reads it). Verifies CRC32C; inflates gzip (JDK codec), snappy,
-    * lz4, and zstd batches — unknown codec ids raise typed errors.
+    * re-reads it). Verifies CRC32C and inflates compressed batches
+    * ([[KafkaCompress]]). Corrupt or hostile input — unknown codec ids,
+    * lengths past the bytes left, decompression bombs — raises a typed
+    * IOException.
     */
   def decodeBatches(data: Array[Byte]): Seq[KRecord] = {
     if (data == null) return Nil
@@ -177,6 +180,9 @@ object KafkaCodec {
     while (buf.remaining() >= 12) {
       val baseOffset = buf.getLong()
       val batchLength = buf.getInt()
+      if (batchLength < BatchHeaderLen)
+        throw new java.io.IOException(
+          s"record batch length $batchLength is under the $BatchHeaderLen-byte v2 header")
       if (buf.remaining() < batchLength) buf.position(buf.limit()) // truncated tail
       else {
         val batch = new Array[Byte](batchLength)
@@ -208,48 +214,29 @@ object KafkaCodec {
         if ((attributes & 0x20) != 0) {
           // skip (batch already consumed from buf)
         } else {
-        val recordBytes = {
-          val rest = new Array[Byte](b.remaining)
-          b.buf.get(rest)
-          (attributes & 0x07) match {
-            case 0 => rest
-            case 1 => // gzip — JDK-native
-              val in = new java.util.zip.GZIPInputStream(
-                new java.io.ByteArrayInputStream(rest))
-              try in.readAllBytes() finally in.close()
-            case 2 => // snappy — xerial stream framing over raw blocks
-              KafkaCompress.SnappyStream.decompress(rest)
-            case 3 => // lz4 — standard LZ4 Frame (Kafka magic-2 batches)
-              KafkaCompress.Lz4Frame.decompress(rest)
-            case 4 => // zstd — full RFC 8878 decoder (round 12)
-              Zstd.decompress(rest)
-            case c =>
-              throw new java.io.IOException(
-                s"record batch uses unknown codec#$c — the protocol defines " +
-                  "none/gzip/snappy/lz4/zstd (all supported by this build)")
-          }
-        }
-        val rb = new Reader(ByteBuffer.wrap(recordBytes))
+        val rest = new Array[Byte](b.remaining)
+        b.buf.get(rest)
+        val rb = new Reader(ByteBuffer.wrap(
+          KafkaCompress.decompress(attributes & 0x07, rest)))
+        // every record takes at least one byte
+        if (count < 0 || count > rb.remaining)
+          throw new java.io.IOException(
+            s"record count $count exceeds the ${rb.remaining} bytes of records")
         var i = 0
         while (i < count) {
           val len = rb.varint()
           val start = rb.buf.position()
+          rb.need(len, "record")
           rb.int8() // attributes
           val tsDelta = rb.varlong()
           val offDelta = rb.varint()
-          val keyLen = rb.varint()
-          val key = if (keyLen < 0) null else {
-            val a = new Array[Byte](keyLen); rb.buf.get(a); a
-          }
-          val valLen = rb.varint()
-          val value = if (valLen < 0) null else {
-            val a = new Array[Byte](valLen); rb.buf.get(a); a
-          }
+          val key = rb.sized(rb.varint(), "key")
+          val value = rb.sized(rb.varint(), "value")
           val headers = rb.varint()
           var h = 0
           while (h < headers) { // skip headers
-            val kl = rb.varint(); rb.buf.position(rb.buf.position() + math.max(0, kl))
-            val vl = rb.varint(); rb.buf.position(rb.buf.position() + math.max(0, vl))
+            rb.skip(rb.varint(), "header key")
+            rb.skip(rb.varint(), "header value")
             h += 1
           }
           rb.buf.position(start + len) // defensive: honor declared length
@@ -645,7 +632,7 @@ private[sources] class KafkaReaderFactory extends PartitionReaderFactory {
   * one v2 batch per epoch-partition (buffered in `process`, flushed in
   * `close` — one Produce round-trip per task), compressed per `codec`
   * (the 'compression' sink option: none/gzip/snappy/lz4/zstd — every
-  * codec the protocol defines, all pure-JVM). Spark partition id maps
+  * codec the protocol defines, see [[KafkaCompress]]). Spark partition id maps
   * onto the topic's partitions round-robin.
   */
 object KafkaForeachWriter {

@@ -1,522 +1,189 @@
 package graft.sources
 
-import java.io.IOException
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException, InputStream}
 import java.nio.{ByteBuffer, ByteOrder}
+import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-/** Pure-JVM decompression for the two codecs real Kafka clusters default
-  * to — snappy and lz4 — written against the PUBLIC format specs (Google
-  * snappy format description; LZ4 Frame spec v1.6.0; xxHash spec), so the
-  * wire source/sink (Kafka.scala) needs no external codec jars.
+import com.github.luben.zstd.{ZstdCompressCtx, ZstdInputStreamNoFinalizer}
+import net.jpountz.lz4.{LZ4Factory, LZ4FrameOutputStream}
+import net.jpountz.lz4.LZ4FrameOutputStream.{BLOCKSIZE, FLG}
+import net.jpountz.xxhash.XXHashFactory
+import org.xerial.snappy.{Snappy, SnappyError, SnappyInputStream, SnappyOutputStream}
+
+/** Every Kafka record-batch codec, by the attributes compression id:
+  * 0=none, 1=gzip, 2=snappy, 3=lz4, 4=zstd. Only this object knows how an
+  * id maps to a format; the codecs themselves are the JDK's gzip and the
+  * zstd-jni, snappy-java and lz4-java jars Spark ships.
   *
-  * What Kafka actually puts on the wire for record-batch magic 2
-  * (reference: the protocol's attributes codec bits; the reference repo's
-  * kafka roadmap notes at feat/kafka.md name the same codecs):
-  *  - snappy (codec 2): the xerial SnappyOutputStream STREAM framing —
-  *    16-byte header (magic "\x82SNAPPY\x00", version, compat-version)
-  *    then [int32-BE chunk length][raw snappy block] pairs.
-  *  - lz4 (codec 3): the standard LZ4 FRAME format — magic 0x184D2204,
-  *    FLG/BD descriptor + xxHash32 header checksum, blocks (each either
-  *    lz4-block-compressed or stored with the high size bit set, with
-  *    optional per-block xxHash32), EndMark, optional content xxHash32.
+  * What Kafka puts on the wire for record-batch magic 2:
+  *  - snappy: the xerial SnappyOutputStream framing — 16-byte header
+  *    (magic "\x82SNAPPY\x00", version, compat-version), then
+  *    [int32-BE chunk length][raw snappy block] chunks;
+  *  - lz4: the LZ4 frame format (magic 0x184D2204, FLG/BD descriptor with
+  *    an xxHash32 header checksum, blocks, EndMark, optional content
+  *    xxHash32);
+  *  - zstd: a standard zstd frame.
   *
-  * Compress-side (round 11): REAL match-emitting encoders for both —
-  * greedy hash-table matchers per each format spec (snappy copy-2 ops;
-  * lz4 sequences honoring the end-of-block rules) — so produced batches
-  * are genuinely smaller on repetitive payloads; incompressible input
-  * degrades to the formats' first-class passthrough (literal runs /
-  * stored blocks).
-  *
-  * Everything here is allocation-bounded by the DECLARED uncompressed
-  * length, which is capped (maxOut) so a corrupt/malicious length prefix
-  * cannot OOM an executor.
+  * Decoding is bounded on hostile input: every decoder writes through one
+  * [[MaxOut]]-capped buffer, and every failure reaches callers as an
+  * `IOException`, whatever the library throws.
   */
 object KafkaCompress {
 
   /** Decompression bomb guard: a single record batch legitimately tops out
     * around the broker's message.max.bytes (default ~1 MB, commonly raised
-    * to 10s of MB); 256 MB declared output from one batch is corruption.
+    * to 10s of MB); 256 MB of output from one batch is corruption.
     */
   val MaxOut: Int = 256 << 20
 
   private def fail(msg: String): Nothing = throw new IOException(msg)
 
-  private def checkedLen(n: Long, what: String): Int = {
-    if (n < 0 || n > MaxOut) fail(s"$what: declared length $n outside [0, $MaxOut]")
-    n.toInt
+  private def overCap(codec: Int): Nothing =
+    fail(s"${name(codec)}: output exceeds the $MaxOut-byte cap (MaxOut)")
+
+  private def name(codec: Int): String = codec match {
+    case 1 => "gzip"; case 2 => "snappy"; case 3 => "lz4"; case 4 => "zstd"
+    case _ => s"codec#$codec"
   }
 
-  // ---------------------------------------------------------------- xxHash32
-
-  /** xxHash32 (Collet's public spec) — LZ4 Frame's checksum function for
-    * the header byte, per-block checks, and the content check.
+  /** `in` in the format of codec id `codec`; an id outside 0-4 is a
+    * caller error (IllegalArgumentException).
     */
-  object XxHash32 {
-    private final val P1 = 0x9E3779B1
-    private final val P2 = 0x85EBCA77
-    private final val P3 = 0xC2B2AE3D
-    private final val P4 = 0x27D4EB2F
-    private final val P5 = 0x165667B1
-
-    def hash(data: Array[Byte], off: Int, len: Int, seed: Int): Int = {
-      def le32(i: Int): Int =
-        (data(i) & 0xFF) | ((data(i + 1) & 0xFF) << 8) |
-          ((data(i + 2) & 0xFF) << 16) | ((data(i + 3) & 0xFF) << 24)
-      var i = off
-      val end = off + len
-      var h =
-        if (len >= 16) {
-          var a1 = seed + P1 + P2; var a2 = seed + P2
-          var a3 = seed; var a4 = seed - P1
-          while (i <= end - 16) {
-            a1 = Integer.rotateLeft(a1 + le32(i) * P2, 13) * P1
-            a2 = Integer.rotateLeft(a2 + le32(i + 4) * P2, 13) * P1
-            a3 = Integer.rotateLeft(a3 + le32(i + 8) * P2, 13) * P1
-            a4 = Integer.rotateLeft(a4 + le32(i + 12) * P2, 13) * P1
-            i += 16
-          }
-          Integer.rotateLeft(a1, 1) + Integer.rotateLeft(a2, 7) +
-            Integer.rotateLeft(a3, 12) + Integer.rotateLeft(a4, 18)
-        } else seed + P5
-      h += len
-      while (i <= end - 4) {
-        h = Integer.rotateLeft(h + le32(i) * P3, 17) * P4
-        i += 4
+  def compress(codec: Int, in: Array[Byte]): Array[Byte] = codec match {
+    case 0 => in
+    case 1 | 2 | 3 => typed(codec) {
+      val bos = new ByteArrayOutputStream(in.length / 2 + 64)
+      val s = codec match {
+        case 1 => new GZIPOutputStream(bos)
+        case 2 => new SnappyOutputStream(bos)
+        case _ => new LZ4FrameOutputStream(bos, BLOCKSIZE.SIZE_64KB,
+          FLG.Bits.BLOCK_INDEPENDENCE, FLG.Bits.CONTENT_CHECKSUM)
       }
-      while (i < end) {
-        h = Integer.rotateLeft(h + (data(i) & 0xFF) * P5, 11) * P1
-        i += 1
-      }
-      h ^= h >>> 15; h *= P2; h ^= h >>> 13; h *= P3; h ^= h >>> 16
-      h
+      s.write(in); s.close()
+      bos.toByteArray
     }
+    case 4 => typed(codec) {
+      val ctx = new ZstdCompressCtx().setChecksum(true)
+      try ctx.compress(in) finally ctx.close()
+    }
+    case c => throw new IllegalArgumentException(s"unsupported encode codec $c")
   }
 
-  // ------------------------------------------------------- snappy raw block
-
-  /** Raw snappy block format: varint uncompressed length, then a tag
-    * stream of literals and back-copies (1/2/4-byte offsets, overlap
-    * allowed). This is the unit the xerial stream framing chunks.
+  /** The bytes `in` decodes to under codec id `codec`. Corrupt input, an
+    * unknown id, or more than [[MaxOut]] bytes of output is an IOException.
     */
-  object SnappyRaw {
+  def decompress(codec: Int, in: Array[Byte]): Array[Byte] = codec match {
+    case 0 => in
+    case 1 => typed(codec)(readCapped(codec, new GZIPInputStream(new ByteArrayInputStream(in))))
+    case 2 => typed(codec) {
+      checkSnappyFraming(in)
+      readCapped(codec, new SnappyInputStream(new ByteArrayInputStream(in)))
+    }
+    case 3 => typed(codec)(lz4Frame(in))
+    case 4 => typed(codec) {
+      checkZstdMagic(in)
+      readCapped(codec, new ZstdInputStreamNoFinalizer(new ByteArrayInputStream(in)))
+    }
+    case c => fail(s"record batch uses unknown codec#$c — the protocol defines " +
+      "none/gzip/snappy/lz4/zstd (all supported by this build)")
+  }
 
-    def uncompress(in: Array[Byte], off: Int, len: Int): Array[Byte] = {
-      var i = off
-      val end = off + len
-      // varint32 uncompressed length
-      var uLen = 0L; var shift = 0
-      var more = true
-      while (more) {
-        if (i >= end || shift > 31) fail("snappy: bad length varint")
-        val b = in(i) & 0xFF; i += 1
-        uLen |= (b & 0x7FL) << shift; shift += 7
-        more = (b & 0x80) != 0
-      }
-      val outLen = checkedLen(uLen, "snappy")
-      val out = new Array[Byte](outLen)
-      var o = 0
-      while (i < end) {
-        val tag = in(i) & 0xFF; i += 1
-        (tag & 3) match {
-          case 0 => // literal
-            var lit = (tag >> 2) + 1
-            if (lit > 60) {
-              val extra = lit - 60 // 1..4 length bytes, little-endian
-              if (i + extra > end) fail("snappy: truncated literal length")
-              var v = 0L; var k = 0
-              while (k < extra) { v |= (in(i + k) & 0xFFL) << (8 * k); k += 1 }
-              i += extra
-              lit = checkedLen(v + 1, "snappy literal")
-            }
-            if (i + lit > end || o + lit > outLen) fail("snappy: literal overrun")
-            System.arraycopy(in, i, out, o, lit)
-            i += lit; o += lit
-          case 1 => // copy, 1-byte offset, len 4..11
-            if (i >= end) fail("snappy: truncated copy1")
-            val cLen = ((tag >> 2) & 0x7) + 4
-            val offset = ((tag >> 5) << 8) | (in(i) & 0xFF); i += 1
-            copy(out, o, offset, cLen, outLen); o += cLen
-          case 2 => // copy, 2-byte LE offset, len 1..64
-            if (i + 2 > end) fail("snappy: truncated copy2")
-            val cLen = (tag >> 2) + 1
-            val offset = (in(i) & 0xFF) | ((in(i + 1) & 0xFF) << 8); i += 2
-            copy(out, o, offset, cLen, outLen); o += cLen
-          case _ => // copy, 4-byte LE offset, len 1..64
-            if (i + 4 > end) fail("snappy: truncated copy4")
-            val cLen = (tag >> 2) + 1
-            val offset = (in(i) & 0xFF) | ((in(i + 1) & 0xFF) << 8) |
-              ((in(i + 2) & 0xFF) << 16) | ((in(i + 3) & 0xFF) << 24)
-            i += 4
-            copy(out, o, offset, cLen, outLen); o += cLen
-        }
-      }
-      if (o != outLen) fail(s"snappy: decoded $o bytes, declared $outLen")
-      out
+  /** Library failures (zstd-jni's ZstdException, lz4-java's LZ4Exception,
+    * xerial's SnappyError, buffer under-runs) as the typed IOException.
+    */
+  private def typed[T](codec: Int)(body: => T): T =
+    try body catch {
+      case e @ (_: RuntimeException | _: SnappyError) =>
+        throw new IOException(s"${name(codec)}: $e", e)
     }
 
-    /** Overlap-safe back-copy (offset < len is legal snappy — it repeats). */
-    private def copy(out: Array[Byte], o: Int, offset: Int, len: Int,
-                     outLen: Int): Unit = {
-      if (offset <= 0 || offset > o) fail(s"snappy: copy offset $offset at $o")
-      if (o + len > outLen) fail("snappy: copy overrun")
-      var k = 0
-      while (k < len) { out(o + k) = out(o + k - offset); k += 1 }
-    }
-
-    /** Match-emitting snappy block encoder (the format spec's element
-      * stream): greedy hash-table matcher over 4-byte windows — literals
-      * for the gaps, copy-2 ops (2-byte LE offset, len 1..64) for matches
-      * within 64 KB. Repetitive payloads compress for real; incompressible
-      * data degrades to the literal passthrough by construction. Round 11:
-      * replaces the literal-only encoder on the produce path (batches to
-      * real brokers were valid but uncompressed-size before).
-      */
-    def compress(in: Array[Byte]): Array[Byte] = {
-      val len = in.length
-      val out = new java.io.ByteArrayOutputStream(len / 2 + 32)
-      var v = len
-      while ((v & ~0x7F) != 0) { out.write((v & 0x7F) | 0x80); v >>>= 7 }
-      out.write(v)
-      def load32(p: Int): Int =
-        (in(p) & 0xFF) | ((in(p + 1) & 0xFF) << 8) |
-          ((in(p + 2) & 0xFF) << 16) | ((in(p + 3) & 0xFF) << 24)
-      def emitLiteral(from: Int, n: Int): Unit = if (n > 0) {
-        val l = n - 1
-        if (l < 60) out.write(l << 2)
-        else if (l < 0x100) { out.write(60 << 2); out.write(l) }
-        else if (l < 0x10000) {
-          out.write(61 << 2); out.write(l & 0xFF); out.write((l >> 8) & 0xFF)
-        } else {
-          out.write(62 << 2)
-          out.write(l & 0xFF); out.write((l >> 8) & 0xFF); out.write((l >> 16) & 0xFF)
-        }
-        out.write(in, from, n)
-      }
-      val bits = 13
-      val table = new Array[Int](1 << bits) // empty = 0, else pos + 1
-      var s = 0
-      var lit = 0
-      while (s + 4 <= len) {
-        val h = (load32(s) * 0x1E35A7BD) >>> (32 - bits)
-        val cand = table(h) - 1
-        table(h) = s + 1
-        if (cand >= 0 && s - cand < 0x10000 && load32(cand) == load32(s)) {
-          var m = 4
-          while (s + m < len && in(cand + m) == in(s + m)) m += 1
-          emitLiteral(lit, s - lit)
-          val offset = s - cand
-          var rem = m
-          while (rem > 0) {
-            val c = math.min(64, rem)
-            out.write(((c - 1) << 2) | 2)
-            out.write(offset & 0xFF); out.write((offset >> 8) & 0xFF)
-            rem -= c
-          }
-          s += m
-          lit = s
-        } else s += 1
-      }
-      emitLiteral(lit, len - lit)
-      out.toByteArray
-    }
-
-    /** Valid literal-only snappy encoding (the format's passthrough path —
-      * what a compressor emits for incompressible data).
-      */
-    def compressLiteral(in: Array[Byte]): Array[Byte] = {
-      val head = ByteBuffer.allocate(5 + 5)
-      var v = in.length
-      while ((v & ~0x7F) != 0) { head.put(((v & 0x7F) | 0x80).toByte); v >>>= 7 }
-      head.put(v.toByte)
-      // literal tag; lengths >=61 use the 4-byte extended form for simplicity
-      if (in.length == 0) { /* zero-length block: just the varint */ }
-      else if (in.length <= 60) head.put(((in.length - 1) << 2).toByte)
-      else {
-        head.put((63 << 2).toByte) // 63 = 4 extra LE length bytes
-        val l = in.length - 1
-        head.put((l & 0xFF).toByte).put(((l >> 8) & 0xFF).toByte)
-          .put(((l >> 16) & 0xFF).toByte).put(((l >> 24) & 0xFF).toByte)
-      }
-      head.flip()
-      val h = new Array[Byte](head.remaining()); head.get(h)
-      h ++ in
+  /** The one output buffer every decoder writes through; it refuses to
+    * grow past [[MaxOut]].
+    */
+  private final class CappedOutput(codec: Int) extends ByteArrayOutputStream {
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      if (count.toLong + len > MaxOut) overCap(codec)
+      super.write(b, off, len)
     }
   }
 
-  // ------------------------------------------------- xerial stream framing
+  private def readCapped(codec: Int, in: InputStream): Array[Byte] = {
+    val out = new CappedOutput(codec)
+    try in.transferTo(out) finally in.close()
+    out.toByteArray
+  }
 
-  /** The xerial snappy-java STREAM format Kafka wraps batches in:
-    * 8-byte magic `\x82SNAPPY\x00`, int32-BE version (1), int32-BE
-    * compatible-version (1), then [int32-BE length][raw snappy block]
-    * chunks until EOF.
+  private val SnappyMagic: Array[Byte] = Array(0x82.toByte, 'S', 'N', 'A', 'P', 'P', 'Y', 0)
+
+  /** Walk the xerial framing before SnappyInputStream reads it: that
+    * stream sizes its buffers from the chunk lengths and the raw blocks'
+    * declared lengths, reads a bad-magic input as one raw block, and
+    * treats a cut chunk-length field as end of stream.
     */
-  object SnappyStream {
-    private val Magic: Array[Byte] =
-      Array(0x82.toByte, 'S', 'N', 'A', 'P', 'P', 'Y', 0)
-
-    def decompress(in: Array[Byte]): Array[Byte] = {
-      if (in.length < 16 || !java.util.Arrays.equals(
-            java.util.Arrays.copyOfRange(in, 0, 8), Magic))
-        fail("snappy stream: bad magic (not xerial framing)")
-      val buf = ByteBuffer.wrap(in, 8, in.length - 8)
-      buf.getInt(); buf.getInt() // version, compatible version
-      val out = new java.io.ByteArrayOutputStream(in.length * 2)
-      while (buf.remaining() >= 4) {
-        val chunkLen = buf.getInt()
-        if (chunkLen < 0 || chunkLen > buf.remaining())
-          fail(s"snappy stream: bad chunk length $chunkLen")
-        val chunk = SnappyRaw.uncompress(in, buf.position(), chunkLen)
-        if (out.size().toLong + chunk.length > MaxOut)
-          fail("snappy stream: output exceeds cap")
-        out.write(chunk)
-        buf.position(buf.position() + chunkLen)
-      }
-      if (buf.remaining() != 0) fail("snappy stream: trailing garbage")
-      out.toByteArray
-    }
-
-    def compress(in: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream(in.length + 64)
-      out.write(Magic, 0, 8)
-      val ver = ByteBuffer.allocate(8).putInt(1).putInt(1).array()
-      out.write(ver, 0, 8)
-      // chunk at 32 KB (xerial's default block size)
-      var off = 0
-      while (off < in.length || (in.length == 0 && off == 0)) {
-        val n = math.min(32 * 1024, in.length - off)
-        val block = SnappyRaw.compress(
-          java.util.Arrays.copyOfRange(in, off, off + n))
-        val len = ByteBuffer.allocate(4).putInt(block.length).array()
-        out.write(len, 0, 4)
-        out.write(block, 0, block.length)
-        off += n
-        if (in.length == 0) off = 1 // single empty chunk, then stop
-      }
-      out.toByteArray
+  private def checkSnappyFraming(in: Array[Byte]): Unit = {
+    if (in.length < 16 || !java.util.Arrays.equals(in, 0, 8, SnappyMagic, 0, 8))
+      fail("snappy: bad magic (not xerial framing)")
+    val buf = ByteBuffer.wrap(in, 16, in.length - 16)
+    var declared = 0L
+    while (buf.hasRemaining) {
+      if (buf.remaining < 4) fail("snappy: truncated chunk length")
+      val n = buf.getInt()
+      if (n < 0 || n > buf.remaining) fail(s"snappy: bad chunk length $n")
+      declared += Snappy.uncompressedLength(in, buf.position(), n) & 0xFFFFFFFFL
+      if (declared > MaxOut) overCap(2)
+      buf.position(buf.position() + n)
     }
   }
 
-  // ------------------------------------------------------------- lz4 block
-
-  /** LZ4 block format: [token][literal len ext][literals][2-byte LE
-    * offset][match len ext] sequences; final sequence is literals-only.
-    */
-  object Lz4Block {
-    def decompress(in: Array[Byte], off: Int, len: Int,
-                   maxLen: Int): Array[Byte] = {
-      val outCap = checkedLen(maxLen, "lz4 block")
-      val out = new Array[Byte](outCap)
-      var i = off
-      val end = off + len
-      var o = 0
-      var done = false
-      while (!done) {
-        if (i >= end) fail("lz4: truncated sequence")
-        val token = in(i) & 0xFF; i += 1
-        var lit = token >> 4
-        if (lit == 15) {
-          var b = 255
-          while (b == 255) {
-            if (i >= end) fail("lz4: truncated literal length")
-            b = in(i) & 0xFF; i += 1
-            lit += b
-            if (lit > outCap) fail("lz4: literal length overrun")
-          }
-        }
-        if (i + lit > end || o + lit > outCap) fail("lz4: literal overrun")
-        System.arraycopy(in, i, out, o, lit)
-        i += lit; o += lit
-        if (i == end) done = true // last sequence: literals only, no match
-        else {
-          if (i + 2 > end) fail("lz4: truncated offset")
-          val offset = (in(i) & 0xFF) | ((in(i + 1) & 0xFF) << 8); i += 2
-          if (offset <= 0 || offset > o) fail(s"lz4: bad offset $offset at $o")
-          var mLen = (token & 0xF) + 4
-          if ((token & 0xF) == 15) {
-            var b = 255
-            while (b == 255) {
-              if (i >= end) fail("lz4: truncated match length")
-              b = in(i) & 0xFF; i += 1
-              mLen += b
-              if (mLen > outCap) fail("lz4: match length overrun")
-            }
-          }
-          if (o + mLen > outCap) fail("lz4: match overrun")
-          var k = 0
-          while (k < mLen) { out(o + k) = out(o + k - offset); k += 1 }
-          o += mLen
-        }
-      }
-      if (o == outCap) out else java.util.Arrays.copyOf(out, o)
-    }
-
-    /** Match-emitting LZ4 block encoder (block format spec): greedy
-      * hash-table matcher, min match 4, 2-byte LE offsets, and the spec's
-      * end-of-block rules honored (the last match starts at least 12
-      * bytes before the end; the last 5 bytes are always literals).
-      * Round 11: gives the frame encoder real compressed blocks — the
-      * produce path previously emitted stored blocks only.
-      */
-    def compress(in: Array[Byte]): Array[Byte] = {
-      val len = in.length
-      val out = new java.io.ByteArrayOutputStream(len + len / 255 + 16)
-      def load32(p: Int): Int =
-        (in(p) & 0xFF) | ((in(p + 1) & 0xFF) << 8) |
-          ((in(p + 2) & 0xFF) << 16) | ((in(p + 3) & 0xFF) << 24)
-      def writeLen(n0: Int): Unit = {
-        var n = n0
-        while (n >= 255) { out.write(255); n -= 255 }
-        out.write(n)
-      }
-      def emitSeq(litFrom: Int, litN: Int, offset: Int, mLen: Int): Unit = {
-        val litTok = math.min(15, litN)
-        if (mLen < 0) { // final literals-only sequence
-          out.write(litTok << 4)
-          if (litN >= 15) writeLen(litN - 15)
-          out.write(in, litFrom, litN)
-        } else {
-          val mTok = math.min(15, mLen - 4)
-          out.write((litTok << 4) | mTok)
-          if (litN >= 15) writeLen(litN - 15)
-          out.write(in, litFrom, litN)
-          out.write(offset & 0xFF); out.write((offset >> 8) & 0xFF)
-          if (mLen - 4 >= 15) writeLen(mLen - 4 - 15)
-        }
-      }
-      val bits = 13
-      val table = new Array[Int](1 << bits)
-      var s = 0
-      var lit = 0
-      val mfLimit = len - 12   // no match may START in the last 12 bytes
-      val matchLimit = len - 5 // the last 5 bytes are always literals
-      while (s < mfLimit) {
-        val h = (load32(s) * 0x1E35A7BD) >>> (32 - bits)
-        val cand = table(h) - 1
-        table(h) = s + 1
-        if (cand >= 0 && s - cand <= 0xFFFF && load32(cand) == load32(s)) {
-          var m = 4
-          while (s + m < matchLimit && in(cand + m) == in(s + m)) m += 1
-          emitSeq(lit, s - lit, s - cand, m)
-          s += m
-          lit = s
-        } else s += 1
-      }
-      emitSeq(lit, len - lit, 0, -1)
-      out.toByteArray
-    }
+  private def checkZstdMagic(in: Array[Byte]): Unit = {
+    val magic = if (in.length < 4) 0 else ByteBuffer.wrap(in).order(ByteOrder.LITTLE_ENDIAN).getInt
+    if (magic != 0xFD2FB528 && (magic & 0xFFFFFFF0) != 0x184D2A50)
+      fail(f"zstd: bad magic 0x$magic%08X")
   }
 
-  // ------------------------------------------------------------- lz4 frame
+  private lazy val lz4Block = LZ4Factory.fastestInstance().safeDecompressor()
+  private lazy val xxHash32 = XXHashFactory.fastestInstance().hash32()
 
-  /** LZ4 Frame (the format Kafka's lz4 codec writes for magic-2 batches):
-    * full decode — descriptor flags, header-checksum verify, stored AND
-    * compressed blocks, optional per-block and content xxHash32 — and a
-    * stored-blocks encoder (uncompressed passthrough is first-class in the
-    * spec: high bit of the block size).
+  /** LZ4 frame reader. LZ4FrameInputStream refuses frames whose FLG lacks
+    * the block-independence bit, which older producers (and the KafkaSpec
+    * golden frame) write; blocks are decoded one at a time here, so such a
+    * frame reads as long as no block refers back into an earlier one.
     */
-  object Lz4Frame {
-    private final val MagicNum = 0x184D2204
-
-    def decompress(in: Array[Byte]): Array[Byte] = {
-      val buf = ByteBuffer.wrap(in).order(ByteOrder.LITTLE_ENDIAN)
-      if (buf.remaining() < 7) fail("lz4 frame: truncated header")
-      if (buf.getInt() != MagicNum) fail("lz4 frame: bad magic")
-      val descStart = buf.position()
-      val flg = buf.get() & 0xFF
-      if ((flg >> 6) != 1) fail(s"lz4 frame: unsupported version ${flg >> 6}")
-      val blockChecksum = (flg & 0x10) != 0
-      val hasContentSize = (flg & 0x08) != 0
-      val contentChecksum = (flg & 0x04) != 0
-      val hasDictId = (flg & 0x01) != 0
-      val bd = buf.get() & 0xFF
-      val bMaxCode = (bd >> 4) & 0x7
-      if (bMaxCode < 4 || bMaxCode > 7) fail(s"lz4 frame: bad block max code $bMaxCode")
-      val blockMax = 1 << (8 + 2 * bMaxCode) // 4→64KB … 7→4MB
-      val declaredSize = if (hasContentSize) buf.getLong() else -1L
-      if (hasDictId) buf.getInt()
-      val descEnd = buf.position()
-      val hc = buf.get() & 0xFF
-      val expectHc =
-        (XxHash32.hash(in, descStart, descEnd - descStart, 0) >> 8) & 0xFF
-      if (hc != expectHc)
-        fail(f"lz4 frame: header checksum $hc%02x != $expectHc%02x")
-      if (declaredSize > MaxOut) fail("lz4 frame: declared size exceeds cap")
-
-      val out = new java.io.ByteArrayOutputStream(
-        if (declaredSize >= 0) declaredSize.toInt else in.length * 2)
-      var endMark = false
-      while (!endMark) {
-        if (buf.remaining() < 4) fail("lz4 frame: truncated block size")
-        val sizeWord = buf.getInt()
-        if (sizeWord == 0) endMark = true
-        else {
-          val stored = (sizeWord & 0x80000000) != 0
-          val bLen = sizeWord & 0x7FFFFFFF
-          if (bLen > blockMax + (blockMax >> 2))
-            fail(s"lz4 frame: block length $bLen exceeds declared max $blockMax")
-          if (buf.remaining() < bLen) fail("lz4 frame: truncated block")
-          val bOff = buf.position()
-          val block =
-            if (stored) java.util.Arrays.copyOfRange(in, bOff, bOff + bLen)
-            else Lz4Block.decompress(in, bOff, bLen, blockMax)
-          buf.position(bOff + bLen)
-          if (blockChecksum) {
-            if (buf.remaining() < 4) fail("lz4 frame: truncated block checksum")
-            val got = buf.getInt()
-            val want = XxHash32.hash(in, bOff, bLen, 0)
-            if (got != want) fail("lz4 frame: block checksum mismatch")
-          }
-          if (out.size().toLong + block.length > MaxOut)
-            fail("lz4 frame: output exceeds cap")
-          out.write(block)
-        }
-      }
-      val result = out.toByteArray
-      if (contentChecksum) {
-        if (buf.remaining() < 4) fail("lz4 frame: truncated content checksum")
-        val got = buf.getInt()
-        val want = XxHash32.hash(result, 0, result.length, 0)
-        if (got != want) fail("lz4 frame: content checksum mismatch")
-      }
-      if (declaredSize >= 0 && result.length != declaredSize)
-        fail(s"lz4 frame: decoded ${result.length}, declared $declaredSize")
-      result
+  private def lz4Frame(in: Array[Byte]): Array[Byte] = {
+    val buf = ByteBuffer.wrap(in).order(ByteOrder.LITTLE_ENDIAN)
+    if (buf.getInt() != 0x184D2204) fail("lz4: bad magic")
+    val flg = buf.get() & 0xFF
+    if ((flg >> 6) != 1) fail(s"lz4: unsupported frame version ${flg >> 6}")
+    val blockChecksum = (flg & 0x10) != 0
+    val contentChecksum = (flg & 0x04) != 0
+    val bMaxCode = (buf.get() >> 4) & 0x7
+    if (bMaxCode < 4) fail(s"lz4: bad block max code $bMaxCode")
+    val blockMax = 1 << (8 + 2 * bMaxCode) // 4→64KB … 7→4MB
+    val declared = if ((flg & 0x08) != 0) buf.getLong() else -1L
+    if ((flg & 0x01) != 0) buf.getInt() // dictionary id
+    val hc = buf.get() & 0xFF
+    if (hc != ((xxHash32.hash(in, 4, buf.position() - 5, 0) >> 8) & 0xFF))
+      fail("lz4: header checksum mismatch")
+    if (declared > MaxOut) overCap(3)
+    val out = new CappedOutput(3)
+    val block = new Array[Byte](blockMax)
+    var word = buf.getInt()
+    while (word != 0) {
+      val n = word & 0x7FFFFFFF
+      if (n > blockMax || n > buf.remaining) fail(s"lz4: bad block length $n")
+      val off = buf.position()
+      if (word < 0) out.write(in, off, n) // stored block (high bit set)
+      else out.write(block, 0, lz4Block.decompress(in, off, n, block, 0, blockMax))
+      buf.position(off + n)
+      if (blockChecksum && buf.getInt() != xxHash32.hash(in, off, n, 0))
+        fail("lz4: block checksum mismatch")
+      word = buf.getInt()
     }
-
-    /** Frame encoder: FLG = version 01 + content-checksum, BD = 64 KB
-      * blocks. Each block is LZ4-compressed ([[Lz4Block.compress]]); when
-      * compression does not shrink a block it is emitted STORED instead
-      * (high bit of the block size — the spec's passthrough, and exactly
-      * what reference lz4 implementations do for incompressible blocks).
-      */
-    def compress(in: Array[Byte]): Array[Byte] = {
-      val header = new Array[Byte](2)
-      header(0) = ((1 << 6) | 0x04).toByte // version 01, content checksum
-      header(1) = (4 << 4).toByte // 64 KB block max
-      val hc = ((XxHash32.hash(header, 0, 2, 0) >> 8) & 0xFF).toByte
-      val out = new java.io.ByteArrayOutputStream(in.length + 32)
-      val magic = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-        .putInt(MagicNum).array()
-      out.write(magic, 0, 4)
-      out.write(header, 0, 2)
-      out.write(hc)
-      var off = 0
-      while (off < in.length) {
-        val n = math.min(64 * 1024, in.length - off)
-        val packed = Lz4Block.compress(java.util.Arrays.copyOfRange(in, off, off + n))
-        val (word, body) =
-          if (packed.length < n) (packed.length, packed)
-          else (n | 0x80000000, java.util.Arrays.copyOfRange(in, off, off + n))
-        val sz = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-          .putInt(word).array()
-        out.write(sz, 0, 4)
-        out.write(body, 0, body.length)
-        off += n
-      }
-      out.write(Array[Byte](0, 0, 0, 0), 0, 4) // EndMark
-      val cks = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-        .putInt(XxHash32.hash(in, 0, in.length, 0)).array()
-      out.write(cks, 0, 4)
-      out.toByteArray
-    }
+    val result = out.toByteArray
+    if (contentChecksum && buf.getInt() != xxHash32.hash(result, 0, result.length, 0))
+      fail("lz4: content checksum mismatch")
+    if (declared >= 0 && result.length != declared)
+      fail(s"lz4: decoded ${result.length} bytes, declared $declared")
+    result
   }
 }

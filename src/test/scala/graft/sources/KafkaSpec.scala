@@ -103,114 +103,158 @@ class KafkaSpec extends AnyFunSuite {
     out
   }
 
+  /** `plain`'s header with `section` as its records section under codec
+    * id `codec`, batchLength and CRC32C patched to match.
+    */
+  private def withSection(plain: Array[Byte], section: Array[Byte],
+                          codec: Int): Array[Byte] = {
+    val headerLen = 61 // batch header through recordCount
+    val out = java.util.Arrays.copyOfRange(plain, 0, headerLen) ++ section
+    val bb = ByteBuffer.wrap(out)
+    bb.putInt(8, out.length - 12)
+    bb.putShort(21, codec.toShort)
+    fixCrc(out)
+  }
+
   test("codec: gzip-compressed batches inflate with the JDK codec") {
     val plain = KafkaCodec.encodeBatch(7L, 5L,
       Seq((null, "aaa".getBytes(UTF_8)), (null, "bbb".getBytes(UTF_8))))
     // rebuild as a gzip batch: header fields unchanged except attributes=1,
     // records section gzipped
-    val headerLen = 61 // batch header through recordCount
-    val records = java.util.Arrays.copyOfRange(plain, headerLen, plain.length)
+    val records = java.util.Arrays.copyOfRange(plain, 61, plain.length)
     val bos = new java.io.ByteArrayOutputStream()
     val gz = new java.util.zip.GZIPOutputStream(bos)
     gz.write(records); gz.close()
-    val zipped = bos.toByteArray
-    val w = new KafkaCodec.Writer
-    w.raw(java.util.Arrays.copyOfRange(plain, 0, headerLen))
-    w.raw(zipped)
-    val out = w.result()
-    // patch batchLength, attributes, then CRC
-    val bb = ByteBuffer.wrap(out)
-    bb.putInt(8, out.length - 12)
-    bb.putShort(21, 1.toShort)
-    val fixed = fixCrc(out)
-    val decoded = KafkaCodec.decodeBatches(fixed)
+    val decoded = KafkaCodec.decodeBatches(withSection(plain, bos.toByteArray, 1))
     assert(decoded.map(r => new String(r.value, UTF_8)) == Seq("aaa", "bbb"))
     assert(decoded.map(_.offset) == Seq(7L, 8L))
   }
 
-  test("xxhash32: published reference vectors (seed 0)") {
-    import graft.sources.KafkaCompress.XxHash32
-    def h(s: String) = XxHash32.hash(s.getBytes(UTF_8), 0, s.length, 0)
-    assert(h("") == 0x02CC5D05)            // xxHash spec test vector
-    assert(h("a") == 0x550D7456)
-    assert(h("abc") == 0x32D153FF)
-    // >16 bytes exercises the 4-accumulator stripe path
-    assert(h("abcdefghijklmnopqrstuvwxyz") != h("abcdefghijklmnopqrstuvwxyZ"))
+  test("codec: a gzip batch inflating past MaxOut fails typed at the cap") {
+    // ~300 KB of gzip that inflates to 300 MiB of zeros
+    val bos = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(bos)
+    val zeros = new Array[Byte](1 << 20)
+    for (_ <- 0 until 300) gz.write(zeros)
+    gz.close()
+    val plain = KafkaCodec.encodeBatch(0L, 0L, Seq((null, "x".getBytes(UTF_8))))
+    val e = intercept[java.io.IOException](
+      KafkaCodec.decodeBatches(withSection(plain, bos.toByteArray, 1)))
+    assert(e.getMessage.contains(s"${KafkaCompress.MaxOut}-byte cap"), e.getMessage)
   }
 
+  test("codec: lengths past the bytes left fail typed, not as allocations") {
+    val plain = KafkaCodec.encodeBatch(0L, 0L, Seq((null, "x".getBytes(UTF_8))))
+    // one record whose key length claims Int.MaxValue bytes
+    val r = new KafkaCodec.Writer
+    r.int8(0).varlong(0L).varint(0).varint(Int.MaxValue)
+    val rec = r.result()
+    val w = new KafkaCodec.Writer
+    w.varint(rec.length).raw(rec)
+    val e = intercept[java.io.IOException](
+      KafkaCodec.decodeBatches(withSection(plain, w.result(), 0)))
+    assert(e.getMessage.contains("key length"), e.getMessage)
+    // a record count far past the records section
+    val many = plain.clone()
+    ByteBuffer.wrap(many).putInt(57, Int.MaxValue)
+    val e2 = intercept[java.io.IOException](KafkaCodec.decodeBatches(fixCrc(many)))
+    assert(e2.getMessage.contains("record count"), e2.getMessage)
+  }
+
+  /** A raw snappy block in a one-chunk xerial frame (Kafka's snappy framing). */
+  private def xerial(block: Array[Byte]): Array[Byte] =
+    ByteBuffer.allocate(20 + block.length)
+      .put(Array[Byte](0x82.toByte, 'S', 'N', 'A', 'P', 'P', 'Y', 0))
+      .putInt(1).putInt(1) // version, compatible version
+      .putInt(block.length).put(block)
+      .array()
+
   test("snappy raw block: golden vectors — literals, copy1 overlap, copy2") {
-    import graft.sources.KafkaCompress.SnappyRaw
+    import graft.sources.KafkaCompress.decompress
     // "abcdabcdabcd": varint len 12; literal "abcd" (tag (4-1)<<2=0x0C);
     // copy1 len 8 offset 4 (tag ((8-4)<<2)|1 = 0x11, offset byte 0x04) —
     // offset < length exercises the overlapping repeat-copy
     val v1 = Array[Byte](0x0C, 0x0C, 'a', 'b', 'c', 'd', 0x11, 0x04)
-    assert(new String(SnappyRaw.uncompress(v1, 0, v1.length), UTF_8) == "abcdabcdabcd")
+    assert(new String(decompress(2, xerial(v1)), UTF_8) == "abcdabcdabcd")
     // "xyxyxy": varint 6; literal "xy" (0x04); copy2 len 4 offset 2
     // (tag ((4-1)<<2)|2 = 0x0E, offset LE 02 00)
     val v2 = Array[Byte](0x06, 0x04, 'x', 'y', 0x0E, 0x02, 0x00)
-    assert(new String(SnappyRaw.uncompress(v2, 0, v2.length), UTF_8) == "xyxyxy")
-    // literal-only encoder output decodes to itself (incl. the >60-byte
-    // extended-length literal form)
+    assert(new String(decompress(2, xerial(v2)), UTF_8) == "xyxyxy")
+    // a literal-only block decodes to itself, in the >60-byte
+    // extended-length literal form: varint 500 (F4 03), tag 63<<2 with
+    // length-1 = 499 in 4 LE bytes
     val long = ("graft" * 100).getBytes(UTF_8)
-    val enc = SnappyRaw.compressLiteral(long)
-    assert(SnappyRaw.uncompress(enc, 0, enc.length).toSeq == long.toSeq)
+    val enc = Array[Byte](0xF4.toByte, 0x03, 0xFC.toByte, 0xF3.toByte, 0x01, 0, 0) ++ long
+    assert(decompress(2, xerial(enc)).toSeq == long.toSeq)
     // declared-length mismatch is loud
     val bad = Array[Byte](0x05, 0x0C, 'a', 'b', 'c', 'd')
-    intercept[java.io.IOException](SnappyRaw.uncompress(bad, 0, bad.length))
+    intercept[java.io.IOException](decompress(2, xerial(bad)))
+  }
+
+  test("codec: snappy framing is bounded before the library sizes its buffers") {
+    import graft.sources.KafkaCompress.decompress
+    def err(in: Array[Byte]): String =
+      intercept[java.io.IOException](decompress(2, in)).getMessage
+    // not xerial-framed: a raw block declaring 1 GiB (varint 80 80 80 80 04)
+    assert(err(Array[Byte](0x80.toByte, 0x80.toByte, 0x80.toByte, 0x80.toByte,
+      0x04, 0x00)).contains("magic"))
+    // a chunk whose block declares 400 MiB (varint 80 80 80 C8 01)
+    assert(err(xerial(Array[Byte](0x80.toByte, 0x80.toByte, 0x80.toByte,
+      0xC8.toByte, 0x01, 0x00, 'a'))).contains("cap"))
+    // a chunk running past the end, and a cut chunk-length field
+    val one = xerial(Array[Byte](0x01, 0x00, 'a'))
+    assert(new String(decompress(2, one), UTF_8) == "a")
+    assert(err(one.dropRight(1)).contains("chunk length"))
+    assert(err(one ++ Array[Byte](0, 0)).contains("chunk length"))
   }
 
   test("lz4 block + frame: golden vector, stored blocks, checksums verify") {
-    import graft.sources.KafkaCompress.{Lz4Block, Lz4Frame, XxHash32}
+    import graft.sources.KafkaCompress.{compress, decompress}
+    val xxHash32 = net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
+    // the xxHash spec vector: the checksum function the frame below uses
+    assert(xxHash32.hash("abc".getBytes(UTF_8), 0, 3, 0) == 0x32D153FF)
     // block: seq1 = lit "abcd" + match len 8 off 4 (token 0x44);
     // seq2 = last sequence, literals-only "ZZZZZ" (token 0x50)
     val blk = Array[Byte](0x44, 'a', 'b', 'c', 'd', 0x04, 0x00,
       0x50, 'Z', 'Z', 'Z', 'Z', 'Z')
-    assert(new String(Lz4Block.decompress(blk, 0, blk.length, 1 << 16), UTF_8)
-      == "abcdabcdabcdZZZZZ")
-    // frame round-trip through the stored-block encoder (content checksum on)
+    // frame round-trip through the encoder (content checksum on)
     val payload = ("kafka lz4 frame " * 50).getBytes(UTF_8)
-    val framed = Lz4Frame.compress(payload)
-    assert(Lz4Frame.decompress(framed).toSeq == payload.toSeq)
+    val framed = compress(3, payload)
+    assert(decompress(3, framed).toSeq == payload.toSeq)
     // hand-build a frame whose single block is lz4-COMPRESSED (the golden
     // block above) so the compressed-block path runs under the frame parser
     val content = "abcdabcdabcdZZZZZ".getBytes(UTF_8)
     val hdr = Array[Byte](((1 << 6) | 0x04).toByte, (4 << 4).toByte)
-    val hc = ((XxHash32.hash(hdr, 0, 2, 0) >> 8) & 0xFF).toByte
+    val hc = ((xxHash32.hash(hdr, 0, 2, 0) >> 8) & 0xFF).toByte
     val bb = java.nio.ByteBuffer.allocate(4 + 2 + 1 + 4 + blk.length + 4 + 4)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb.putInt(0x184D2204).put(hdr).put(hc)
       .putInt(blk.length) // high bit clear = compressed block
       .put(blk)
       .putInt(0) // EndMark
-      .putInt(XxHash32.hash(content, 0, content.length, 0))
+      .putInt(xxHash32.hash(content, 0, content.length, 0))
     val gold = bb.array()
-    assert(Lz4Frame.decompress(gold).toSeq == content.toSeq)
+    assert(decompress(3, gold).toSeq == content.toSeq)
     // corrupt the content checksum → loud
     val corrupt = gold.clone(); corrupt(gold.length - 1) = (corrupt(gold.length - 1) ^ 1).toByte
-    intercept[java.io.IOException](Lz4Frame.decompress(corrupt))
+    intercept[java.io.IOException](decompress(3, corrupt))
     // corrupt the header checksum byte → loud
     val badHc = gold.clone(); badHc(6) = (badHc(6) ^ 1).toByte
-    intercept[java.io.IOException](Lz4Frame.decompress(badHc))
+    intercept[java.io.IOException](decompress(3, badHc))
   }
 
   test("round-11 encoders: snappy/lz4 round-trip AND compress repetitive payloads") {
-    import graft.sources.KafkaCompress.{Lz4Block, Lz4Frame, SnappyRaw, SnappyStream}
-    // repetitive payload: the match-emitting encoders must SHRINK it
+    import graft.sources.KafkaCompress.{compress, decompress}
+    // repetitive payload: the encoders must SHRINK it
     val rep = ("the quick brown fox " * 400).getBytes(UTF_8) // 8000 bytes
-    val sEnc = SnappyRaw.compress(rep)
-    assert(SnappyRaw.uncompress(sEnc, 0, sEnc.length).toSeq == rep.toSeq)
-    assert(sEnc.length < rep.length / 4,
-      s"snappy: ${sEnc.length} bytes for ${rep.length} repetitive input")
-    val sStream = SnappyStream.compress(rep)
-    assert(SnappyStream.decompress(sStream).toSeq == rep.toSeq)
-    assert(sStream.length < rep.length / 4)
-    val lEnc = Lz4Block.compress(rep)
-    assert(Lz4Block.decompress(lEnc, 0, lEnc.length, rep.length).toSeq == rep.toSeq)
-    assert(lEnc.length < rep.length / 4,
-      s"lz4: ${lEnc.length} bytes for ${rep.length} repetitive input")
-    val lFrame = Lz4Frame.compress(rep)
-    assert(Lz4Frame.decompress(lFrame).toSeq == rep.toSeq)
-    assert(lFrame.length < rep.length / 4)
+    val sStream = compress(2, rep)
+    assert(decompress(2, sStream).toSeq == rep.toSeq)
+    assert(sStream.length < rep.length / 4,
+      s"snappy: ${sStream.length} bytes for ${rep.length} repetitive input")
+    val lFrame = compress(3, rep)
+    assert(decompress(3, lFrame).toSeq == rep.toSeq)
+    assert(lFrame.length < rep.length / 4,
+      s"lz4: ${lFrame.length} bytes for ${rep.length} repetitive input")
     // varied shapes round-trip bit-exactly: empty, tiny, just-under/over
     // the end-of-block guards, incompressible (xorshift bytes), >1 chunk
     val rnd = {
@@ -223,27 +267,26 @@ class KafkaSpec extends AnyFunSuite {
       ("z" * 11).getBytes(UTF_8), ("z" * 13).getBytes(UTF_8),
       ("block" * 70).getBytes(UTF_8), rnd.take(64), rnd.take(65536 + 17), rnd)
     shapes.foreach { p =>
-      val se = SnappyRaw.compress(p)
-      assert(SnappyRaw.uncompress(se, 0, se.length).toSeq == p.toSeq,
-        s"snappy raw round-trip failed at len ${p.length}")
-      val ss = SnappyStream.compress(p)
-      assert(SnappyStream.decompress(ss).toSeq == p.toSeq,
+      val ss = compress(2, p)
+      assert(decompress(2, ss).toSeq == p.toSeq,
         s"snappy stream round-trip failed at len ${p.length}")
-      val le = Lz4Block.compress(p)
-      assert(Lz4Block.decompress(le, 0, le.length, math.max(p.length, 1)).toSeq == p.toSeq,
-        s"lz4 block round-trip failed at len ${p.length}")
-      val lf = Lz4Frame.compress(p)
-      assert(Lz4Frame.decompress(lf).toSeq == p.toSeq,
+      val lf = compress(3, p)
+      assert(decompress(3, lf).toSeq == p.toSeq,
         s"lz4 frame round-trip failed at len ${p.length}")
       // incompressible input must never blow up in size beyond the
-      // formats' bounded framing overhead
-      assert(se.length <= p.length + p.length / 6 + 16)
-      assert(le.length <= p.length + p.length / 255 + 16)
+      // formats' bounded framing overhead. The bounds are per raw block;
+      // the framing adds, for xerial, a 16-byte header and a 4-byte length
+      // per 32 KB chunk, and for the lz4 frame, a 7-byte header, a 4-byte
+      // size per 64 KB block, the EndMark and the content checksum
+      val snappyFraming = 16 + 4 * ((p.length + 32767) / 32768)
+      val lz4Framing = 15 + 4 * ((p.length + 65535) / 65536)
+      assert(ss.length - snappyFraming <= p.length + p.length / 6 + 16)
+      assert(lf.length - lz4Framing <= p.length + p.length / 255 + 16)
     }
   }
 
   test("codec: snappy- and lz4-compressed record batches decode pure-JVM") {
-    import graft.sources.KafkaCompress.{SnappyStream, Lz4Frame}
+    import graft.sources.KafkaCompress.decompress
     val recs = Seq[(Array[Byte], Array[Byte])](
       ("k".getBytes(UTF_8), "snap-or-lz4".getBytes(UTF_8)),
       (null, ("y" * 2000).getBytes(UTF_8)))
@@ -260,12 +303,19 @@ class KafkaSpec extends AnyFunSuite {
     val sSection = java.util.Arrays.copyOfRange(sBatch, 61, sBatch.length)
     assert((sSection(0) & 0xFF) == 0x82 && new String(
       java.util.Arrays.copyOfRange(sSection, 1, 7), UTF_8) == "SNAPPY")
-    assert(SnappyStream.decompress(sSection).nonEmpty)
+    assert(decompress(2, sSection).nonEmpty)
     val lBatch = KafkaCodec.encodeBatch(0L, 0L, recs, codec = 3)
     val lSection = java.util.Arrays.copyOfRange(lBatch, 61, lBatch.length)
     assert(java.nio.ByteBuffer.wrap(lSection)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt == 0x184D2204)
-    assert(Lz4Frame.decompress(lSection).nonEmpty)
+    assert(decompress(3, lSection).nonEmpty)
+    // the frame declares independent blocks (FLG bit 0x20), so lz4-java's
+    // own frame reader, which refuses linked-block frames, reads it too
+    assert((lSection(4) & 0x20) != 0, f"lz4 FLG ${lSection(4)}%02x")
+    val lz4In = new net.jpountz.lz4.LZ4FrameInputStream(
+      new java.io.ByteArrayInputStream(lSection))
+    try assert(lz4In.readAllBytes().toSeq == decompress(3, lSection).toSeq)
+    finally lz4In.close()
   }
 
   test("codec: zstd-compressed record batches round-trip pure-JVM (round 12)") {
@@ -283,7 +333,7 @@ class KafkaSpec extends AnyFunSuite {
     assert(java.nio.ByteBuffer.wrap(section)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt == 0xFD2FB528)
     assert(section.length < 2000, s"4k of 'z' should compress: ${section.length}")
-    assert(graft.sources.Zstd.decompress(section).nonEmpty)
+    assert(KafkaCompress.decompress(4, section).nonEmpty)
   }
 
   test("sink compression option: name mapping and zstd produce round-trip") {

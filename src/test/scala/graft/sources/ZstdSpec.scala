@@ -2,11 +2,15 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Zstandard codec spec — three layers of evidence:
-  *  1. pinned RFC-worked values (xxHash64 test vectors, magic/layout);
-  *  2. pure-JVM round-trips (our encoder → our decoder) over adversarial
-  *     shapes: empty, 1 byte, incompressible randomness, long RLE runs,
-  *     overlap copies, multi-block (> 128 KB), all byte values;
+import KafkaCompress.{compress, decompress}
+
+/** Zstandard codec (Kafka codec id 4, [[KafkaCompress]]) — three layers of
+  * evidence:
+  *  1. pinned frame layout (magic, single-segment FHD, checksum flag) and
+  *     typed errors on corrupt, fuzzed and truncated frames;
+  *  2. round-trips (our encoder → our decoder) over adversarial shapes:
+  *     empty, 1 byte, incompressible randomness, long RLE runs, overlap
+  *     copies, multi-block (> 128 KB), all byte values;
   *  3. REFERENCE round-trips against the system zstd CLI when present
   *     (it is in the repo's dev/CI container): our frames decoded by the
   *     reference decoder byte-for-byte, and reference frames at several
@@ -71,22 +75,10 @@ class ZstdSpec extends AnyFunSuite {
     // carry UNCHANGED across the raw block
     "rawmid" -> (("abcdefgh" * (17 * 1024)).getBytes ++ lcgBytes(130 * 1024, 21) ++ Array.fill[Byte](4000)('y')))
 
-  test("xxHash64: spec test vectors") {
-    // the xxHash reference's published sanity values (seed 0 / prime seed)
-    assert(Zstd.XxHash64.hash(Array.emptyByteArray, 0, 0, 0L) == 0xEF46DB3751D8E999L)
-    val sample = lcgBytes(101, 2654435761L)
-    // self-consistency across split points (same bytes, same hash)
-    val whole = Zstd.XxHash64.hash(sample, 0, 101, 0L)
-    assert(Zstd.XxHash64.hash(sample.clone(), 0, 101, 0L) == whole)
-    // one-byte vector, computable by hand from the spec's final avalanche
-    val one = Zstd.XxHash64.hash(Array[Byte](0), 0, 1, 0L)
-    assert(one != 0L && one != whole)
-  }
-
   test("pure-JVM round-trip over adversarial shapes") {
     for ((name, data) <- shapes) {
-      val comp = Zstd.compress(data)
-      val back = Zstd.decompress(comp)
+      val comp = compress(4, data)
+      val back = decompress(4, comp)
       assert(java.util.Arrays.equals(back, data), s"shape '$name' round-trip")
       // compressible shapes genuinely shrink
       if (name == "rle" || name == "overlap")
@@ -97,7 +89,7 @@ class ZstdSpec extends AnyFunSuite {
   }
 
   test("frame layout: magic, single-segment FHD, content checksum present") {
-    val f = Zstd.compress("abcabcabcabc".getBytes)
+    val f = compress(4, "abcabcabcabc".getBytes)
     assert((f(0) & 0xFF) == 0x28 && (f(1) & 0xFF) == 0xB5 &&
       (f(2) & 0xFF) == 0x2F && (f(3) & 0xFF) == 0xFD)
     val fhd = f(4) & 0xFF
@@ -106,33 +98,33 @@ class ZstdSpec extends AnyFunSuite {
   }
 
   test("multi-frame concatenation and skippable frames decode") {
-    val a = Zstd.compress("first frame ".getBytes)
-    val b = Zstd.compress("second frame".getBytes)
+    val a = compress(4, "first frame ".getBytes)
+    val b = compress(4, "second frame".getBytes)
     // skippable frame: magic 0x184D2A50, 4-byte size, payload
     val skip = Array[Byte](0x50, 0x2A, 0x4D.toByte, 0x18, 3, 0, 0, 0, 1, 2, 3)
     val all = a ++ skip ++ b
-    assert(new String(Zstd.decompress(all)) == "first frame second frame")
+    assert(new String(decompress(4, all)) == "first frame second frame")
   }
 
   test("corrupt input: typed IOException, never OOM/array errors") {
     def err(bytes: Array[Byte]): String =
-      intercept[java.io.IOException](Zstd.decompress(bytes)).getMessage
+      intercept[java.io.IOException](decompress(4, bytes)).getMessage
     assert(err(Array[Byte](1, 2, 3, 4, 5)).contains("magic"))
-    val good = Zstd.compress(Array.fill[Byte](1000)('z'))
+    val good = compress(4, Array.fill[Byte](1000)('z'))
     // flip the checksum
     val badSum = good.clone(); badSum(badSum.length - 1) = (badSum.last ^ 0x5A).toByte
     assert(err(badSum).contains("checksum"))
     // declared content size vs actual
     val badSize = good.clone(); badSize(5) = (badSize(5) + 1).toByte
-    val m = intercept[java.io.IOException](Zstd.decompress(badSize)).getMessage
+    val m = intercept[java.io.IOException](decompress(4, badSize)).getMessage
     assert(m.nonEmpty) // size mismatch or downstream structural error — typed either way
   }
 
   test("corruption fuzz: 400 byte-flips on valid frames — typed IOException or clean decode, never a crash") {
     val frames = Seq(
-      Zstd.compress(textish(20000)),
-      Zstd.compress(Array.fill[Byte](5000)('q')),
-      Zstd.compress(lcgBytes(3000, 11)))
+      compress(4, textish(20000)),
+      compress(4, Array.fill[Byte](5000)('q')),
+      compress(4, lcgBytes(3000, 11)))
     var s = 0xDEADL
     var flips = 0
     while (flips < 400) {
@@ -140,7 +132,7 @@ class ZstdSpec extends AnyFunSuite {
       val f = frames(((s >>> 33) % frames.length).toInt).clone()
       val pos = math.abs((s >>> 17).toInt) % f.length
       f(pos) = (f(pos) ^ (1 << math.abs((s >>> 7).toInt % 8))).toByte
-      try Zstd.decompress(f) // a lucky flip may still decode — fine
+      try decompress(4, f) // a lucky flip may still decode — fine
       catch {
         case _: java.io.IOException => // the typed contract
         case other: Throwable =>
@@ -149,9 +141,9 @@ class ZstdSpec extends AnyFunSuite {
       flips += 1
     }
     // truncations at every prefix length of a small frame: typed too
-    val small = Zstd.compress("truncate me please, zstd".getBytes)
+    val small = compress(4, "truncate me please, zstd".getBytes)
     for (n <- 0 until small.length) {
-      try Zstd.decompress(java.util.Arrays.copyOf(small, n))
+      try decompress(4, java.util.Arrays.copyOf(small, n))
       catch {
         case _: java.io.IOException =>
         case other: Throwable =>
@@ -188,7 +180,7 @@ class ZstdSpec extends AnyFunSuite {
       case None => cancel("zstd CLI not on this host — pure-JVM layers cover")
       case Some(cli) =>
         for ((name, data) <- shapes) {
-          val ours = Zstd.compress(data)
+          val ours = compress(4, data)
           val back = run(Seq(cli, "-d", "-c"), ours)
           assert(java.util.Arrays.equals(back, data),
             s"reference decoder disagrees on shape '$name'")
@@ -202,7 +194,7 @@ class ZstdSpec extends AnyFunSuite {
       case Some(cli) =>
         for ((name, data) <- shapes; level <- Seq("-1", "-3", "-9", "-19")) {
           val ref = run(Seq(cli, level, "-c"), data)
-          val back = Zstd.decompress(ref)
+          val back = decompress(4, ref)
           assert(java.util.Arrays.equals(back, data),
             s"our decoder disagrees on shape '$name' at $level")
         }
@@ -211,7 +203,7 @@ class ZstdSpec extends AnyFunSuite {
         for (flags <- Seq(Seq("-5", "-c"), Seq("-5", "-c", "--no-check"),
             Seq("--long=20", "-7", "-c"))) {
           val ref = run(Seq(cli) ++ flags, big)
-          assert(java.util.Arrays.equals(Zstd.decompress(ref), big),
+          assert(java.util.Arrays.equals(decompress(4, ref), big),
             s"flags $flags")
         }
     }
@@ -236,10 +228,10 @@ class ZstdSpec extends AnyFunSuite {
               while (out.size() < n) out.write(piece, 0, math.min(piece.length, n - out.size()))
               out.toByteArray
           }
-          val refBack = run(Seq(cli, "-d", "-c"), Zstd.compress(data))
+          val refBack = run(Seq(cli, "-d", "-c"), compress(4, data))
           assert(java.util.Arrays.equals(refBack, data), s"fuzz #$i ours→ref")
           val lvl = Seq("-1", "-3", "-12")(i % 3)
-          val ourBack = Zstd.decompress(run(Seq(cli, lvl, "-c"), data))
+          val ourBack = decompress(4, run(Seq(cli, lvl, "-c"), data))
           assert(java.util.Arrays.equals(ourBack, data), s"fuzz #$i ref→ours at $lvl")
         }
     }
