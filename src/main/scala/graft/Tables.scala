@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loader for the driver-provided parquet tables (TESTDATA.md).
@@ -19,17 +20,21 @@ object Tables {
   // fixed cost (one ~30-100 ms job per call, guide §7.3) paid hundreds of
   // times across a corpus run. The memo holds only the lazy DataFrame
   // (schema + file index); every action still scans the parquet files, so
-  // this caches PLANNING, never results. Sessions are WEAK keys (ADVICE
-  // r16): a stopped session's plans become collectable instead of pinned
-  // for the JVM lifetime in multi-session suites. [[clear]] drops every
+  // this caches PLANNING, never results. The memoized DataFrames point
+  // back at their session, so each session's entry is dropped when its
+  // application ends (`SparkSession.stop`). [[clear]] drops every
   // entry for callers that regenerate a parquet dir in-process (the
   // memoized file index would otherwise serve stale/deleted file lists).
-  private val memo = new java.util.WeakHashMap[
+  private val memo = new java.util.HashMap[
     SparkSession, scala.collection.concurrent.TrieMap[(String, String), DataFrame]]()
 
   /** Drop all memoized plans (use when a table directory is rewritten
     * within one JVM — the cached file index does not watch the FS). */
   def clear(): Unit = memo.synchronized(memo.clear())
+
+  /** Whether [[apply]] holds memoized plans for `spark`. */
+  private[graft] def memoizes(spark: SparkSession): Boolean =
+    memo.synchronized(memo.containsKey(spark))
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val perSession = memo.synchronized {
@@ -37,6 +42,10 @@ object Tables {
       if (m == null) {
         m = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
         memo.put(spark, m)
+        spark.sparkContext.addSparkListener(new SparkListener {
+          override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+            memo.synchronized(memo.remove(spark))
+        })
       }
       m
     }

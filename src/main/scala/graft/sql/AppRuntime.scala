@@ -91,9 +91,13 @@ object AppRuntime {
 
   /** Build source DataFrames for every WITH('type'='source') stream; a
     * source with `'on.error'='stream'` additionally binds its `!Name`
-    * fault stream (raw unparseable lines).
+    * fault stream (raw unparseable lines). The session's streaming
+    * queries commit local checkpoints through
+    * [[graft.streaming.LocalCheckpointFiles]] unless it names another
+    * checkpoint file manager.
     */
-  def bindSources(spark: SparkSession, spec: GraftApp.AppSpec): Map[String, DataFrame] =
+  def bindSources(spark: SparkSession, spec: GraftApp.AppSpec): Map[String, DataFrame] = {
+    graft.streaming.LocalCheckpointFiles.install(spark)
     spec.streams.toSeq.flatMap {
       case (name, sd) if sd.options.get("type").contains("source") =>
         val fmt = sd.options.getOrElse("format",
@@ -150,6 +154,7 @@ object AppRuntime {
         }
       case _ => Nil
     }.toMap
+  }
 
   /** Bind JDBC-backed tables (jdbc_table.rs:18): `CREATE TABLE T (…) WITH
     * ('store'='jdbc', 'url'=…, 'dbtable'=…)` loads its initial contents

@@ -611,12 +611,7 @@ object PatternCompiler {
     val aggStepsSeq = aggItems.toSeq.map { case (gi, its) => (s"__ids_$gi", its: Seq[(String, String)]) }
     val livePlans = pruneUnreferenced(joins.values.toSeq,
       items.map(_._1) ++ whereRw.toSeq)
-    // same cost gate as compileVariant (A/B round 17): fused wins once it
-    // replaces enough lookups (permute4 −35%, multigroup −26%, nested2
-    // −17%) and loses below the threshold (permute +33%, sql_star +63%,
-    // both 2 lookups)
-    val fuseScore = livePlans.size + 2 * aggStepsSeq.size
-    var out = (if (fuseScore >= 5)
+    var out = (if (fuseJoinBack(livePlans.size, aggStepsSeq.size))
         fusedJoinBack(base, ordered, livePlans, aggStepsSeq)
       else None)
       .getOrElse {
@@ -735,6 +730,18 @@ object PatternCompiler {
         "\\b" + java.util.regex.Pattern.quote(j.name) + "\\b")
       texts.exists(t => p.matcher(t).find())
     }
+
+  /** Cost gate of [[fusedJoinBack]], shared by compileVariant and
+    * compileMulti (round 17, A/B-measured): the fused pivot's extra
+    * matches-sized exchange only pays once it replaces enough lookups —
+    * each aggregated step replaces its own explode+agg+join-back (~two
+    * joins' worth). Below the threshold the per-name broadcast joins win:
+    * q_cep_mr (2 lookups) fused +28%, permute and sql_star (2 lookups
+    * each) +33% and +63%; above it fused wins: q_cep_mr_skip_to (1+2
+    * steps) −34%, permute4 −35%, multigroup −26%, nested2 −17%.
+    */
+  private def fuseJoinBack(liveLookups: Int, aggSteps: Int): Boolean =
+    liveLookups + 2 * aggSteps >= 5
 
   /** Fused join-back (round 17, guide §2.4): resolve EVERY scalar alias
     * lookup and EVERY collection aggregate in ONE pass over `ordered`
@@ -2172,15 +2179,7 @@ object PatternCompiler {
     val aggStepsSeq = aggItems.toSeq.map { case (i, its) => (s"__ids_$i", its: Seq[(String, String)]) }
     val livePlans = pruneUnreferenced(joins.values.toSeq,
       items.map(_._1) ++ whereRw.toSeq)
-    // Cost gate (round 17, A/B-measured): the fused pivot's extra
-    // matches-sized exchange only pays once it replaces enough lookups —
-    // each aggregated step replaces its own explode+agg+join-back (~two
-    // joins' worth). Below the threshold the per-name broadcast joins win
-    // (q_cep_mr 2 lookups: fused +28%; q_cep_mr_skip_to 1+2 steps: fused
-    // −34%). Multi-variant queries take the fused path unconditionally in
-    // compileMulti.
-    val fuseScore = livePlans.size + 2 * aggStepsSeq.size
-    var out = (if (fuseScore >= 5)
+    var out = (if (fuseJoinBack(livePlans.size, aggStepsSeq.size))
         fusedJoinBack(base, ordered, livePlans, aggStepsSeq)
       else None)
       .getOrElse {

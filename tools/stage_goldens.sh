@@ -15,7 +15,16 @@ for sf in 0.001 0.01 0.1; do
   rm -rf "$out"
   SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify /root/testdata/sf$sf $out $QUERIES"
   for q in ${QUERIES//,/ }; do
-    cp "$out/$q"/part-*.parquet "src/test/resources/golden/${q}_sf${sf}.parquet"
+    # Verify writes one part file per task: merge them, in part order,
+    # into the single fixture file the oracle reads
+    python3 - "$out/$q" "src/test/resources/golden/${q}_sf${sf}.parquet" <<'PY'
+import glob, sys
+import pyarrow as pa, pyarrow.parquet as pq
+parts = sorted(glob.glob(f"{sys.argv[1]}/part-*.parquet"))
+if not parts:
+    sys.exit(f"no part files in {sys.argv[1]}")
+pq.write_table(pa.concat_tables([pq.read_table(p) for p in parts]), sys.argv[2])
+PY
   done
 done
 ls -la src/test/resources/golden/
