@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.streaming.{Cep, CepEvent, MidGuard, PatternSpec, Step}
@@ -174,12 +174,14 @@ object PatternCompiler {
       * quantifier (one preferred parse per start). */
     def skipMachine: Boolean =
       skipPast || skipTo.isDefined || (skipNext && reluctantAny)
-    /** `resume` argument for the skip kernels (None = past last row;
-      * (-1, _) = next row; (i, isFirst) = at variable i's first/last row). */
-    def skipResume(steps: Seq[PatternStep]): Option[(Int, Boolean)] =
-      skipTo.map { case (isFirst, alias) =>
+    /** Match selection of the detect kernels: the EVERY enumeration, or
+      * the skip machine resuming past the last row (None), at the next row
+      * ((-1, _)), or at variable i's first/last row ((i, isFirst)). */
+    def selection(steps: Seq[PatternStep]): Cep.Selection =
+      if (!skipMachine) Cep.Selection.Every
+      else Cep.Selection.Skip(skipTo.map { case (isFirst, alias) =>
         (steps.indexWhere(_.aliases.contains(alias)), isFirst)
-      }.orElse(if (skipNext && reluctantAny) Some((-1, true)) else None)
+      }.orElse(if (skipNext && reluctantAny) Some((-1, true)) else None))
   }
 
   def compile(spark: SparkSession, q: PatternQuery, env: Map[String, DataFrame],
@@ -194,7 +196,7 @@ object PatternCompiler {
       "SKIP PAST LAST ROW and SKIP TO FIRST/LAST are mutually exclusive")
     // conflicting resume modes never silently resolve (ADVICE r14): before
     // this gate, spelling both SKIP PAST LAST ROW and SKIP TO NEXT ROW
-    // with a reluctant quantifier handed skipResume the NEXT ROW value,
+    // with a reluctant quantifier handed the selection the NEXT ROW value,
     // silently overriding PAST LAST ROW
     if (q.skipNext && (q.skipPast || q.skipTo.isDefined)) throw GraftApp.SqlError(
       "SKIP TO NEXT ROW conflicts with " +
@@ -1096,7 +1098,7 @@ object PatternCompiler {
         // AND / zero-min patterns: matches carry a variant tag; emission
         // resolves classifiers per (variant, step) and mr_match_number is
         // a per-key ordinal SHARED across variants, which needs the
-        // WITHIN-timed kernel (Cep.detectStreamMultiAllRows)
+        // WITHIN-timed kernel (Cep.detectStream with allRows)
         if (q.withinUs.isEmpty) throw GraftApp.SqlError(
           "streaming EMIT ALL ROWS over AND / zero-min patterns needs a " +
             "time WITHIN (state hygiene for the shared match counter)")
@@ -1137,7 +1139,7 @@ object PatternCompiler {
         "per-key physical order to offset into; use cross-step references " +
         "(B.x > A.x) or FIRST/LAST measures instead")
     // trailing NOT … FOR d runs via the absent-chain state
-    // (Cep.detectStreamWithTrailingAbsents); mid-chain NOT runs as
+    // (Cep.detectStream with trailing guards); mid-chain NOT runs as
     // MidGuard kills inside the NFA itself (poisoned-partial discipline)
     val streams = q.allAlts.map(_.stream).distinct
     val tagged = streams.map { s =>
@@ -1154,8 +1156,8 @@ object PatternCompiler {
         "PARTITION BY <attr> to shard the pattern per key")
     val keyCol = q.partitionBy.map(a => expr(a).cast("string")).getOrElse(lit("app"))
     val evs = tagged.withColumn("__key", keyCol)
-    if (q.variants.size == 1) streamVariant(spark, q, q.variants.head, evs)
-    else streamMulti(spark, q, evs)
+    if (q.variants.size == 1) streamVariant(q, q.variants.head, evs)
+    else streamMulti(q, evs)
   }
 
   /** Select/WHERE rewriter for ONE streaming variant: step refs resolve
@@ -1249,9 +1251,8 @@ object PatternCompiler {
     else array(svalReg.keys.toSeq.map(c =>
       overrides.getOrElse(c, col(c)).cast("string")): _*)
 
-  private def streamVariant(spark: SparkSession, q: PatternQuery,
-                            steps0: Seq[PatternStep], evs: DataFrame): DataFrame = {
-    import spark.implicits._
+  private def streamVariant(q: PatternQuery, steps0: Seq[PatternStep],
+                            evs: DataFrame): DataFrame = {
     val colTypes: Map[String, String] =
       evs.schema.fields.map(f => f.name.toLowerCase -> f.dataType.sql).toMap
     // min=0 no-step branch: NULL-pad refs to this variant's omitted aliases
@@ -1326,17 +1327,6 @@ object PatternCompiler {
       else concat(nb.bits +: absentFlags.map(f =>
         when(f, lit("1")).otherwise(lit("0"))): _*)
 
-    val cepIn = evs.withColumn("__bits", bitsCol).select(
-        col("__key").as("key"),
-        unix_micros(col("ts")).as("tsUs"),
-        // same-timestamp tie-break within a micro-batch (event ids are not
-        // resolved from in streaming — slots carry the data)
-        xxhash64(evs.columns.map(col).toSeq: _*).as("eventId"),
-        col("__bits").as("etype"),
-        lit(0.0).as("value"),
-        nb.valsCol.as("vals"),
-        svalsCol.as("svals"))
-      .as[CepEvent]
     // absent guards: one flag bit each, positionally after the step bits.
     // Mid-chain guards (an event between the anchoring step and the next)
     // kill partials inside the NFA; trailing guards route through the
@@ -1358,50 +1348,8 @@ object PatternCompiler {
       withinUs = q.withinUs, withinEvents = q.withinEvents,
       midGuards = midGuards)
     requireBoundedState(spec)
-    // watermark delay = the user's declared disorder tolerance (ALLOW
-    // LATENESS); 0 = strict in-order contract, tightest state bound
-    val lateness = q.lateness.getOrElse("0 seconds")
-    if (q.lateness.isDefined && guards.isEmpty && q.withinUs.isEmpty)
-      // the plain NoTimeout NFA has no watermark: nothing is ever dropped
-      // for lateness (every event reaches the NFA in arrival order), so the
-      // clause cannot take effect — surface that instead of silently
-      // accepting a no-op knob
-      ScaleWarnings.warn(s"pattern INTO '${q.target}': ALLOW LATENESS has no " +
-        "effect without WITHIN or a trailing NOT … FOR guard — the plan has " +
-        "no event-time watermark, so no event is ever dropped as late; add " +
-        "WITHIN <d> to bound state and activate the lateness contract")
-    var out =
-      (if (q.allRows && q.allRowsUnmatched)
-         // WITH UNMATCHED ROWS (round 13): wraps the match machine with
-         // watermark-proved row eligibility — unmatched rows emit as
-         // matchSeq = -1 pseudo-matches once the watermark passes
-         // row_ts + WITHIN (see Cep.detectStreamWithUnmatched); the inner
-         // machine is the skip selector or the plain EVERY NFA as the
-         // query's skip mode dictates
-         Cep.detectStreamWithUnmatched(cepIn, spec, lateness,
-           useSkip = q.skipMachine,
-           resume = q.skipResume(steps),
-           retainMatchSeq = true)
-       else if (q.skipMachine)
-         // greedy non-overlapping selection with WITHIN-bounded candidate
-         // holding (compile gates require the WITHIN); retain the per-key
-         // match counter when EMIT ALL ROWS reads mr_match_number. SKIP TO
-         // FIRST|LAST resumes at the named variable's row (same machine,
-         // partial-overlap resume)
-         Cep.detectStreamSkipPast(cepIn, spec, lateness,
-           retainMatchSeq = q.allRows,
-           resume = q.skipResume(steps))
-       else if (guards.nonEmpty)
-         Cep.detectStreamWithTrailingAbsents(cepIn, spec, guards, lateness,
-           retainMatchSeq = q.allRows)
-       else if (q.withinUs.isDefined)
-         // WITHIN bounds state-store growth only if idle keys are purged:
-         // route through the event-time-timeout NFA (the reference's
-         // TimerWheel, timers/timer_wheel.rs) instead of NoTimeout
-         Cep.detectStreamWithTimeout(cepIn, spec, lateness,
-           retainMatchSeq = q.allRows)
-       else Cep.detectStream(cepIn, spec))
-        .toDF()
+    var out = streamMatches(q, evs, bitsCol, nb.valsCol, svalsCol, Seq(spec),
+      q.selection(steps), guards)
     // WHERE applies to MATCHES; an unmatched pseudo-row (matchSeq = -1)
     // bypasses it — its measures are NULL by contract, not filterable
     whereRw.foreach(w => out = out.filter(
@@ -1609,9 +1557,55 @@ object PatternCompiler {
       Seq(col("mr_match_number"), col("mr_classifier")): _*)
   }
 
+  /** The streaming kernel call of both lowerings: `evs` encoded as
+    * [[CepEvent]]s (step/guard flag bits, comparand `vals`, select slots
+    * `svals`), then [[Cep.detectStream]] over the query's specs (one, or a
+    * multi-variant family) in the query's [[Cep.StreamMode]]. A watermark
+    * exists only when something has a
+    * deadline — a WITHIN, or a trailing NOT … FOR guard: WITHIN bounds
+    * state-store growth only if idle keys are purged, so it routes through
+    * the event-time timeout. Its delay is the user's declared disorder
+    * tolerance (ALLOW LATENESS); 0 = strict in-order contract, tightest
+    * state bound. WITH UNMATCHED ROWS (round 13) wraps the match machine
+    * with watermark-proved row eligibility: unmatched rows emit as
+    * matchSeq = -1 pseudo-matches once the watermark passes row_ts +
+    * WITHIN. `allRows` retains the per-key match counter that EMIT ALL
+    * ROWS reads as mr_match_number.
+    */
+  private def streamMatches(q: PatternQuery, evs: DataFrame, bits: Column,
+                            vals: Column, svals: Column, specs: Seq[PatternSpec],
+                            selection: Cep.Selection,
+                            guards: Seq[Cep.TrailingAbsent]): DataFrame = {
+    val cepIn = evs.withColumn("__bits", bits).select(
+        col("__key").as("key"),
+        unix_micros(col("ts")).as("tsUs"),
+        // same-timestamp tie-break within a micro-batch (event ids are not
+        // resolved from in streaming — slots carry the data)
+        xxhash64(evs.columns.map(col).toSeq: _*).as("eventId"),
+        col("__bits").as("etype"),
+        lit(0.0).as("value"),
+        vals.as("vals"),
+        svals.as("svals"))
+      .as[CepEvent](Encoders.product[CepEvent])
+    val timed = q.withinUs.isDefined || guards.nonEmpty
+    if (q.lateness.isDefined && !timed)
+      // without a deadline the NoTimeout NFA has no watermark: nothing is
+      // ever dropped for lateness (every event reaches the NFA in arrival
+      // order), so the clause cannot take effect — surface that instead of
+      // silently accepting a no-op knob
+      ScaleWarnings.warn(s"pattern INTO '${q.target}': ALLOW LATENESS has no " +
+        "effect without WITHIN or a trailing NOT … FOR guard — the plan has " +
+        "no event-time watermark, so no event is ever dropped as late; add " +
+        "WITHIN <d> to bound state and activate the lateness contract")
+    Cep.detectStream(cepIn, specs, Cep.StreamMode(
+      lateness = if (timed) Some(q.lateness.getOrElse("0 seconds")) else None,
+      selection = selection, guards = guards,
+      unmatched = q.allRows && q.allRowsUnmatched, allRows = q.allRows))
+  }
+
   /** Streaming multi-variant lowering: ONE kernel holds every variant's
-    * NFA state per key ([[Cep.detectStreamMulti]] /
-    * [[Cep.detectStreamMultiWithTimeout]]) — the stream shuffles once per
+    * NFA state per key ([[streamMatches]] over every variant's spec) —
+    * the stream shuffles once per
     * micro-batch instead of once per variant, and the state store keeps
     * one entry per key instead of V. Select items and WHERE resolve
     * per-variant (step positions differ), combined as a CASE on the
@@ -1620,9 +1614,7 @@ object PatternCompiler {
     * never reach here — parseSteps rejects them with AND / zero-min
     * elements.
     */
-  private def streamMulti(spark: SparkSession, q: PatternQuery,
-                          evs: DataFrame): DataFrame = {
-    import spark.implicits._
+  private def streamMulti(q: PatternQuery, evs: DataFrame): DataFrame = {
     val colTypes: Map[String, String] =
       evs.schema.fields.map(f => f.name.toLowerCase -> f.dataType.sql).toMap
     val mb = buildMulti(q, c => colTypes.get(c.toLowerCase))
@@ -1657,29 +1649,8 @@ object PatternCompiler {
       if (q.variants.exists(_.exists(_.alts.size > 1))) slot("__stream")
     }
 
-    val cepIn = evs.withColumn("__bits", mb.bitsCol).select(
-        col("__key").as("key"),
-        unix_micros(col("ts")).as("tsUs"),
-        xxhash64(evs.columns.map(col).toSeq: _*).as("eventId"),
-        col("__bits").as("etype"),
-        lit(0.0).as("value"),
-        mb.valsCol.as("vals"),
-        svalsColumn(svalReg).as("svals"))
-      .as[CepEvent]
-    val lateness = q.lateness.getOrElse("0 seconds")
-    if (q.lateness.isDefined && q.withinUs.isEmpty)
-      ScaleWarnings.warn(s"pattern INTO '${q.target}': ALLOW LATENESS has no " +
-        "effect without WITHIN — the plan has no event-time watermark, so " +
-        "no event is ever dropped as late; add WITHIN <d> to bound state " +
-        "and activate the lateness contract")
-    var out =
-      (if (q.allRows)
-         // shared per-key match ordinal across variants (mr_match_number)
-         Cep.detectStreamMultiAllRows(cepIn, mb.specs, lateness)
-       else if (q.withinUs.isDefined)
-         Cep.detectStreamMultiWithTimeout(cepIn, mb.specs, lateness)
-       else Cep.detectStreamMulti(cepIn, mb.specs))
-        .toDF()
+    var out = streamMatches(q, evs, mb.bitsCol, mb.valsCol, svalsColumn(svalReg),
+      mb.specs, Cep.Selection.Every, Nil)
     whereRw.foreach(w => out = out.filter(expr(w)))
     if (q.allRows)
       return emitAllRowsStreamMulti(q, out, evs, colTypes, slot, items)
@@ -2002,7 +1973,7 @@ object PatternCompiler {
       withinUs = q.withinUs, withinEvents = q.withinEvents)
     requireBoundedState(spec)
     // SKIP PAST LAST ROW / SKIP TO FIRST|LAST: the incremental
-    // consume-on-match NFA ([[Cep.detectSkipPast]]) emits the greedy
+    // consume-on-match NFA ([[Cep.detect]] with a skip selection) emits the greedy
     // leftmost non-overlapping subset directly — the full EVERY match set
     // is never materialized (a k-row monotone streak costs O(k), not the
     // O(k²) collected events of enumerate-then-filter), and every
@@ -2014,8 +1985,7 @@ object PatternCompiler {
     // (small), registered for end-of-run unpersist like `ordered`
     val matches = {
       val m =
-        if (q.skipMachine) Cep.detectSkipPast(cepIn, spec, q.skipResume(steps)).toDF()
-        else Cep.detect(cepIn, spec).toDF()
+        Cep.detect(cepIn, spec, selection = q.selection(steps)).toDF()
       val p = m.persist()
       onPersist(p)
       p
@@ -2233,7 +2203,7 @@ object PatternCompiler {
     // guards (unbounded absence is undecidable), optional mid-chain (the
     // next step's match bounds the gap; FOR additionally bounds it in
     // time). Result-level form of the absent pattern — the streaming flush
-    // variant is Cep.detectStreamWithTrailingAbsents.
+    // variant is Cep.detectStream with trailing guards.
     q.absents.foreach { a =>
       val ab0 = ordered.filter(col("__stream") === a.alt.stream)
       val ab = a.alt.pred.map(p => ab0.filter(expr(p))).getOrElse(ab0)

@@ -57,8 +57,8 @@ final case class CepMatch(key: String, startUs: Long, endUs: Long,
 /** A [[CepMatch]] tagged with the index of the variant NFA that emitted it
   * (multi-variant patterns: AND arrival orderings, min=0 presence pairs).
   * `matchSeq`: per-key ordinal SHARED across variants, assigned in
-  * conclusive-emission order by [[Cep.detectStreamMultiAllRows]] (streaming
-  * EMIT ALL ROWS' mr_match_number); 0 from the other detect kernels.
+  * conclusive-emission order by [[Cep.detectStream]] with `allRows`
+  * (streaming EMIT ALL ROWS' mr_match_number); 0 otherwise.
   */
 final case class VariantMatch(variant: Int, key: String, startUs: Long,
                               endUs: Long, steps: Seq[Collected],
@@ -156,7 +156,7 @@ object Step {
   * first event, so the next step's own event never kills its match).
   * `forUs` additionally narrows the guard to d after the anchor's last
   * collected event. Evaluated inside [[Cep.runNfa]], so it works on batch
-  * and on every streaming detect variant, cross-micro-batch.
+  * and in every [[Cep.detectStream]] mode, cross-micro-batch.
   */
 final case class MidGuard(afterStep: Int, pred: CepEvent => Boolean,
                           forUs: Option[Long] = None) extends Serializable
@@ -171,7 +171,7 @@ final case class MidGuard(afterStep: Int, pred: CepEvent => Boolean,
   * skipping on a hot key grows state linearly with the stream). On
   * overflow the earliest-seeded partials are kept, the newest dropped;
   * every drop is counted in [[NfaState.dropped]], surfaced through the
-  * optional drop accumulator on detect/detectStream, and logged as a
+  * optional drop accumulator on [[Cep.detect]], and logged as a
   * warning — matches past the cap are LOST, so a nonzero count means
   * raise maxPartials, narrow step predicates, or add WITHIN bounds.
   */
@@ -368,6 +368,14 @@ object Cep {
   private implicit val matchEnc: Encoder[CepMatch] = Encoders.product[CepMatch]
   private implicit val stateEnc: Encoder[NfaState] = Encoders.product[NfaState]
   private implicit val evEnc: Encoder[CepEvent] = Encoders.product[CepEvent]
+  private implicit lazy val variantEnc: Encoder[VariantMatch] = Encoders.product[VariantMatch]
+  private implicit lazy val multiEnc: Encoder[MultiNfaState] = Encoders.product[MultiNfaState]
+  private implicit lazy val multiSeqEnc: Encoder[MultiSeqState] = Encoders.product[MultiSeqState]
+  private implicit lazy val skipEnc: Encoder[SkipNfaState] = Encoders.product[SkipNfaState]
+  private implicit lazy val unmatchedEnc: Encoder[UnmatchedNfaState] =
+    Encoders.product[UnmatchedNfaState]
+  private implicit lazy val absentEnc: Encoder[AbsentChainState] =
+    Encoders.product[AbsentChainState]
 
 
   /** Shared member-completion advance for [[runNfa]] and
@@ -380,8 +388,8 @@ object Cep {
     * (iteration gate, maxIters-bounded loop-back, −1-marked history
     * records on nested specs), then plain advance/complete. */
   private def advanceMember(step: Step, p: Partial, coll2: Seq[Seq[CepEvent]],
-      needHist: Boolean, hasInner: Boolean, nSteps: Int,
-      push: Partial => Unit, complete: Seq[Int] => Unit): Unit = {
+      pass: NfaPass, push: Partial => Unit, complete: Seq[Int] => Unit): Unit = {
+    import pass.{hasInner, needHist, nSteps}
     def outerAdvance(pp: Partial): Unit = {
       if (step.loopBack >= 0) {
         val itersDone = pp.iters + 1
@@ -428,36 +436,73 @@ object Cep {
     } else outerAdvance(p)
   }
 
-  /** Core incremental NFA step: feed ordered events through the state. */
-  def runNfa(events: Seq[CepEvent], init: NfaState, spec: PatternSpec)
-      : (Seq[CepMatch], NfaState) = {
-    val nSteps = spec.steps.size
-    val needHist = needIterHist(spec)
-    val hasLoops = specHasLoops(spec)
-    val hasInner = specHasInner(spec)
+  /** One pass of [[runNfa]] or [[runNfaSkipPast]] over `spec`: the
+    * spec's loop/nested-group flags, the per-event steps both machines
+    * share, and the count of partials dropped past maxPartials.
+    */
+  private final class NfaPass(spec: PatternSpec) {
+    val nSteps: Int = spec.steps.size
+    val needHist: Boolean = needIterHist(spec)
+    val hasLoops: Boolean = specHasLoops(spec)
+    val hasInner: Boolean = specHasInner(spec)
     val mergedBase: Partial => Seq[Int] =
       if (!hasInner) (p: Partial) => p.iterBase
       else (p: Partial) => Seq.tabulate(nSteps)(i =>
         if (spec.steps(i).inner) innerBaseAt(p, i) else baseAt(p, i))
-    val zmTails: Map[Int, Int] =
+    private val zmTails: Map[Int, Int] =
       if (hasInner) zeroMinTails(spec) else Map.empty
+    var dropped = 0L
+
+    def seed(e: CepEvent, seq: Long): Partial =
+      Partial(0, e.tsUs, seq, Vector.fill(nSteps)(Vector.empty))
+    /** WITHIN expiry by event time and/or event count. */
+    def expire(ps: Vector[Partial], e: CepEvent, seq: Long): Vector[Partial] = {
+      var live = ps
+      spec.withinUs.foreach(w => live = live.filter(p => e.tsUs - p.startUs <= w))
+      spec.withinEvents.foreach(n => live = live.filter(p => seq - p.startSeq <= n))
+      live
+    }
+    /** `p0`, plus — zero-min inner group — the same partial standing at
+      * the tail (the zero-iteration derivation, flagged true) when no
+      * inner event has been consumed this outer iteration; derived, never
+      * stored (see [[zeroMinTails]]). */
+    def forks(p0: Partial): Seq[(Partial, Boolean)] = zmTails.get(p0.stepIdx) match {
+      case Some(t) if p0.innerIters == 0 &&
+          p0.collected(p0.stepIdx).size == innerBaseAt(p0, p0.stepIdx) =>
+        Seq((p0, false), (p0.copy(stepIdx = t), true))
+      case _ => Seq((p0, false))
+    }
+    /** Dedup the next partial set, then keep the earliest-seeded
+      * maxPartials, counting the rest as dropped. */
+    def trim(next: Vector[Partial]): Vector[Partial] = {
+      val t = distinctPartials(next, hasLoops, hasInner)
+      if (t.size > spec.maxPartials) dropped += t.size - spec.maxPartials
+      t.take(spec.maxPartials)
+    }
+    def warnDropped(events: Seq[CepEvent]): Unit =
+      if (dropped > 0)
+        log.warn(s"CEP NFA dropped $dropped in-flight partial match(es) past " +
+          s"maxPartials=${spec.maxPartials} for key " +
+          s"'${events.headOption.map(_.key).getOrElse("?")}' — matches past the " +
+          "cap are lost; raise PatternSpec.maxPartials, narrow step " +
+          "predicates, or add a WITHIN bound")
+  }
+
+  /** Core incremental NFA step: feed ordered events through the state. */
+  def runNfa(events: Seq[CepEvent], init: NfaState, spec: PatternSpec)
+      : (Seq[CepMatch], NfaState) = {
+    val pass = new NfaPass(spec)
+    import pass.{hasInner, mergedBase}
     var partials: Vector[Partial] = init.partials.toVector
     var done = init.done
     var seq = init.seq
     var mseq = init.matchSeq
-    var droppedRun = 0L
     val matches = Seq.newBuilder[CepMatch]
 
     events.foreach { e =>
       seq += 1
       if (!(done && !spec.every)) {
-        // WITHIN expiry by event time and/or event count
-        spec.withinUs.foreach { w =>
-          partials = partials.filter(p => e.tsUs - p.startUs <= w)
-        }
-        spec.withinEvents.foreach { n =>
-          partials = partials.filter(p => seq - p.startSeq <= n)
-        }
+        partials = pass.expire(partials, e, seq)
         // Without EVERY the pattern is single-instance: only the FIRST
         // complete sequence ever emits, and no new instance is seeded while
         // one is in flight (pattern_every_overlapping_test.rs:194-285 —
@@ -467,7 +512,7 @@ object Cep {
         // including the sliding count-quantifier form its :1203 test marks
         // as intended-but-unimplemented.
         val seedNow = spec.every || partials.isEmpty
-        val seed = Partial(0, e.tsUs, seq, Vector.fill(nSteps)(Vector.empty))
+        val seed = pass.seed(e, seq)
         val next = Vector.newBuilder[Partial]
         var matchedNow = false
         // nested groups only: two parses differing ONLY in inner-iteration
@@ -480,16 +525,7 @@ object Cep {
           else null
 
         (if (seedNow) partials :+ seed else partials).foreach { p0 =>
-          // zero-min inner group: also evaluate this event at the tail (the
-          // zero-iteration derivation) when no inner event has been
-          // consumed this outer iteration — derived, never stored
-          val forks: Seq[(Partial, Boolean)] = zmTails.get(p0.stepIdx) match {
-            case Some(t) if p0.innerIters == 0 &&
-                p0.collected(p0.stepIdx).size == innerBaseAt(p0, p0.stepIdx) =>
-              Seq((p0, false), (p0.copy(stepIdx = t), true))
-            case _ => Seq((p0, false))
-          }
-          forks.foreach { case (p, isTwin) =>
+          pass.forks(p0).foreach { case (p, isTwin) =>
           val step = spec.steps(p.stepIdx)
           // mid-chain NOT: this event kills every partial whose guarded gap
           // is open (anchor collected, next step empty) — unless the step
@@ -531,8 +567,7 @@ object Cep {
                 }
                 matchedNow = true
               }
-              advanceMember(step, p, coll2, needHist, hasInner, nSteps,
-                next += _, _ => emitHere())
+              advanceMember(step, p, coll2, pass, next += _, _ => emitHere())
             }
           } else if (!spec.strict && !guardKill) {
             // relaxed PATTERN: non-matching events are skipped; seeds that
@@ -545,19 +580,12 @@ object Cep {
           }
         }
 
-        val trimmed = distinctPartials(next.result(), hasLoops, hasInner)
-        if (trimmed.size > spec.maxPartials)
-          droppedRun += trimmed.size - spec.maxPartials
-        partials = trimmed.take(spec.maxPartials)
+        partials = pass.trim(next.result())
         if (matchedNow && !spec.every) { done = true; partials = Vector.empty }
       }
     }
-    if (droppedRun > 0)
-      log.warn(s"CEP NFA dropped $droppedRun in-flight partial match(es) past " +
-        s"maxPartials=${spec.maxPartials} for key '${events.head.key}' — " +
-        "matches past the cap are lost; raise PatternSpec.maxPartials, " +
-        "narrow step predicates, or add a WITHIN bound")
-    (matches.result(), NfaState(partials, done, seq, init.dropped + droppedRun, mseq))
+    pass.warnDropped(events)
+    (matches.result(), NfaState(partials, done, seq, init.dropped + pass.dropped, mseq))
   }
 
   /** One held candidate of the streaming SKIP PAST LAST ROW machine: a
@@ -576,9 +604,8 @@ object Cep {
     * reluctant INNER group, where the parse preference is the stream's
     * first structural divergence (leave-inner beats continue-inner; a
     * longer stream beats a strict prefix under the greedy outer group).
-    * Streaming state schema v15 (the field defaults Nil, so pre-round-16
-    * checkpoints of OTHER specs restore cleanly; inner-reluctant specs
-    * are new surface with no prior checkpoints).
+    * The field shipped under state schema v14 ([[StateSchema.Version]]),
+    * which was not bumped for it.
     */
   final case class SkipCand(m: CepMatch, startSeq: Long, endSeq: Long,
                             counts: Seq[Long], groupIters: Long = -1L,
@@ -595,8 +622,8 @@ object Cep {
   /** Incremental `AFTER MATCH SKIP PAST LAST ROW` / `SKIP TO FIRST|LAST`
     * (greedy leftmost non-overlapping selection) for a STRICT single-chain
     * pattern — batch AND streaming run this same machine (batch through
-    * [[detectSkipPast]], which folds it over the key's history and
-    * end-of-input-flushes; streaming through [[detectStreamSkipPast]]'s
+    * [[detect]] with [[Selection.Skip]], which folds it over the key's
+    * history and end-of-input-flushes; streaming through [[detectStream]]'s
     * watermark timeout). Enumeration is EVERY-mode (each event seeds;
     * stay/advance both explored), but instead of emitting on completion, a
     * completed match becomes a held CANDIDATE — at most ONE per live start
@@ -631,22 +658,13 @@ object Cep {
   def runNfaSkipPast(events: Seq[CepEvent], init: SkipNfaState,
                      spec: PatternSpec,
                      resume: Option[(Int, Boolean)] = None): (Seq[CepMatch], SkipNfaState) = {
-    val nSteps = spec.steps.size
-    val needHist = needIterHist(spec)
-    val hasLoops = specHasLoops(spec)
-    val hasInner = specHasInner(spec)
-    val mergedBase: Partial => Seq[Int] =
-      if (!hasInner) (p: Partial) => p.iterBase
-      else (p: Partial) => Seq.tabulate(nSteps)(i =>
-        if (spec.steps(i).inner) innerBaseAt(p, i) else baseAt(p, i))
+    val pass = new NfaPass(spec)
     // reluctant loop group with a VARIABLE-count member: candidates carry
     // the parse's total iteration count for the two-level preference
     // (fewest iterations, then fewest member rows). Derived from the
     // iterHist record count — needIterHist is true for exactly these
     // specs, one record of `width` ints per completed iteration (the
     // compile gates keep this to a single, non-nested loop group)
-    val zmTails: Map[Int, Int] =
-      if (hasInner) zeroMinTails(spec) else Map.empty
     val relVarWidth: Int =
       if (spec.steps.exists(s => s.looped && s.reluctant && s.min != s.max))
         spec.steps.find(_.loopBack >= 0).map(_.loopBack + 1).getOrElse(0)
@@ -656,7 +674,6 @@ object Cep {
     var mseq = init.nfa.matchSeq
     var pos = init.pos
     var cands: Vector[SkipCand] = init.cands.toVector
-    var droppedRun = 0L
     val out = Seq.newBuilder[CepMatch]
 
     val rel = spec.steps.map(_.reluctant)
@@ -683,25 +700,12 @@ object Cep {
 
     events.foreach { e =>
       seq += 1
-      spec.withinUs.foreach { w =>
-        partials = partials.filter(p => e.tsUs - p.startUs <= w)
-      }
-      spec.withinEvents.foreach { n =>
-        partials = partials.filter(p => seq - p.startSeq <= n)
-      }
-      val seed = Partial(0, e.tsUs, seq, Vector.fill(nSteps)(Vector.empty))
+      partials = pass.expire(partials, e, seq)
       val next = Vector.newBuilder[Partial]
-      (partials :+ seed).foreach { p0 =>
-        // zero-min inner group: derived tail fork (see zeroMinTails)
-        val forks: Seq[Partial] = zmTails.get(p0.stepIdx) match {
-          case Some(t) if p0.innerIters == 0 &&
-              p0.collected(p0.stepIdx).size == innerBaseAt(p0, p0.stepIdx) =>
-            Seq(p0, p0.copy(stepIdx = t))
-          case _ => Seq(p0)
-        }
-        forks.foreach { p =>
+      (partials :+ pass.seed(e, seq)).foreach { p0 =>
+        pass.forks(p0).foreach { case (p, _) =>
         val step = spec.steps(p.stepIdx)
-        if (stepOk(step, e, p, mergedBase)) {
+        if (stepOk(step, e, p, pass.mergedBase)) {
           val coll2 = p.collected.updated(p.stepIdx, p.collected(p.stepIdx) :+ e)
           val cnt = coll2(p.stepIdx).size
           val cntIter = cnt - gateBaseAt(step, p, p.stepIdx)
@@ -716,26 +720,19 @@ object Cep {
               hist = if (irel.isDefined) hist else Nil))
             // same loop-group bookkeeping as [[runNfa]], terminal
             // completions become held candidates
-            advanceMember(step, p, coll2, needHist, hasInner, nSteps,
-              next += _, candHere)
+            advanceMember(step, p, coll2, pass, next += _, candHere)
           }
         }
         // strict contiguity: a mismatching event kills the instance
         }
       }
-      val trimmed = distinctPartials(next.result(), hasLoops, hasInner)
-      if (trimmed.size > spec.maxPartials)
-        droppedRun += trimmed.size - spec.maxPartials
-      partials = trimmed.take(spec.maxPartials)
+      partials = pass.trim(next.result())
       flush()
     }
-    if (droppedRun > 0)
-      log.warn(s"CEP skip-past NFA dropped $droppedRun in-flight partial " +
-        s"match(es) past maxPartials=${spec.maxPartials} for key " +
-        s"'${events.headOption.map(_.key).getOrElse("?")}'")
+    pass.warnDropped(events)
     (out.result(),
       SkipNfaState(NfaState(partials, done = false, seq,
-        init.nfa.dropped + droppedRun, mseq), pos, cands))
+        init.nfa.dropped + pass.dropped, mseq), pos, cands))
   }
 
   /** Parse preference at a fixed start: quantifiers resolve left to right,
@@ -902,46 +899,53 @@ object Cep {
       groupStart, irel)
   }
 
-  /** Batch `AFTER MATCH SKIP PAST LAST ROW` / `SKIP TO FIRST|LAST`
-    * detection: per-key sort, one [[runNfaSkipPast]] pass, then a final
-    * flush with every partial dead — end of input is a watermark past
-    * every deadline, so every held candidate is conclusive. This replaces
-    * the enumerate-all-EVERY-matches-then-filter shape: the machine holds
-    * O(live starts) candidates and consumes on match, so a key's cost is
-    * linear in its history even on adversarial monotone streaks where the
-    * EVERY match set is quadratic.
+  /** Match selection of [[detect]] and [[detectStream]]. */
+  sealed trait Selection extends Serializable
+  object Selection {
+    /** Every match the [[runNfa]] enumeration emits (only the first one
+      * without [[PatternSpec.every]]). */
+    case object Every extends Selection
+    /** Greedy leftmost selection on the [[runNfaSkipPast]] machine
+      * (`AFTER MATCH SKIP PAST LAST ROW`, `SKIP TO FIRST|LAST`, reluctant
+      * `SKIP TO NEXT ROW`); `resume` as there. */
+    final case class Skip(resume: Option[(Int, Boolean)]) extends Selection
+  }
+
+  private def emptySkip: SkipNfaState = SkipNfaState(NfaState(Nil, done = false), 0L, Nil)
+
+  /** Batch detection: per-key sort, then one pass of the selection's
+    * machine. Under [[Selection.Skip]] the end of input is a watermark
+    * past every deadline, so a final flush with every partial dead makes
+    * every held candidate conclusive; the machine holds O(live starts)
+    * candidates and consumes on match, so a key's cost is linear in its
+    * history even on monotone streaks where the EVERY match set is
+    * quadratic. `dropCounter` aggregates partials discarded past
+    * maxPartials across keys — zero means no match was lost to the state
+    * cap.
     */
-  def detectSkipPast(ds: Dataset[CepEvent], spec: PatternSpec,
-                     resume: Option[(Int, Boolean)] = None): Dataset[CepMatch] =
+  def detect(ds: Dataset[CepEvent], spec: PatternSpec,
+             dropCounter: Option[org.apache.spark.util.LongAccumulator] = None,
+             selection: Selection = Selection.Every): Dataset[CepMatch] =
     // COLUMN-keyed grouping, not groupByKey(_.key) (round 16): the lambda
     // key adds a per-row AppendColumns closure and an exchange that can
     // never match existing partitioning; the column key drops the closure
     // and reuses an upstream hash exchange on `key` (the MR compiler's
     // persisted ordering) when one exists. Same groups, same matches.
-    ds.groupBy(org.apache.spark.sql.functions.col("key")).as[String, CepEvent]
+    ds.groupBy(col("key")).as[String, CepEvent]
       .flatMapGroups { (_: String, it: Iterator[CepEvent]) =>
       val evs = it.toSeq.sortBy(e => (e.tsUs, e.eventId))
-      val (out, st) = runNfaSkipPast(evs,
-        SkipNfaState(NfaState(Nil, done = false), 0L, Nil), spec, resume)
-      val (tail, _) = skipFlush(st.copy(nfa = st.nfa.copy(partials = Nil)),
-        resume, spec.steps.map(_.reluctant), relVarGroupStart(spec),
-        innerRelCfg(spec))
-      (out ++ tail).iterator
-    }
-
-  /** Batch detection: per-key sort then one NFA pass. `dropCounter`
-    * aggregates partials discarded past maxPartials across keys — zero
-    * means no match was lost to the state cap.
-    */
-  def detect(ds: Dataset[CepEvent], spec: PatternSpec,
-             dropCounter: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[CepMatch] =
-    // column-keyed grouping — see detectSkipPast
-    ds.groupBy(org.apache.spark.sql.functions.col("key")).as[String, CepEvent]
-      .flatMapGroups { (_: String, it: Iterator[CepEvent]) =>
-      val (out, st) = runNfa(it.toSeq.sortBy(e => (e.tsUs, e.eventId)),
-        NfaState(Nil, done = false), spec)
-      dropCounter.foreach(_.add(st.dropped))
+      val (out, dropped) = selection match {
+        case Selection.Every =>
+          val (o, st) = runNfa(evs, NfaState(Nil, done = false), spec)
+          (o, st.dropped)
+        case Selection.Skip(resume) =>
+          val (o, st) = runNfaSkipPast(evs, emptySkip, spec, resume)
+          val (tail, _) = skipFlush(st.copy(nfa = st.nfa.copy(partials = Nil)),
+            resume, spec.steps.map(_.reluctant), relVarGroupStart(spec),
+            innerRelCfg(spec))
+          (o ++ tail, st.nfa.dropped)
+      }
+      dropCounter.foreach(_.add(dropped))
       out.iterator
     }
 
@@ -954,21 +958,18 @@ object Cep {
     * [[runNfa]] it would run under [[detect]], so match sets are
     * bit-for-bit those of V separate passes.
     */
-  def detectMulti(ds: Dataset[CepEvent], specs: Seq[PatternSpec],
-                  dropCounter: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[VariantMatch] = {
-    implicit val vmEnc: Encoder[VariantMatch] = Encoders.product[VariantMatch]
-    // column-keyed grouping — see detectSkipPast
-    ds.groupBy(org.apache.spark.sql.functions.col("key")).as[String, CepEvent]
+  def detectMulti(ds: Dataset[CepEvent], specs: Seq[PatternSpec]): Dataset[VariantMatch] =
+    // column-keyed grouping — see detect
+    ds.groupBy(col("key")).as[String, CepEvent]
       .flatMapGroups { (_: String, it: Iterator[CepEvent]) =>
       val evs = it.toSeq.sortBy(e => (e.tsUs, e.eventId))
       specs.iterator.zipWithIndex.flatMap { case (spec, vi) =>
-        val (out, st) = runNfa(evs, NfaState(Nil, done = false), spec)
-        dropCounter.foreach(_.add(st.dropped))
-        out.map(m => VariantMatch(vi, m.key, m.startUs, m.endUs, m.steps))
+        runNfa(evs, NfaState(Nil, done = false), spec)._1.map(variantMatch(vi, _))
       }
     }
-  }
+
+  private def variantMatch(vi: Int, m: CepMatch, matchSeq: Long = 0L): VariantMatch =
+    VariantMatch(vi, m.key, m.startUs, m.endUs, m.steps, matchSeq)
 
   /** Batch detection with BOUNDED per-key memory — the hot-key scale path.
     * [[detect]] materializes each key's full history (`it.toSeq`) before
@@ -983,9 +984,7 @@ object Cep {
     * batch≡streaming property CepSpec pins).
     */
   def detectSorted(ds: Dataset[CepEvent], spec: PatternSpec,
-                   chunkSize: Int = 1 << 16,
-                   dropCounter: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[CepMatch] = {
+                   chunkSize: Int = 1 << 16): Dataset[CepMatch] = {
     val sorted = ds.repartition(col("key"))
       .sortWithinPartitions(col("key"), col("tsUs"), col("eventId"))
       .as[CepEvent](evEnc)
@@ -1009,349 +1008,14 @@ object Cep {
               buf.result()
             }
           }
-          var lastDropped = 0L
           chunks.flatMap { evs =>
             val (out, st2) = runNfa(evs, st, spec)
             st = st2
-            dropCounter.foreach(_.add(st2.dropped - lastDropped))
-            lastDropped = st2.dropped
             out
           }
         }
       }.flatten
     }(matchEnc)
-  }
-
-  /** Streaming detection: NFA state persists across micro-batches; events
-    * are ordered within each batch (cross-batch order = source contract).
-    * `dropCounter` adds each batch's newly dropped partials (state carries
-    * the cumulative count).
-    */
-  def detectStream(ds: Dataset[CepEvent], spec: PatternSpec,
-                   dropCounter: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[CepMatch] =
-    ds.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (_: String, it: Iterator[CepEvent], state: GroupState[NfaState]) =>
-        val init = state.getOption.getOrElse(NfaState(Nil, done = false))
-        val (out, next) = runNfa(
-          it.toSeq.sortBy(e => (e.tsUs, e.eventId)), init, spec)
-        dropCounter.foreach(_.add(next.dropped - init.dropped))
-        state.update(next)
-        out.iterator
-    }
-
-  /** Streaming detection for a FAMILY of pattern variants: ONE state-store
-    * entry per key holds every variant's [[NfaState]], and each micro-batch
-    * shuffles the stream once instead of once per variant (the streaming
-    * face of [[detectMulti]]). Each variant folds the identical
-    * [[runNfa]] it would fold under [[detectStream]].
-    */
-  def detectStreamMulti(ds: Dataset[CepEvent], specs: Seq[PatternSpec],
-                        dropCounter: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[VariantMatch] = {
-    implicit val vmEnc: Encoder[VariantMatch] = Encoders.product[VariantMatch]
-    implicit val msEnc: Encoder[MultiNfaState] = Encoders.product[MultiNfaState]
-    ds.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (_: String, it: Iterator[CepEvent], state: GroupState[MultiNfaState]) =>
-        val evs = it.toSeq.sortBy(e => (e.tsUs, e.eventId))
-        val init = state.getOption.getOrElse(
-          MultiNfaState(specs.map(_ => NfaState(Nil, done = false))))
-        val results = specs.zip(init.states).zipWithIndex.map { case ((spec, s0), vi) =>
-          val (out, s1) = runNfa(evs, s0, spec)
-          dropCounter.foreach(_.add(s1.dropped - s0.dropped))
-          (out.map(m => VariantMatch(vi, m.key, m.startUs, m.endUs, m.steps)), s1)
-        }
-        state.update(MultiNfaState(results.map(_._2)))
-        results.iterator.flatMap(_._1)
-    }
-  }
-
-  /** [[detectStreamMulti]] with the [[detectStreamWithTimeout]] hygiene:
-    * the event-time watermark purges partials past their WITHIN deadline
-    * across ALL variants, and a key drained in every variant drops its
-    * state entry entirely. All variants carry the query's single WITHIN.
-    */
-  def detectStreamMultiWithTimeout(ds: Dataset[CepEvent], specs: Seq[PatternSpec],
-                                   watermarkDelay: String): Dataset[VariantMatch] = {
-    val withinUs = specs.head.withinUs.getOrElse(
-      throw new IllegalArgumentException("detectStreamMultiWithTimeout requires withinUs"))
-    implicit val vmEnc: Encoder[VariantMatch] = Encoders.product[VariantMatch]
-    implicit val msEnc: Encoder[MultiNfaState] = Encoders.product[MultiNfaState]
-    val withTime = ds.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[CepEvent](evEnc)
-    def emptyStates = MultiNfaState(specs.map(_ => NfaState(Nil, done = false)))
-    def latched(sts: Seq[NfaState]): Boolean =
-      sts.zip(specs).exists { case (s, spec) => s.done && !spec.every }
-    def schedule(state: GroupState[MultiNfaState], sts: Seq[NfaState]): Unit = {
-      val deadlines = sts.flatMap(_.partials.map(p => ceilMs(p.startUs + withinUs)))
-      if (deadlines.nonEmpty) state.setTimeoutTimestamp(
-        math.max(deadlines.max, state.getCurrentWatermarkMs() + 1))
-    }
-    withTime.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: String, it: Iterator[CepEvent], state: GroupState[MultiNfaState]) =>
-        if (state.hasTimedOut) {
-          // same keep-at-equality rule as the single-spec kernel
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val sts = state.getOption.getOrElse(emptyStates).states.map(s =>
-            s.copy(partials = s.partials.filter(p => p.startUs + withinUs >= wmUs)))
-          if (sts.forall(_.partials.isEmpty) && !latched(sts)) state.remove()
-          else { state.update(MultiNfaState(sts)); schedule(state, sts) }
-          Iterator.empty
-        } else {
-          val evs = it.toSeq.sortBy(e => (e.tsUs, e.eventId))
-          val init = state.getOption.getOrElse(emptyStates)
-          val results = specs.zip(init.states).zipWithIndex.map { case ((spec, s0), vi) =>
-            val (out, s1) = runNfa(evs, s0, spec)
-            (out.map(m => VariantMatch(vi, m.key, m.startUs, m.endUs, m.steps)), s1)
-          }
-          val sts = results.map(_._2)
-          if (sts.forall(_.partials.isEmpty) && !latched(sts)) state.remove()
-          else { state.update(MultiNfaState(sts)); schedule(state, sts) }
-          results.iterator.flatMap(_._1)
-        }
-    }
-  }
-
-  /** State of [[detectStreamMultiAllRows]]: every variant's NFA state plus
-    * the per-key match ordinal SHARED across variants (streaming EMIT ALL
-    * ROWS' mr_match_number must number a key's matches once, not per
-    * variant — two variants' counters would collide).
-    */
-  final case class MultiSeqState(states: Seq[NfaState], shared: Long)
-
-  /** [[detectStreamMultiWithTimeout]] for the EMIT ALL ROWS lowering: the
-    * same shared-pass variant fold and watermark hygiene, plus a per-key
-    * match ordinal shared across variants — each batch's matches (all
-    * variants) sort by (endUs, startUs, variant) and number through one
-    * counter carried in [[MultiSeqState]]. Completion-order numbering,
-    * exactly like the single-chain kernel's matchSeq (batch numbers by
-    * start position instead; the orders differ only for overlapping
-    * matches). The counter latches the state shell once any match emitted
-    * (the retainMatchSeq discipline) so numbers never restart mid-stream.
-    *
-    * State bound: O(keys that ever matched) retained shells for the life
-    * of the query, a few dozen bytes each, never revisited while the key
-    * is idle (once partials drain no timeout is scheduled — there is
-    * nothing left to expire, and the shell itself must outlive any idle
-    * gap to keep mr_match_number monotonic). This is deliberate, same
-    * contract as [[detectStreamWithTimeout]]'s retainMatchSeq doc: no TTL
-    * can prove a key finished on an unbounded stream, so a deployment
-    * that cannot afford keys × ~100 B should not expose mr_match_number.
-    */
-  def detectStreamMultiAllRows(ds: Dataset[CepEvent], specs: Seq[PatternSpec],
-                               watermarkDelay: String): Dataset[VariantMatch] = {
-    val withinUs = specs.head.withinUs.getOrElse(
-      throw new IllegalArgumentException("detectStreamMultiAllRows requires withinUs"))
-    implicit val vmEnc: Encoder[VariantMatch] = Encoders.product[VariantMatch]
-    implicit val msEnc: Encoder[MultiSeqState] = Encoders.product[MultiSeqState]
-    val withTime = ds.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[CepEvent](evEnc)
-    def emptySt = MultiSeqState(specs.map(_ => NfaState(Nil, done = false)), 0L)
-    def latched(sts: Seq[NfaState]): Boolean =
-      sts.zip(specs).exists { case (s, spec) => s.done && !spec.every }
-    def schedule(state: GroupState[MultiSeqState], sts: Seq[NfaState]): Unit = {
-      val deadlines = sts.flatMap(_.partials.map(p => ceilMs(p.startUs + withinUs)))
-      if (deadlines.nonEmpty) state.setTimeoutTimestamp(
-        math.max(deadlines.max, state.getCurrentWatermarkMs() + 1))
-    }
-    withTime.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: String, it: Iterator[CepEvent], state: GroupState[MultiSeqState]) =>
-        val st = state.getOption.getOrElse(emptySt)
-        if (state.hasTimedOut) {
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val sts = st.states.map(s =>
-            s.copy(partials = s.partials.filter(p => p.startUs + withinUs >= wmUs)))
-          if (sts.forall(_.partials.isEmpty) && !latched(sts) && st.shared == 0)
-            state.remove()
-          else { state.update(MultiSeqState(sts, st.shared)); schedule(state, sts) }
-          Iterator.empty
-        } else {
-          val evs = it.toSeq.sortBy(e => (e.tsUs, e.eventId))
-          val results = specs.zip(st.states).zipWithIndex.map { case ((spec, s0), vi) =>
-            val (out, s1) = runNfa(evs, s0, spec)
-            (out.map(m => (vi, m)), s1)
-          }
-          var shared = st.shared
-          val numbered = results.flatMap(_._1)
-            .sortBy { case (vi, m) => (m.endUs, m.startUs, vi) }
-            .map { case (vi, m) =>
-              shared += 1
-              VariantMatch(vi, m.key, m.startUs, m.endUs, m.steps, shared)
-            }
-          val sts = results.map(_._2)
-          if (sts.forall(_.partials.isEmpty) && !latched(sts) && shared == 0)
-            state.remove()
-          else { state.update(MultiSeqState(sts, shared)); schedule(state, sts) }
-          numbered.iterator
-        }
-    }
-  }
-
-  /** Streaming detection with watermark-driven state hygiene: partials of
-    * idle keys are dropped once the event-time watermark passes their
-    * WITHIN deadline (GroupStateTimeout.EventTimeTimeout) — without this,
-    * a key that stops sending events retains its partial matches forever
-    * (the reference needs its TimerWheel for exactly this,
-    * timers/timer_wheel.rs). Requires withinUs; watermarkDelay bounds
-    * out-of-orderness.
-    */
-  /** `retainMatchSeq`: keep the per-key state shell after the partials
-    * drain so [[NfaState.matchSeq]] never restarts — REQUIRED when the
-    * query exposes mr_match_number (streaming EMIT ALL ROWS): a removed
-    * entry restarts the counter and a later match of the same key would
-    * re-issue an already-used number, conflating two matches' rows
-    * downstream. Costs one O(1) shell per key that ever matched (the
-    * done-latch class of retained state); queries that never read
-    * matchSeq keep the default remove-on-drain.
-    *
-    * State bound, stated explicitly: with retainMatchSeq the retained
-    * footprint is O(keys that ever matched) for the LIFE of the query —
-    * a shell is a few dozen bytes (counter + empty partial vectors), but
-    * it is never evicted, because ANY later event of that key must resume
-    * the numbering, and no TTL can prove a key is finished on an unbounded
-    * stream. At 100 TB this is the same bound as any per-key monotonic
-    * counter (e.g. Spark's own streaming dedup state without a watermark
-    * column): size it as keys × ~100 B. If a deployment can tolerate
-    * match numbers restarting for keys idle far beyond WITHIN, run the
-    * query without mr_match_number — the remove-on-drain default then
-    * bounds state by ACTIVE keys only.
-    */
-  def detectStreamWithTimeout(ds: Dataset[CepEvent], spec: PatternSpec,
-                              watermarkDelay: String,
-                              retainMatchSeq: Boolean = false): Dataset[CepMatch] = {
-    val withinUs = spec.withinUs.getOrElse(
-      throw new IllegalArgumentException("detectStreamWithTimeout requires withinUs"))
-    val withTime = ds.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[CepEvent](evEnc)
-    withTime.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: String, it: Iterator[CepEvent], state: GroupState[NfaState]) =>
-        if (state.hasTimedOut) {
-          // watermark passed the registered deadline: purge only partials
-          // that can no longer complete. A partial completes via an event
-          // at tsUs <= startUs + withinUs; events at-or-below the watermark
-          // are dropped before the NFA, so >= (keep at equality) errs on
-          // the side of keeping — the next timeout sweeps it at no cost,
-          // while dropping early can lose a deadline-exact match.
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val st = state.getOption.getOrElse(NfaState(Nil, done = false))
-          val live = st.partials.filter(p => p.startUs + withinUs >= wmUs)
-          if (live.isEmpty && !(st.done && !spec.every) &&
-              !(retainMatchSeq && st.matchSeq > 0)) state.remove()
-          else {
-            state.update(st.copy(partials = live))
-            if (live.nonEmpty) state.setTimeoutTimestamp(math.max(
-              ceilMs(live.map(p => p.startUs + withinUs).max),
-              state.getCurrentWatermarkMs() + 1))
-          }
-          Iterator.empty
-        } else {
-          val events = it.toSeq.sortBy(e => (e.tsUs, e.eventId))
-          val (out, next) = runNfa(events,
-            state.getOption.getOrElse(NfaState(Nil, done = false)), spec)
-          // drained keys drop their state entry entirely (a key whose
-          // partials all resolved must not keep an empty shell in the
-          // state store — at high key cardinality that is unbounded
-          // growth); the done-latch of every=false is the one shell kept:
-          // it enforces the once-per-key contract (a later event must NOT
-          // re-match), so it cannot expire without changing semantics —
-          // O(1) per matched key, documented in SCALE.md
-          if (next.partials.isEmpty && !(next.done && !spec.every) &&
-              !(retainMatchSeq && next.matchSeq > 0)) state.remove()
-          else {
-            state.update(next)
-            // schedule cleanup at the latest live deadline (event-time ms,
-            // rounded up; clamped above the watermark — registering
-            // at-or-below it is rejected by the state store)
-            val deadlines = next.partials.map(p => ceilMs(p.startUs + withinUs))
-            if (deadlines.nonEmpty) state.setTimeoutTimestamp(
-              math.max(deadlines.max, state.getCurrentWatermarkMs() + 1))
-          }
-          out.iterator
-        }
-    }
-  }
-
-  /** Streaming `AFTER MATCH SKIP PAST LAST ROW` detection: the
-    * [[runNfaSkipPast]] machine under event-time timeout. A candidate
-    * match is held until every partial that could produce a leftmost-er
-    * or greedier match dies — by a mismatching event (strict mode, same
-    * micro-batch) or by WITHIN expiry (the timeout sweep, which also
-    * FLUSHES newly-unblocked candidates — the reason this kernel
-    * requires a time WITHIN: a key that stops receiving events must
-    * still emit its held matches once the watermark passes the window).
-    * Emission delay is therefore bounded by the WITHIN duration.
-    */
-  /** `resume` (SKIP TO FIRST|LAST): same candidate hold, but emission
-    * resumes at the variable's row instead of past the span — a surviving
-    * candidate's emission still kills every held overlapper whose start
-    * precedes the resume row (the skipFlush pos advance), which is the
-    * partial-overlap care SKIP TO needs.
-    */
-  def detectStreamSkipPast(ds: Dataset[CepEvent], spec: PatternSpec,
-                           watermarkDelay: String,
-                           retainMatchSeq: Boolean = false,
-                           resume: Option[(Int, Boolean)] = None): Dataset[CepMatch] = {
-    val withinUs = spec.withinUs.getOrElse(
-      throw new IllegalArgumentException("detectStreamSkipPast requires withinUs"))
-    implicit val skipEnc: Encoder[SkipNfaState] = Encoders.product[SkipNfaState]
-    val withTime = ds.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[CepEvent](evEnc)
-    def schedule(state: GroupState[SkipNfaState], st: SkipNfaState): Unit = {
-      // wake at the latest live-partial deadline; held candidates with no
-      // live partials flush immediately (skipFlush), so partials are the
-      // only thing worth waiting for
-      val deadlines = st.nfa.partials.map(p => ceilMs(p.startUs + withinUs))
-      if (deadlines.nonEmpty) state.setTimeoutTimestamp(
-        math.max(deadlines.max, state.getCurrentWatermarkMs() + 1))
-    }
-    def emptySt = SkipNfaState(NfaState(Nil, done = false), 0L, Nil)
-    withTime.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: String, it: Iterator[CepEvent], state: GroupState[SkipNfaState]) =>
-        if (state.hasTimedOut) {
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val st = state.getOption.getOrElse(emptySt)
-          val (out, next) = skipPastTimeoutFlush(st, wmUs, withinUs, resume,
-            spec.steps.map(_.reluctant), relVarGroupStart(spec),
-            innerRelCfg(spec))
-          if (next.nfa.partials.isEmpty && next.cands.isEmpty &&
-              !(retainMatchSeq && next.nfa.matchSeq > 0)) {
-            // seq/pos continuity is not needed once nothing is held: a
-            // fresh entry restarts at 0 with an empty frontier, and the
-            // selection only ever compares ordinals WITHIN a lifetime
-            // (matchSeq is the exception — the retain flag keeps it)
-            state.remove()
-          } else {
-            state.update(next)
-            schedule(state, next)
-          }
-          out.iterator
-        } else {
-          val events = it.toSeq.sortBy(e => (e.tsUs, e.eventId))
-          val (out, next) = runNfaSkipPast(events,
-            state.getOption.getOrElse(emptySt), spec, resume)
-          if (next.nfa.partials.isEmpty && next.cands.isEmpty &&
-              !(retainMatchSeq && next.nfa.matchSeq > 0)) state.remove()
-          else {
-            state.update(next)
-            schedule(state, next)
-          }
-          out.iterator
-        }
-    }
   }
 
   /** One input row awaiting its unmatched-eligibility proof, and the
@@ -1362,180 +1026,18 @@ object Cep {
     * row_number ids).
     */
   final case class RowRef(tsUs: Long, eventId: Long)
-  /** State of [[detectStreamWithUnmatched]]: the inner match machine
-    * (SkipNfaState — for the plain EVERY mode only its `nfa` field is
+  /** State of the unmatched-rows mode: the inner match machine
+    * (SkipNfaState — for the EVERY selection only its `nfa` field is
     * used), the rows not yet provably unmatched, and the claimed refs of
     * matches already emitted (kept until the rows they cover expire).
     */
   final case class UnmatchedNfaState(skip: SkipNfaState, pending: Seq[CepEvent],
                                      claimed: Seq[RowRef])
 
-  /** Streaming `ALL ROWS PER MATCH WITH UNMATCHED ROWS` detection: matched
-    * rows emit through the inner machine exactly as without the clause;
-    * an UNMATCHED row is emitted as a pseudo-match (matchSeq = -1, the row
-    * alone in a "__unmatched" step) once it is PROVABLE no match will ever
-    * claim it. The proof is the WITHIN bound + the watermark: any match
-    * containing row r spans at most `within`, so it completes by an event
-    * at tsUs <= r.tsUs + within — once the watermark passes that, r's
-    * eligibility is decided (the round-12 rejection reasoned "cannot prove
-    * a row will never be claimed"; under a WITHIN it can be, which is why
-    * this kernel REQUIRES one). Emission delay for unmatched rows is
-    * therefore exactly the WITHIN duration, the same bound the held-
-    * candidate skip machine already pays.
-    *
-    * Order of operations per sweep matters: the inner machine flushes
-    * FIRST (its claims mark rows), THEN pending rows past their deadline
-    * flush as unmatched. A row inside a HELD skip candidate can never
-    * expire before its candidate resolves: every partial blocking the
-    * candidate starts at-or-before it, so the partials' deadlines pass
-    * first and the same timeout sweep resolves the candidate before the
-    * row's own deadline check runs.
-    *
-    * State is pending-rows + claimed-refs per key, both bounded by the
-    * WITHIN window — the same O(window) bound the NFA partials already
-    * hold; drained keys drop their entry.
-    */
-  def detectStreamWithUnmatched(ds: Dataset[CepEvent], spec: PatternSpec,
-                                watermarkDelay: String, useSkip: Boolean,
-                                resume: Option[(Int, Boolean)] = None,
-                                retainMatchSeq: Boolean = false): Dataset[CepMatch] = {
-    val withinUs = spec.withinUs.getOrElse(
-      throw new IllegalArgumentException("detectStreamWithUnmatched requires withinUs"))
-    implicit val stEnc: Encoder[UnmatchedNfaState] = Encoders.product[UnmatchedNfaState]
-    val rel = spec.steps.map(_.reluctant)
-    val withTime = ds.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[CepEvent](evEnc)
-    def emptySt = UnmatchedNfaState(
-      SkipNfaState(NfaState(Nil, done = false), 0L, Nil), Nil, Nil)
-    def claimRefs(ms: Seq[CepMatch]): Seq[RowRef] =
-      ms.flatMap(_.steps.flatMap(_.events)).map(e => RowRef(e.tsUs, e.eventId))
-    def pseudo(e: CepEvent): CepMatch =
-      CepMatch(e.key, e.tsUs, e.tsUs, Seq(Collected("__unmatched", Seq(e))),
-        matchSeq = -1L)
-    withTime.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: String, it: Iterator[CepEvent], state: GroupState[UnmatchedNfaState]) =>
-        val st = state.getOption.getOrElse(emptySt)
-        val wmUs = state.getCurrentWatermarkMs() * 1000L
-        val events =
-          if (state.hasTimedOut) Nil
-          else it.toSeq.sortBy(e => (e.tsUs, e.eventId))
-        // 1. inner machine first (its claims mark rows before the
-        //    unmatched flush below decides anything)
-        val (matched: Seq[CepMatch], skip2: SkipNfaState) =
-          if (state.hasTimedOut) {
-            if (useSkip) skipPastTimeoutFlush(st.skip, wmUs, withinUs, resume, rel,
-              relVarGroupStart(spec), innerRelCfg(spec))
-            else (Seq.empty[CepMatch], st.skip.copy(nfa = st.skip.nfa.copy(
-              partials = st.skip.nfa.partials.filter(p => p.startUs + withinUs >= wmUs))))
-          } else if (useSkip) runNfaSkipPast(events, st.skip, spec, resume)
-          else {
-            val (o, n2) = runNfa(events, st.skip.nfa, spec)
-            (o, st.skip.copy(nfa = n2))
-          }
-        // 2. bookkeeping: new rows join pending; emitted matches claim
-        val claimed = st.claimed ++ claimRefs(matched)
-        val claimedSet = claimed.map(r => (r.tsUs, r.eventId)).toSet
-        // 3. provably-unmatched flush: rows whose deadline the watermark
-        //    passed emit (unclaimed) or drop (claimed); claimed refs past
-        //    the same deadline have no row left to mark — prune
-        val (due, live) = (st.pending ++ events)
-          .partition(e => e.tsUs + withinUs < wmUs)
-        val unmatchedOut = due.filterNot(e => claimedSet((e.tsUs, e.eventId)))
-          .sortBy(e => (e.tsUs, e.eventId)).map(pseudo)
-        val claimedLive = claimed.filter(r => r.tsUs + withinUs >= wmUs)
-        val next = UnmatchedNfaState(skip2, live, claimedLive)
-        val drained = next.pending.isEmpty && next.skip.nfa.partials.isEmpty &&
-          next.skip.cands.isEmpty
-        if (drained && !(retainMatchSeq && next.skip.nfa.matchSeq > 0)) state.remove()
-        else {
-          state.update(next)
-          // wake at the earliest decision point: a pending row's
-          // unmatched deadline or a partial's WITHIN expiry (held skip
-          // candidates resolve at partial expiry, which the same sweep runs)
-          val deadlines = next.pending.map(e => ceilMs(e.tsUs + withinUs)) ++
-            next.skip.nfa.partials.map(p => ceilMs(p.startUs + withinUs))
-          if (deadlines.nonEmpty) state.setTimeoutTimestamp(
-            math.max(deadlines.min, state.getCurrentWatermarkMs() + 1))
-        }
-        (matched ++ unmatchedOut).iterator
-    }
-  }
-
-  /** Streaming absent pattern — `e1=A NOT FOLLOWED BY B WITHIN d` (the
-    * reference's `NOT … FOR d` roadmap design, MILESTONES.md:126-133; batch
-    * result-level form = q_cep_absent's anti-join). A matched first event
-    * waits out its deadline in per-key state:
-    *  - an absent-matching event before the deadline kills the partial;
-    *  - deadline passing (older in-batch event time, or the event-time
-    *    watermark firing EventTimeTimeout) flushes the partial as a match.
-    * Emission is therefore delayed by exactly the WITHIN duration — absence
-    * is only knowable after the deadline (same reason the reference routes
-    * this through its TimerWheel).
-    */
-  final case class AbsentSpec(
-      first: CepEvent => Boolean,
-      absent: CepEvent => Boolean,
-      withinUs: Long) extends Serializable
-
-  def detectAbsentStream(ds: Dataset[CepEvent], spec: AbsentSpec,
-                         watermarkDelay: String): Dataset[CepMatch] = {
-    val withTime = ds.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[CepEvent](evEnc)
-    withTime.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: String, it: Iterator[CepEvent], state: GroupState[NfaState]) =>
-        def emit(p: Partial): CepMatch = {
-          val a = p.collected.head.head
-          CepMatch(a.key, a.tsUs, p.startUs + spec.withinUs, Seq(Collected("e1", Seq(a))))
-        }
-        var pending = state.getOption.map(_.partials.toVector).getOrElse(Vector.empty)
-        val out = Seq.newBuilder[CepMatch]
-        if (state.hasTimedOut) {
-          // watermark passed some deadlines: flush those, keep the rest
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (due, live) = pending.partition(p => p.startUs + spec.withinUs <= wmUs)
-          due.foreach(p => out += emit(p))
-          pending = live
-        } else {
-          it.toSeq.sortBy(e => (e.tsUs, e.eventId)).foreach { e =>
-            // deadlines strictly before this event's time are conclusive
-            val (due, live) = pending.partition(p => p.startUs + spec.withinUs < e.tsUs)
-            due.foreach(p => out += emit(p))
-            pending = live
-            if (spec.absent(e))
-              // <= : an absent event at the SAME event time arrives after
-              // the pending first event in arrival order (matches the batch
-              // NOT-guard's __id ordering)
-              pending = pending.filterNot(p => p.startUs <= e.tsUs) // followed → killed
-            if (spec.first(e))
-              pending :+= Partial(0, e.tsUs, 0L, Vector(Vector(e)))
-          }
-        }
-        if (pending.isEmpty) state.remove()
-        else {
-          state.update(NfaState(pending, done = false))
-          val nextDeadlineMs = pending.map(p => ceilMs(p.startUs + spec.withinUs)).min
-          state.setTimeoutTimestamp(math.max(nextDeadlineMs,
-            state.getCurrentWatermarkMs() + 1))
-        }
-        out.result().iterator
-    }
-  }
-
-  /** Trailing absent guard over a full pattern chain, streaming — the
-    * generalization of [[detectAbsentStream]] to arbitrary base chains
-    * (`… -> NOT B FOR d`, the streaming SQL surface's trailing NOT): the
-    * NFA completes a base match, which then waits out every guard's FOR
-    * deadline in per-key state; a guard-matching later event (arrival order
-    * within the guard's window) kills it; the deadline passing (an older
-    * in-batch event time, or the event-time watermark firing
-    * EventTimeTimeout) flushes it as a match. Emission is delayed by up to
-    * the longest FOR duration — absence is only knowable after the deadline.
+  /** Trailing absent guard (`… -> NOT B FOR d`, the streaming SQL
+    * surface's trailing NOT): a completed base match waits out every
+    * guard's FOR deadline in per-key state; a guard-matching later event
+    * within the guard's window kills it.
     */
   final case class TrailingAbsent(pred: CepEvent => Boolean, forUs: Long)
     extends Serializable
@@ -1545,94 +1047,364 @@ object Cep {
     * assigned when a pending match survives its deadlines, not when the
     * NFA completes it, so guard-KILLED matches leave no gap in
     * mr_match_number (the reason streaming ALL ROWS + trailing NOT was
-    * batch-only before). State schema v12.
+    * batch-only before). Shipped with state schema v12.
     */
   final case class AbsentChainState(nfa: NfaState, pending: Seq[CepMatch],
                                     seq: Long)
 
-  /** `retainMatchSeq`: keep the per-key shell once any match emitted so
-    * the conclusive ordinal never restarts (streaming EMIT ALL ROWS'
-    * mr_match_number contract — same flag as the other kernels). */
-  def detectStreamWithTrailingAbsents(ds: Dataset[CepEvent], spec: PatternSpec,
-      guards: Seq[TrailingAbsent], watermarkDelay: String,
-      retainMatchSeq: Boolean = false): Dataset[CepMatch] = {
-    require(guards.nonEmpty, "detectStreamWithTrailingAbsents needs >= 1 guard")
-    implicit val stEnc: Encoder[AbsentChainState] = Encoders.product[AbsentChainState]
-    // a match is conclusive only once EVERY guard's window has passed
-    val maxForUs = guards.map(_.forUs).max
-    val withTime = ds.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[CepEvent](evEnc)
-    withTime.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: String, it: Iterator[CepEvent], state: GroupState[AbsentChainState]) =>
-        val st = state.getOption.getOrElse(
-          AbsentChainState(NfaState(Nil, done = false), Nil, 0L))
-        var nfa = st.nfa
-        var pending = st.pending.toVector
-        var seq = st.seq
-        val out = Seq.newBuilder[CepMatch]
-        // conclusive emission: matchSeq assigned in flush order (endUs then
-        // startUs — deterministic), so guard-killed matches leave no gap
-        def flushDue(due: Seq[CepMatch]): Unit =
-          due.sortBy(m => (m.endUs, m.startUs)).foreach { m =>
-            seq += 1; out += m.copy(matchSeq = seq)
-          }
-        if (state.hasTimedOut) {
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (due, live) = pending.partition(m => m.endUs + maxForUs <= wmUs)
-          flushDue(due)
-          pending = live
-          // purge NFA partials whose WITHIN deadline the watermark passed —
-          // idle keys would otherwise retain partial matches forever (the
-          // TimerWheel role detectStreamWithTimeout plays for plain chains);
-          // >= keeps a deadline-exact partial (see the purge note in
-          // detectStreamWithTimeout)
-          spec.withinUs.foreach { w =>
-            nfa = nfa.copy(partials = nfa.partials.filter(p => p.startUs + w >= wmUs))
-          }
-        } else {
-          it.toSeq.sortBy(e => (e.tsUs, e.eventId)).foreach { e =>
-            // deadlines strictly before this event's time are conclusive
-            val (due, live) = pending.partition(m => m.endUs + maxForUs < e.tsUs)
-            flushDue(due)
-            pending = live
-            guards.foreach { g =>
-              if (g.pred(e))
-                // <= : a guard event at the SAME event time arrives after
-                // the base match in arrival order (matches the batch
-                // NOT-guard anti-join's __id ordering)
-                pending = pending.filterNot(m =>
-                  m.endUs <= e.tsUs && e.tsUs <= m.endUs + g.forUs)
-            }
-            // the guard check runs before the NFA consumes the event, so a
-            // completing event can never kill its own match
-            val (ms, n2) = runNfa(Seq(e), nfa, spec)
-            nfa = n2
-            ms.foreach(pending :+= _)
-          }
-        }
-        // drained keys (no pending matches awaiting deadlines, no in-flight
-        // partials) drop their state entry — mirrors detectAbsentStream's
-        // remove-on-drain; the done-latch of every=false is the one shell
-        // kept (it must keep suppressing re-matches)
-        if (pending.isEmpty && nfa.partials.isEmpty && !(nfa.done && !spec.every) &&
-            !(retainMatchSeq && seq > 0))
-          state.remove()
-        else {
-          state.update(AbsentChainState(nfa, pending, seq))
-          // wake at the earliest conclusive deadline: a pending match's FOR
-          // window or (when WITHIN bounds the chain) a partial's expiry
-          val deadlines = pending.map(m => ceilMs(m.endUs + maxForUs)) ++
-            spec.withinUs.toSeq.flatMap(w => nfa.partials.map(p => ceilMs(p.startUs + w)))
-          if (deadlines.nonEmpty)
-            state.setTimeoutTimestamp(math.max(deadlines.min,
-              state.getCurrentWatermarkMs() + 1))
-        }
-        out.result().iterator
+  /** State of the multi-variant all-rows mode: every variant's NFA state
+    * plus the per-key match ordinal SHARED across variants (streaming EMIT
+    * ALL ROWS' mr_match_number must number a key's matches once, not per
+    * variant — two variants' counters would collide).
+    */
+  final case class MultiSeqState(states: Seq[NfaState], shared: Long)
+
+  /** What [[detectStream]] runs besides the pattern specs — one record,
+    * derived by the SQL compiler from the query:
+    *  - `lateness`: the event-time watermark delay (ALLOW LATENESS; "0
+    *    seconds" = in-order contract, tightest state bound). `None` = no
+    *    watermark and no timeout: every event reaches the NFA in arrival
+    *    order and state is never purged. With a delay, the watermark
+    *    purges partials past their WITHIN deadline and flushes held
+    *    results past theirs (GroupStateTimeout.EventTimeTimeout — the
+    *    reference's TimerWheel, timers/timer_wheel.rs), and drained keys
+    *    drop their state entry. It needs a WITHIN or a trailing guard.
+    *  - `selection`: the EVERY enumeration or the skip machine.
+    *  - `guards`: trailing absent guards.
+    *  - `unmatched`: also emit every input row no match claims (ALL ROWS
+    *    PER MATCH WITH UNMATCHED ROWS).
+    *  - `allRows`: the query reads mr_match_number, so the per-key match
+    *    counter must never restart (see [[nfaMachine]]); over several
+    *    specs, one counter is shared by all variants.
+    * Skip selection, guards, unmatched rows and all-rows over several
+    * specs hold results until a deadline passes, so they need `lateness`.
+    */
+  final case class StreamMode(lateness: Option[String] = None,
+                              selection: Selection = Selection.Every,
+                              guards: Seq[TrailingAbsent] = Nil,
+                              unmatched: Boolean = false,
+                              allRows: Boolean = false)
+
+  /** Streaming detection: per-key state persists across micro-batches;
+    * events are ordered within each batch by (tsUs, eventId) (cross-batch
+    * order = source contract). One spec yields [[CepMatch]] rows. Several
+    * specs (a multi-variant family: AND arrival orderings, min=0 presence
+    * pairs) yield [[VariantMatch]] rows: ONE state-store entry per key
+    * holds every variant's [[NfaState]], each micro-batch shuffles the
+    * stream once instead of once per variant, and each variant folds the
+    * identical [[runNfa]] it would fold alone. `mode` picks the state
+    * machine; [[drive]] runs it.
+    */
+  def detectStream(ds: Dataset[CepEvent], specs: Seq[PatternSpec],
+                   mode: StreamMode = StreamMode()): DataFrame = {
+    require(specs.nonEmpty, "detectStream needs at least one pattern spec")
+    val spec = specs.head
+    val holds = mode.selection != Selection.Every || mode.guards.nonEmpty ||
+      mode.unmatched || (mode.allRows && specs.size > 1)
+    require(mode.lateness.isDefined || !holds,
+      "skip selection, trailing guards, unmatched rows and multi-variant " +
+        "all-rows hold results until a deadline: they need a lateness")
+    require(mode.lateness.isEmpty || spec.withinUs.isDefined || mode.guards.nonEmpty,
+      "an event-time timeout needs a WITHIN or a trailing guard deadline")
+    require(mode.guards.isEmpty ||
+        (specs.size == 1 && mode.selection == Selection.Every && !mode.unmatched),
+      "trailing guards run on a single spec's EVERY enumeration")
+    require(specs.size == 1 || (mode.selection == Selection.Every && !mode.unmatched),
+      "several specs run the EVERY enumeration without unmatched rows")
+    val l = mode.lateness
+    if (specs.size > 1) {
+      if (mode.allRows) drive(ds, multiSeqMachine(specs), l)
+      else drive(ds, multiMachine(specs), l)
+    } else if (mode.unmatched)
+      drive(ds, unmatchedMachine(spec, mode.selection, mode.allRows), l)
+    else if (mode.guards.nonEmpty)
+      drive(ds, absentMachine(spec, mode.guards, mode.allRows), l)
+    else mode.selection match {
+      case Selection.Skip(resume) => drive(ds, skipMachine(spec, resume, mode.allRows), l)
+      case Selection.Every => drive(ds, nfaMachine(spec, mode.allRows), l)
     }
   }
+
+  /** One streaming mode of [[detectStream]] over per-key state `S`:
+    *  - `fold`: consume one micro-batch's sorted events (with the current
+    *    watermark in µs);
+    *  - `sweep`: the event-time timeout fired at the given watermark (µs);
+    *  - `keep`: whether the key's state entry survives (else removed);
+    *  - `wake`: the event-time deadline (µs) of the next timeout, if any.
+    */
+  private final case class Machine[S, O](
+      empty: S,
+      fold: (S, Seq[CepEvent], Long) => (Seq[O], S),
+      sweep: (S, Long) => (Seq[O], S),
+      keep: S => Boolean,
+      wake: S => Option[Long])
+
+  /** The runner behind every streaming mode: with a `lateness` the
+    * stream gets its event-time watermark and the key an EventTimeTimeout;
+    * each call sweeps (timeout) or folds the sorted batch, then removes a
+    * drained key's entry or updates it and schedules the next wake-up
+    * (event-time ms, rounded up; clamped above the watermark — registering
+    * at-or-below it is rejected by the state store). Without a lateness
+    * the state is always kept and never times out.
+    */
+  private def drive[S: Encoder, O: Encoder](ds: Dataset[CepEvent], m: Machine[S, O],
+                                           lateness: Option[String]): DataFrame = {
+    val in = lateness.fold(ds)(delay => ds.toDF()
+      .withColumn("eventTime", timestamp_micros(col("tsUs")))
+      .withWatermark("eventTime", delay)
+      .as[CepEvent](evEnc))
+    in.groupByKey(_.key).flatMapGroupsWithState(OutputMode.Append,
+        if (lateness.isDefined) GroupStateTimeout.EventTimeTimeout
+        else GroupStateTimeout.NoTimeout) {
+      (_: String, it: Iterator[CepEvent], state: GroupState[S]) =>
+        val s0 = state.getOption.getOrElse(m.empty)
+        val wmUs =
+          if (lateness.isDefined) state.getCurrentWatermarkMs() * 1000L else Long.MinValue
+        val (out, s1) =
+          if (state.hasTimedOut) m.sweep(s0, wmUs)
+          else m.fold(s0, it.toSeq.sortBy(e => (e.tsUs, e.eventId)), wmUs)
+        if (lateness.isEmpty) state.update(s1)
+        else if (!m.keep(s1)) state.remove()
+        else {
+          state.update(s1)
+          m.wake(s1).foreach(d => state.setTimeoutTimestamp(
+            math.max(ceilMs(d), state.getCurrentWatermarkMs() + 1)))
+        }
+        out.iterator
+    }.toDF()
+  }
+
+  /** Partials that can still complete once the watermark is at `wmUs`. A
+    * partial completes via an event at tsUs <= startUs + withinUs; events
+    * at-or-below the watermark are dropped before the NFA, so >= (keep at
+    * equality) errs on the side of keeping — the next timeout sweeps it at
+    * no cost, while dropping early can lose a deadline-exact match.
+    */
+  private def live(ps: Seq[Partial], spec: PatternSpec, wmUs: Long): Seq[Partial] =
+    spec.withinUs.fold(ps)(w => ps.filter(p => p.startUs + w >= wmUs))
+  private def deadlines(ps: Seq[Partial], spec: PatternSpec): Seq[Long] =
+    spec.withinUs.toSeq.flatMap(w => ps.map(_.startUs + w))
+  /** The done-latch of every=false: it enforces the once-per-key contract
+    * (a later event must NOT re-match), so it cannot expire without
+    * changing semantics — O(1) per matched key, documented in SCALE.md. */
+  private def latched(s: NfaState, spec: PatternSpec): Boolean = s.done && !spec.every
+
+  /** The EVERY (or first-match) NFA. Drained keys drop their state entry —
+    * at high key cardinality an empty shell per key is unbounded growth —
+    * except the done-latch and, with `retain`, a key that issued a match
+    * number: a removed entry restarts [[NfaState.matchSeq]], and a later
+    * match of the key would re-issue a used mr_match_number, conflating two
+    * matches' rows downstream. That shell is a few dozen bytes, kept for
+    * the LIFE of the query, because no TTL can prove a key finished on an
+    * unbounded stream: size it as keys-that-ever-matched × ~100 B (the
+    * bound of any per-key monotonic counter), or run the query without
+    * mr_match_number to bound state by ACTIVE keys only.
+    */
+  private def nfaMachine(spec: PatternSpec, retain: Boolean): Machine[NfaState, CepMatch] =
+    Machine[NfaState, CepMatch](
+      empty = NfaState(Nil, done = false),
+      fold = (s, evs, _) => runNfa(evs, s, spec),
+      sweep = (s, wmUs) => (Nil, s.copy(partials = live(s.partials, spec, wmUs))),
+      keep = s => s.partials.nonEmpty || latched(s, spec) || (retain && s.matchSeq > 0),
+      wake = s => deadlines(s.partials, spec).maxOption)
+
+  /** The [[runNfaSkipPast]] selection: a candidate is held until every
+    * partial that could produce a leftmost-er or greedier match dies — by a
+    * mismatching event, or by WITHIN expiry at the timeout sweep, which
+    * also FLUSHES newly-unblocked candidates (a key that stops receiving
+    * events must still emit its held matches). Emission delay is therefore
+    * bounded by the WITHIN duration. Held candidates with no live partial
+    * flush immediately, so partials are the only thing to wake for. Once
+    * nothing is held, seq/pos continuity is not needed — a fresh entry
+    * restarts with an empty frontier — except matchSeq under `retain`.
+    */
+  private def skipMachine(spec: PatternSpec, resume: Option[(Int, Boolean)],
+                          retain: Boolean): Machine[SkipNfaState, CepMatch] = {
+    val w = spec.withinUs.get
+    val (rel, gStart, irel) =
+      (spec.steps.map(_.reluctant), relVarGroupStart(spec), innerRelCfg(spec))
+    Machine[SkipNfaState, CepMatch](
+      empty = emptySkip,
+      fold = (s, evs, _) => runNfaSkipPast(evs, s, spec, resume),
+      sweep = (s, wmUs) => skipPastTimeoutFlush(s, wmUs, w, resume, rel, gStart, irel),
+      keep = s => s.nfa.partials.nonEmpty || s.cands.nonEmpty ||
+        (retain && s.nfa.matchSeq > 0),
+      wake = s => deadlines(s.nfa.partials, spec).maxOption)
+  }
+
+  /** ALL ROWS PER MATCH WITH UNMATCHED ROWS: matched rows emit through the
+    * inner selection machine exactly as without the clause; an UNMATCHED
+    * row is emitted as a pseudo-match (matchSeq = -1, the row alone in a
+    * "__unmatched" step) once it is PROVABLE no match will ever claim it.
+    * The proof is the WITHIN bound + the watermark: any match containing
+    * row r spans at most `within`, so it completes by an event at tsUs <=
+    * r.tsUs + within — once the watermark passes that, r's eligibility is
+    * decided (which is why this mode REQUIRES a WITHIN). Emission delay for
+    * unmatched rows is therefore exactly the WITHIN duration, the same
+    * bound the held-candidate skip machine already pays.
+    *
+    * Order of operations per call matters: the inner machine runs FIRST
+    * (its claims mark rows), THEN pending rows past their deadline flush as
+    * unmatched. A row inside a HELD skip candidate can never expire before
+    * its candidate resolves: every partial blocking the candidate starts
+    * at-or-before it, so the partials' deadlines pass first and the same
+    * timeout sweep resolves the candidate before the row's own deadline
+    * check runs. State is pending rows + claimed refs per key, both bounded
+    * by the WITHIN window; it wakes at the earliest decision point, a
+    * pending row's unmatched deadline or a partial's WITHIN expiry.
+    */
+  private def unmatchedMachine(spec: PatternSpec, selection: Selection,
+                               retain: Boolean): Machine[UnmatchedNfaState, CepMatch] = {
+    val w = spec.withinUs.get
+    val inner: Machine[SkipNfaState, CepMatch] = selection match {
+      case Selection.Skip(resume) => skipMachine(spec, resume, retain)
+      case Selection.Every =>
+        val m = nfaMachine(spec, retain)
+        Machine[SkipNfaState, CepMatch](emptySkip,
+          fold = (s, evs, wmUs) => {
+            val (o, n) = m.fold(s.nfa, evs, wmUs); (o, s.copy(nfa = n))
+          },
+          sweep = (s, wmUs) => {
+            val (o, n) = m.sweep(s.nfa, wmUs); (o, s.copy(nfa = n))
+          },
+          keep = s => m.keep(s.nfa), wake = s => m.wake(s.nfa))
+    }
+    def settle(s: UnmatchedNfaState, events: Seq[CepEvent], matched: Seq[CepMatch],
+               skip: SkipNfaState, wmUs: Long): (Seq[CepMatch], UnmatchedNfaState) = {
+      // new rows join pending; emitted matches claim theirs
+      val claimed = s.claimed ++ matched.flatMap(_.steps.flatMap(_.events))
+        .map(e => RowRef(e.tsUs, e.eventId))
+      val claimedSet = claimed.map(r => (r.tsUs, r.eventId)).toSet
+      // provably-unmatched flush: rows whose deadline the watermark passed
+      // emit (unclaimed) or drop (claimed); claimed refs past the same
+      // deadline have no row left to mark — prune
+      val (due, pending) = (s.pending ++ events).partition(e => e.tsUs + w < wmUs)
+      val unmatched = due.filterNot(e => claimedSet((e.tsUs, e.eventId)))
+        .sortBy(e => (e.tsUs, e.eventId))
+        .map(e => CepMatch(e.key, e.tsUs, e.tsUs, Seq(Collected("__unmatched", Seq(e))),
+          matchSeq = -1L))
+      (matched ++ unmatched, UnmatchedNfaState(skip, pending,
+        claimed.filter(r => r.tsUs + w >= wmUs)))
+    }
+    Machine[UnmatchedNfaState, CepMatch](
+      empty = UnmatchedNfaState(emptySkip, Nil, Nil),
+      fold = (s, evs, wmUs) => {
+        val (ms, k) = inner.fold(s.skip, evs, wmUs); settle(s, evs, ms, k, wmUs)
+      },
+      sweep = (s, wmUs) => {
+        val (ms, k) = inner.sweep(s.skip, wmUs); settle(s, Nil, ms, k, wmUs)
+      },
+      keep = s => s.pending.nonEmpty || s.skip.nfa.partials.nonEmpty ||
+        s.skip.cands.nonEmpty || (retain && s.skip.nfa.matchSeq > 0),
+      wake = s => (s.pending.map(_.tsUs + w) ++ deadlines(s.skip.nfa.partials, spec)).minOption)
+  }
+
+  /** Trailing absent guards over a full pattern chain: the NFA completes a
+    * base match, which then waits out every guard's FOR deadline in per-key
+    * state (a match is conclusive only once EVERY guard's window has
+    * passed); a guard-matching later event (arrival order within the
+    * guard's window) kills it; the deadline passing (an older in-batch
+    * event time, or the watermark timeout) flushes it as a match. Emission
+    * is delayed by up to the longest FOR duration — absence is only
+    * knowable after the deadline. A one-step chain with one guard is the
+    * absent pattern `e1=A NOT FOLLOWED BY B WITHIN d` (the reference's `NOT
+    * … FOR d` roadmap design, MILESTONES.md:126-133; batch result-level
+    * form = q_cep_absent's anti-join). Wakes at the earliest conclusive
+    * deadline: a pending match's FOR window or (when WITHIN bounds the
+    * chain) a partial's expiry.
+    */
+  private def absentMachine(spec: PatternSpec, guards: Seq[TrailingAbsent],
+                            retain: Boolean): Machine[AbsentChainState, CepMatch] = {
+    val maxForUs = guards.map(_.forUs).max
+    // conclusive emission: matchSeq assigned in flush order (endUs then
+    // startUs — deterministic), so guard-killed matches leave no gap
+    def flush(s: AbsentChainState, due: CepMatch => Boolean)
+        : (Seq[CepMatch], AbsentChainState) = {
+      val (d, pending) = s.pending.partition(due)
+      val out = d.sortBy(m => (m.endUs, m.startUs)).zipWithIndex
+        .map { case (m, i) => m.copy(matchSeq = s.seq + i + 1) }
+      (out, s.copy(pending = pending, seq = s.seq + d.size))
+    }
+    Machine[AbsentChainState, CepMatch](
+      empty = AbsentChainState(NfaState(Nil, done = false), Nil, 0L),
+      fold = (s0, evs, _) => {
+        val out = Seq.newBuilder[CepMatch]
+        var s = s0.copy(pending = s0.pending.toVector)
+        evs.foreach { e =>
+          // deadlines strictly before this event's time are conclusive
+          val (o, s1) = flush(s, m => m.endUs + maxForUs < e.tsUs)
+          out ++= o
+          // <= : a guard event at the SAME event time arrives after the
+          // base match in arrival order (matches the batch NOT-guard
+          // anti-join's __id ordering). The guard check runs before the
+          // NFA consumes the event, so a completing event can never kill
+          // its own match
+          val kept = s1.pending.filterNot(m => guards.exists(g =>
+            g.pred(e) && m.endUs <= e.tsUs && e.tsUs <= m.endUs + g.forUs))
+          val (ms, nfa) = runNfa(Seq(e), s1.nfa, spec)
+          s = AbsentChainState(nfa, kept ++ ms, s1.seq)
+        }
+        (out.result(), s)
+      },
+      sweep = (s, wmUs) => {
+        val (o, s1) = flush(s, m => m.endUs + maxForUs <= wmUs)
+        (o, s1.copy(nfa = s1.nfa.copy(partials = live(s1.nfa.partials, spec, wmUs))))
+      },
+      keep = s => s.pending.nonEmpty || s.nfa.partials.nonEmpty || latched(s.nfa, spec) ||
+        (retain && s.seq > 0),
+      wake = s => (s.pending.map(_.endUs + maxForUs) ++ deadlines(s.nfa.partials, spec))
+        .minOption)
+  }
+
+  /** Every variant's NFA folded over the same sorted batch; matches tagged
+    * with their variant index, variant by variant. */
+  private def foldVariants(specs: Seq[PatternSpec], sts: Seq[NfaState],
+                           evs: Seq[CepEvent]): (Seq[(Int, CepMatch)], Seq[NfaState]) = {
+    val rs = specs.zip(sts).map { case (spec, s) => runNfa(evs, s, spec) }
+    (rs.zipWithIndex.flatMap { case ((out, _), vi) => out.map(vi -> _) }, rs.map(_._2))
+  }
+  private def liveVariants(specs: Seq[PatternSpec], sts: Seq[NfaState],
+                           wmUs: Long): Seq[NfaState] =
+    specs.zip(sts).map { case (spec, s) => s.copy(partials = live(s.partials, spec, wmUs)) }
+  private def anyVariantHeld(specs: Seq[PatternSpec], sts: Seq[NfaState]): Boolean =
+    specs.zip(sts).exists { case (spec, s) => s.partials.nonEmpty || latched(s, spec) }
+  private def variantsWake(specs: Seq[PatternSpec], sts: Seq[NfaState]): Option[Long] =
+    specs.zip(sts).flatMap { case (spec, s) => deadlines(s.partials, spec) }.maxOption
+
+  /** Several variants, one [[MultiNfaState]] entry per key; a key drained
+    * in every variant drops its entry. */
+  private def multiMachine(specs: Seq[PatternSpec]): Machine[MultiNfaState, VariantMatch] =
+    Machine[MultiNfaState, VariantMatch](
+      empty = MultiNfaState(specs.map(_ => NfaState(Nil, done = false))),
+      fold = (s, evs, _) => {
+        val (ms, sts) = foldVariants(specs, s.states, evs)
+        (ms.map { case (vi, m) => variantMatch(vi, m) }, MultiNfaState(sts))
+      },
+      sweep = (s, wmUs) => (Nil, MultiNfaState(liveVariants(specs, s.states, wmUs))),
+      keep = s => anyVariantHeld(specs, s.states),
+      wake = s => variantsWake(specs, s.states))
+
+  /** [[multiMachine]] for the EMIT ALL ROWS lowering: each batch's matches
+    * (all variants) sort by (endUs, startUs, variant) and number through
+    * one per-key counter — completion-order numbering, exactly like the
+    * single-chain matchSeq (batch numbers by start position instead; the
+    * orders differ only for overlapping matches). A key that ever matched
+    * keeps its shell so numbers never restart (the state bound of
+    * [[nfaMachine]]'s `retain`); once its partials drain no timeout is
+    * scheduled.
+    */
+  private def multiSeqMachine(specs: Seq[PatternSpec]): Machine[MultiSeqState, VariantMatch] =
+    Machine[MultiSeqState, VariantMatch](
+      empty = MultiSeqState(specs.map(_ => NfaState(Nil, done = false)), 0L),
+      fold = (s, evs, _) => {
+        val (ms, sts) = foldVariants(specs, s.states, evs)
+        val numbered = ms.sortBy { case (vi, m) => (m.endUs, m.startUs, vi) }.zipWithIndex
+          .map { case ((vi, m), i) => variantMatch(vi, m, s.shared + i + 1) }
+        (numbered, MultiSeqState(sts, s.shared + ms.size))
+      },
+      sweep = (s, wmUs) => (Nil, s.copy(states = liveVariants(specs, s.states, wmUs))),
+      keep = s => anyVariantHeld(specs, s.states) || s.shared != 0,
+      wake = s => variantsWake(specs, s.states))
 
   /** Adapt the `events` table (or an equivalently-shaped stream) to
     * [[CepEvent]]: key = user_id, event time in micros.

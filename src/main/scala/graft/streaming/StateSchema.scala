@@ -23,13 +23,15 @@ import org.apache.spark.sql.SparkSession
   * ROWS' mr_match_number, round 13 (v12): AbsentChainState
   * grows the conclusive-emission ordinal `seq` so guard-killed matches
   * never gap mr_match_number, plus the new MultiSeqState/UnmatchedNfaState
-  * kernels, round 14 (v13): Partial grows the loop-group
+  * states (the multi-variant all-rows and unmatched-rows modes of
+  * `Cep.detectStream`), round 14 (v13): Partial grows the loop-group
   * iteration frame `iters`/`iterBase`/`iterHist` backing quantified group
   * members and bounded groups on the loop machine, round 15 (v14) =
   * current: Partial grows the NESTED iteration frame `innerIters`/
-  * `innerBase` backing variable-count nested groups `((A B){1,3} C)+`). Library users driving
-  * the kernels directly (not through AppRuntime) can call [[guard]]
-  * themselves.
+  * `innerBase` backing variable-count nested groups `((A B){1,3} C)+`).
+  * StateSchemaSpec pins every state encoder's schema to this version.
+  * Library users driving the kernels directly (not through AppRuntime)
+  * can call [[guard]] themselves.
   */
 object StateSchema {
 

@@ -491,7 +491,7 @@ object Windows {
   // The NoTimeout kernels above bound state PER KEY (n events / duration),
   // but a key that goes quiet keeps its buffer forever — at 100 TB key
   // cardinality that is state linear in keys-ever-seen. These variants
-  // mirror Cep.detectStreamWithTimeout: every update registers an
+  // mirror Cep.detectStream's timed modes: every update registers an
   // event-time timeout at (last arrival + idle horizon); when the
   // watermark passes it, the key's state is flushed THROUGH THE CHANGELOG
   // (retained events emit op=-1 Expired — or op=+1 for delay/ALL-chunk

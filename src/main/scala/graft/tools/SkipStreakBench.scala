@@ -4,7 +4,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** SCALE.md evidence for the round-13 incremental skip scan
-  * ([[graft.streaming.Cep.detectSkipPast]]): one key, one anchor, then N
+  * ([[graft.streaming.Cep.detect]] with a skip selection): one key, one anchor, then N
   * monotone quantifier rows — the adversarial shape where the old
   * enumerate-then-filter machine materializes the full EVERY match set
   * (O(N²) collected events: N matches of sizes 1..N) to select ONE greedy

@@ -115,7 +115,7 @@ class StreamingSpec extends AnyFunSuite {
         Step.simple("a")(_.etype == "A"),
         Step.simple("b")(_.etype == "B")),
       strict = false, every = true, withinUs = Some(1000000L))
-    val q = Cep.detectStream(in.toDS(), spec).writeStream
+    val q = Cep.detectStream(in.toDS(), Seq(spec)).writeStream
       .format("memory").queryName("cep_sink").outputMode("append").start()
     def e(id: Long, t: String, tsUs: Long) = CepEvent("u1", tsUs, id, t, id.toDouble)
     try {
@@ -525,8 +525,8 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[CepEvent]
     val spec = PatternSpec(Seq(Step.simple("a")(_.etype == "A")))
     val guards = Seq(Cep.TrailingAbsent(_.etype == "B", forUs = 10000000L)) // 10s
-    val q = Cep.detectStreamWithTrailingAbsents(in.toDS(), spec, guards,
-        watermarkDelay = "0 seconds")
+    val q = Cep.detectStream(in.toDS(), Seq(spec),
+        Cep.StreamMode(lateness = Some("0 seconds"), guards = guards))
       .writeStream.format("memory").queryName("drain_sink").outputMode("append").start()
     def e(key: String, id: Long, t: String, tsUs: Long) = CepEvent(key, tsUs, id, t, 0.0)
     def stateRows: Long = q.lastProgress.stateOperators.head.numRowsTotal
@@ -702,9 +702,10 @@ class StreamingSpec extends AnyFunSuite {
   test("CEP streaming absent pattern: B in a later batch kills; timeout flush emits") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[CepEvent]
-    val spec = Cep.AbsentSpec(
-      first = _.etype == "A", absent = _.etype == "B", withinUs = 10000000L) // 10s
-    val q = Cep.detectAbsentStream(in.toDS(), spec, watermarkDelay = "0 seconds")
+    val spec = PatternSpec(Seq(Step.simple("e1")(_.etype == "A")))
+    val guards = Seq(Cep.TrailingAbsent(_.etype == "B", forUs = 10000000L)) // 10s
+    val q = Cep.detectStream(in.toDS(), Seq(spec),
+        Cep.StreamMode(lateness = Some("0 seconds"), guards = guards))
       .writeStream.format("memory").queryName("absent_sink").outputMode("append").start()
     def e(key: String, id: Long, t: String, tsUs: Long) = CepEvent(key, tsUs, id, t, 0.0)
     try {
@@ -762,7 +763,8 @@ class StreamingSpec extends AnyFunSuite {
     val spec = PatternSpec(
       Seq(Step.simple("a")(_.etype == "A"), Step.simple("b")(_.etype == "B")),
       strict = false, every = true, withinUs = Some(10000000L)) // 10s
-    val q = Cep.detectStreamWithTimeout(in.toDS(), spec, watermarkDelay = "0 seconds")
+    val q = Cep.detectStream(in.toDS(), Seq(spec),
+        Cep.StreamMode(lateness = Some("0 seconds")))
       .writeStream.format("memory").queryName("cep_to_sink").outputMode("append").start()
     def e(key: String, id: Long, t: String, tsUs: Long) = CepEvent(key, tsUs, id, t, 0.0)
     try {
