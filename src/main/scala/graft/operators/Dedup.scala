@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFns, VectorFns}
 
@@ -47,27 +47,117 @@ object Dedup {
   /** Connected components over a near-duplicate pair graph — the cluster-
     * resolution stage between pair mining (jaccardPairs / minHashLsh /
     * simHashPairs) and "keep one canonical doc per cluster": every node
-    * gets the minimum doc id reachable from it as `cluster_id`.
+    * gets the minimum doc id reachable from it as `cluster_id`. Output:
+    * `(id BIGINT, cluster_id BIGINT)`, one row per node. A self-loop makes
+    * its node a singleton cluster; a pair with a NULL end is ignored.
     *
-    * Algorithm: iterative label propagation, each round taking (a) the min
-    * label over graph neighbors and (b) a POINTER JUMP (label := label of
-    * the current label). The jump halves label-chain depth every round, so
+    * Graphs whose pair plan passes [[fitsUnionFind]] resolve as ONE lazy
+    * plan, the local-then-merge union-find of Kiveris et al., "Connected
+    * Components in MapReduce and Beyond" (SoCC'14): every partition folds
+    * its pairs into a union-find forest rooted at the smaller id and emits
+    * `(node, localRoot)`; `repartition(1)` brings those star edges to one
+    * task, whose second union-find gives every node its component's
+    * minimum id. Building the DataFrame runs no Spark job; executing it is
+    * one pass over the pairs plus one exchange of at most two rows per
+    * pair. Larger graphs fall back to [[clustersByRounds]], whose rounds
+    * `maxIter` bounds.
+    */
+  def clusters(pairs: DataFrame, aCol: String, bCol: String,
+               maxIter: Int = 25): DataFrame =
+    clustersBounded(pairs, aCol, bCol, maxIter, UnionFindMaxBytes)
+
+  /** [[clusters]] with the union-find bound as an argument: a bound of 0
+    * forces the round loop. */
+  private[graft] def clustersBounded(pairs: DataFrame, aCol: String, bCol: String,
+                                     maxIter: Int, unionFindMaxBytes: BigInt): DataFrame = {
+    val edges = pairs
+      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+    if (fitsUnionFind(edges, unionFindMaxBytes)) clustersByUnionFind(edges)
+    else clustersByRounds(edges, maxIter)
+  }
+
+  /** Largest pair plan, in Spark's estimated bytes, that [[clusters]]
+    * resolves with the single-task union-find merge. The merge task holds
+    * one map entry per node (~50 bytes), and the estimate of a two-long
+    * pair relation is ~24 bytes per pair, so at the bound an exact
+    * estimate means ~1.4 M pairs and at most ~140 MB in the merge task.
+    */
+  val UnionFindMaxBytes: BigInt = BigInt(32L << 20)
+
+  /** The path gate of [[clusters]]: whether the `(a, b)` pair plan's
+    * `optimizedPlan.stats.sizeInBytes` is at most `maxBytes`. Reading the
+    * estimate runs no job: it comes from the leaves (file sizes, local
+    * relations) scaled by projected row width.
+    *
+    * What it guarantees: a plan Spark cannot size takes the round loop
+    * (a `createDataFrame(rdd)` leaf reports `spark.sql.defaultSizeInBytes`,
+    * `Long.MaxValue` by default).
+    * What it does not: the estimate follows input BYTES, not pair count.
+    * Without column statistics a filter or aggregate keeps its child's
+    * size and an `explode` does not grow it, so a pair plan mined from a
+    * corpus is over-estimated and does not track its pair count (the
+    * `q_dedup_clusters` edge plan reads 169,875 B for 122 pairs at sf0.1
+    * and 18,717 B for 4,118 pairs at sf0.001), while a small input
+    * exploded into many pairs can pass the gate with more pairs than the
+    * bound implies.
+    */
+  private[graft] def fitsUnionFind(edges: DataFrame, maxBytes: BigInt): Boolean =
+    edges.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes
+
+  /** Union-find over long-id pairs in which every root is the smallest id
+    * of its set (union links the larger root under the smaller; `find`
+    * splits paths as it walks). Yields `(node, root)` for every node seen.
+    */
+  private def unionFind(pairs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var v = x
+      var p = parent.getOrElseUpdate(v, v)
+      while (p != v) {
+        val gp = parent(p)
+        parent(v) = gp
+        v = p
+        p = gp
+      }
+      v
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.iterator.map(x => (x, find(x)))
+  }
+
+  private def clustersByUnionFind(edges: DataFrame): DataFrame = {
+    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    edges.as[(Long, Long)](enc)
+      .mapPartitions(unionFind)(enc)
+      .repartition(1)
+      .mapPartitions(unionFind)(enc)
+      .toDF("id", "cluster_id")
+  }
+
+  /** The fallback of [[clusters]] above its union-find bound: iterative
+    * label propagation, each round taking (a) the min label over graph
+    * neighbors and (b) a POINTER JUMP (label := label of the current
+    * label). The jump halves label-chain depth every round, so
     * convergence is O(log diameter) rounds instead of O(diameter) — plain
     * hash-min on a 400-node chain would need 400 shuffling rounds; this
     * needs ~10. Per round: one join on the symmetric edge list + one
     * self-join on the (id, label) relation, both narrow (two longs per
-    * row). Each generation is persisted and the previous unpersisted after
-    * materialization, keeping lineage flat across iterations; convergence
-    * is detected by an any-label-changed probe on the persisted frame.
+    * row). Each generation is checkpointed ([[Checkpoints.flat]]) and the
+    * previous one freed, keeping lineage flat across iterations;
+    * convergence is detected by an any-label-changed probe on the
+    * checkpointed frame, so building the result runs Spark jobs.
     *
     * At 100 TB the edge list (mined duplicate pairs) is orders of magnitude
     * smaller than the corpus, and near-dup components are shallow — the
     * rounds bound is a safety rail, with a loud warning if exhausted.
     */
-  def clusters(pairs: DataFrame, aCol: String, bCol: String,
-               maxIter: Int = 25): DataFrame = {
+  private def clustersByRounds(edges: DataFrame, maxIter: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sc = pairs.sparkSession.sparkContext
+    val sc = edges.sparkSession.sparkContext
     // track the EXACT checkpoint-RDD ids this call creates (diff around
     // each localCheckpoint) — an end-of-call whole-context sweep would
     // unpersist RDDs other threads persisted mid-call, truncating a
@@ -82,8 +172,7 @@ object Dedup {
     // explode both directions from ONE scan: union(pairs, pairs-flipped)
     // would re-execute the caller's pair-mining plan once per branch
     // (round 16, guide §2.4 — same fix as the graph symmetrization)
-    val sym = pairs
-      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+    val sym = edges
       .select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))

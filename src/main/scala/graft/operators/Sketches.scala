@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *    `count(x)·(k+1) > Σ n_p` then by pigeonhole some partition has
   *    `count_p(x)·(k+1) > n_p`, which MG's decrement argument keeps.
   *    Pass 2 recounts ONLY the ≤ k·partitions candidates (broadcast
-  *    semi gate) and applies the exact threshold — so the OUTPUT is
+  *    gate) and applies the exact threshold — so the OUTPUT is
   *    exact (the sketch only prunes), and the full-corpus groupBy the
   *    oracle runs never happens on the Spark side.
   *
@@ -484,25 +484,24 @@ object Sketches {
           Iterator((null: String, nP, true))
       }(Encoders.product[(String, Long, Boolean)])
       .toDF("key", "n_p", "is_tot")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val total = mg.filter(col("is_tot"))
-      .agg(coalesce(sum(col("n_p")), lit(0L))).head().getLong(0)
-    val candidates = mg.filter(!col("is_tot")).select(col("key")).distinct()
-    // pass 2: exact recount of the candidate slice only; the candidate
-    // relation is ≤ k·partitions rows — broadcast gate, corpus map-side.
-    // Null-safe equality so a NULL candidate key gates its group through
-    // (plain semi-join equality would silently drop every NULL row).
-    val out = keys
-      .join(broadcast(candidates.withColumnRenamed("key", "__ck")),
-        col("key") <=> col("__ck"), "left_semi")
-      .groupBy(col("key")).agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") * (k + 1) > total)
+    // ONE aggregate over the MG rows yields the total and the candidate
+    // set together, so the MG pass appears once in the plan. A candidate
+    // rides as struct(key): collect_set skips NULLs, and the struct keeps
+    // a NULL key.
+    val gate = mg
+      .agg(sum(when(col("is_tot"), col("n_p"))).as("__n"),
+        collect_set(when(!col("is_tot"), struct(col("key")))).as("__c"))
+      .select(explode(col("__c")).as("__c"), col("__n"))
+      .select(col("__c.key").as("__ck"), col("__n"))
+    // pass 2: exact recount of the candidate slice only; the gate is
+    // ≤ k·partitions rows, each carrying the total — broadcast it, the
+    // corpus stays map-side. Null-safe equality so a NULL candidate key
+    // gates its group through (plain equality would drop every NULL row).
+    keys.join(broadcast(gate), col("key") <=> col("__ck"))
+      .groupBy(col("key"), col("__n")).agg(count(lit(1)).as("cnt"))
+      .filter(col("cnt") * (k + 1) > col("__n"))
+      .select(col("key"), col("cnt"))
       .orderBy(col("cnt").desc, col("key"))
-    // eager materialization so the pass-1 persist can be freed here (the
-    // selectBudget lifetime discipline)
-    val res = out.localCheckpoint(true)
-    mg.unpersist()
-    res
   }
 
   /** Per-group exact heavy hitters — "heavy tokens per language", the
@@ -512,8 +511,8 @@ object Sketches {
     * per group per task, the same pigeonhole coverage proof applied
     * group-wise — and carries each (partition, group) row count on flag
     * rows; pass 2 recounts only the ≤ k·partitions candidates per group
-    * (null-safe two-column semi gate, so NULL groups and NULL keys stay
-    * real groups — GROUP BY parity) and applies each group's own exact
+    * (null-safe two-column broadcast gate, so NULL groups and NULL keys
+    * stay real groups — GROUP BY parity) and applies each group's own exact
     * threshold. No full-corpus groupBy ever runs. Output:
     * `(grp STRING, key STRING, cnt BIGINT)`, group asc then count desc.
     */
@@ -547,24 +546,21 @@ object Sketches {
         } ++ nG.iterator.map { case (g, n) => (g, null: String, n, true) }
       }(Encoders.product[(String, String, Long, Boolean)])
       .toDF("grp", "key", "n_p", "is_tot")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-group totals are a ≤|groups|·partitions relation — broadcast it
-    val totals = mg.filter(col("is_tot"))
-      .groupBy(col("grp")).agg(sum(col("n_p")).as("__n"))
-    val candidates = mg.filter(!col("is_tot"))
-      .select(col("grp").as("__cg"), col("key").as("__ck")).distinct()
-    val out = keys.toDF("grp", "key")
-      .join(broadcast(candidates),
-        col("grp") <=> col("__cg") && col("key") <=> col("__ck"), "left_semi")
-      .groupBy(col("grp"), col("key")).agg(count(lit(1)).as("cnt"))
-      .join(broadcast(totals.withColumnRenamed("grp", "__tg")),
-        col("grp") <=> col("__tg"))
+    // per group, ONE aggregate over the MG rows yields N_g and the
+    // candidate set (see heavyHitters); the gate is ≤ |groups|·k·
+    // partitions rows, each carrying its group's total — broadcast it
+    val gate = mg.groupBy(col("grp"))
+      .agg(sum(when(col("is_tot"), col("n_p"))).as("__n"),
+        collect_set(when(!col("is_tot"), struct(col("key")))).as("__c"))
+      .select(col("grp").as("__cg"), explode(col("__c")).as("__c"), col("__n"))
+      .select(col("__cg"), col("__c.key").as("__ck"), col("__n"))
+    keys.toDF("grp", "key")
+      .join(broadcast(gate),
+        col("grp") <=> col("__cg") && col("key") <=> col("__ck"))
+      .groupBy(col("grp"), col("key"), col("__n")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") * (k + 1) > col("__n"))
       .select(col("grp"), col("key"), col("cnt"))
       .orderBy(col("grp"), col("cnt").desc, col("key"))
-    val res = out.localCheckpoint(true)
-    mg.unpersist()
-    res
   }
 
   // ---- streaming faces (round 14): windowed sketch aggregates ----

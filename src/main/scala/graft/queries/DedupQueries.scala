@@ -192,7 +192,7 @@ object DedupQueries extends QueryFamily {
     // Cluster resolution: connected components over a duplicate-pair graph
     // (docs sharing a shingle with doc-frequency exactly 2 — deterministic
     // edges both engines can mine), labels = min reachable doc id. Spark
-    // side runs the iterative pointer-jumping propagation; the oracle
+    // side runs the lazy local-then-merge union-find; the oracle
     // computes ground truth via a recursive transitive-closure CTE.
     QueryDef(
       "q_dedup_clusters",

@@ -59,15 +59,14 @@ class CheckpointSpec extends AnyFunSuite {
   test("clusters: reliable-checkpoint path is bit-identical to local path") {
     import spark.implicits._
     // two components, one a 40-node chain (forces several pointer-jump
-    // rounds), one a triangle
+    // rounds), one a triangle; a zero union-find bound sends the graph
+    // down the checkpointing round loop
     val chain = (100L until 139L).map(i => (i, i + 1))
     val pairs = (chain ++ Seq((1L, 2L), (2L, 3L), (1L, 3L))).toDF("a", "b")
-    val localPath = Dedup.clusters(pairs, "a", "b")
+    def byRounds = Dedup.clustersBounded(pairs, "a", "b", 25, unionFindMaxBytes = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val reliablePath = withCheckpointDir {
-      Dedup.clusters(pairs, "a", "b")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    }
+    val localPath = byRounds
+    val reliablePath = withCheckpointDir(byRounds)
     assert(reliablePath == localPath)
     // ground truth: chain collapses to 100, triangle to 1
     val labels = localPath.toMap

@@ -525,9 +525,10 @@ class GraftAppSpec extends AnyFunSuite {
     val in = Seq((1, 7L, "a"), (2, 7L, "b")).toDF("sec", "user_id", "kind")
       .selectExpr("CAST(timestamp_seconds(sec) AS TIMESTAMP) AS ts", "user_id", "kind")
     spark.catalog.clearCache()
-    // scope the assertion to THIS runTracked's persists: other components
-    // (e.g. a Dedup.clusters result checkpoint from another suite in the
-    // shared JVM) may legitimately hold persistent RDDs
+    // scope the assertion to THIS runTracked's persists: other suites in
+    // the shared JVM may legitimately hold persistent RDDs (e.g. the
+    // result checkpoint of Graph.pageRank, or of Dedup.clusters on its
+    // round-loop path above the union-find bound)
     val preexisting = spark.sparkContext.getPersistentRDDs.keySet
     val (env, close) = GraftApp.runTracked(spark, app, Map("E" -> in))
     assert(env("Out").collect().map(_.getLong(0)).toSeq == Seq(7L))

@@ -1038,9 +1038,18 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(hashes.toSeq == again.toSeq)
   }
 
-  test("cluster resolution matches union-find on seeded random graphs; log-round chains") {
+  /** Both paths of [[Dedup.clusters]]: the default bound
+    * takes the one-plan union-find, a zero bound the round loop. */
+  private val clusterPaths = Seq(
+    "" -> Dedup.UnionFindMaxBytes, " (round loop)" -> BigInt(0))
+
+  for ((path, bound) <- clusterPaths)
+  test("cluster resolution matches union-find on seeded random graphs; log-round chains" + path) {
     import spark.implicits._
-    def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    def clusters(edges: Seq[(Long, Long)]) = Dedup
+      .clustersBounded(edges.toDF("a_id", "b_id"), "a_id", "b_id", 25, bound)
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
         val p = parent.getOrElse(x, x)
@@ -1056,28 +1065,52 @@ class LlmOpsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(42)
     for (trial <- 0 until 3) {
       val n = 60 + trial * 40
-      val edges = (0 until n).map { _ =>
+      val random = (0 until n).map { _ =>
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
-      }.filter(e => e._1 != e._2)
-      val got = graft.operators.Dedup
-        .clusters(edges.toDF("a_id", "b_id"), "a_id", "b_id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == unionFind(n, edges), s"trial $trial")
+      }
+      // self-loops (a node of its own), duplicate and reversed edges
+      val loops = (0 until 5).map(_ => rnd.nextInt(2 * n).toLong).map(v => (v, v))
+      val edges = rnd.shuffle(random ++ loops ++ random.take(10) ++
+        random.takeRight(10).map(_.swap))
+      val got = clusters(edges)
+      assert(got.length == got.map(_._1).distinct.length, s"trial $trial: duplicate ids")
+      assert(got.toMap == unionFind(edges), s"trial $trial")
     }
-    // 120-node path graph: diameter 119 — converges only because of the
-    // pointer jump (plain hash-min would exhaust the 25-round bound)
-    val chain = (0L until 119L).map(i => (i, i + 1))
-    val labels = graft.operators.Dedup
-      .clusters(chain.toDF("a_id", "b_id"), "a_id", "b_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    // 120-node path graph, shuffled: diameter 119 — the loop converges
+    // only because of the pointer jump (plain hash-min would exhaust the
+    // 25-round bound)
+    val chain = rnd.shuffle((0L until 119L).map(i => (i, i + 1)))
+    val labels = clusters(chain)
     assert(labels.length == 120 && labels.forall(_._2 == 0L))
     assert(graft.sql.ScaleWarnings.recentWarnings
       .forall(!_.contains("Dedup.clusters"))) // converged inside the bound
     // determinism
-    val again = graft.operators.Dedup
-      .clusters(chain.toDF("a_id", "b_id"), "a_id", "b_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(labels.sortBy(_._1).toSeq == again.sortBy(_._1).toSeq)
+    assert(labels.sortBy(_._1).toSeq == clusters(chain).sortBy(_._1).toSeq)
+  }
+
+  test("clusters gate: the union-find bound splits on the pair plan's size estimate") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+    val size = edges.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(Dedup.fitsUnionFind(edges, size))
+    assert(!Dedup.fitsUnionFind(edges, size - 1))
+    // an RDD-backed leaf has no size estimate: it never takes union-find
+    val unknown = spark.createDataFrame(edges.rdd, edges.schema)
+    assert(!Dedup.fitsUnionFind(unknown, Dedup.UnionFindMaxBytes))
+    // the corpus pair plan of q_dedup_clusters sits under the bound
+    val corpus = SparkEntry.queries("q_dedup_clusters")(spark, dir)
+    assert(corpus.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r }.isEmpty,
+      "q_dedup_clusters took the checkpointing round loop")
+    // either side of the bound gives the same labels; only the loop
+    // leaves a checkpointed RDD at the root of the plan
+    def run(bound: BigInt) = Dedup.clustersBounded(edges, "a", "b", 25, bound)
+    val (uf, loop) = (run(size), run(size - 1))
+    assert(uf.collect().toSet == loop.collect().toSet)
+    assert(uf.queryExecution.optimizedPlan.collectFirst {
+      case m: org.apache.spark.sql.catalyst.plans.logical.MapPartitions => m }.nonEmpty)
+    assert(loop.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r }.nonEmpty)
   }
 
   test("canonical per cluster: longest text wins, min-id tie-break, singletons survive") {

@@ -167,6 +167,11 @@ class SketchSpec extends AnyFunSuite {
         if (r.isNullAt(1)) "<K>" else r.getString(1), r.getLong(2)))
     // null group: 'a'x5 of 5 (5*3>5 yes); group g: null-key x4 of 5 (12>5)
     assert(gotN.toSet == Set(("<G>", "a", 5L), ("g", "<K>", 4L)), gotN.toSeq)
+    // lazy plan: nothing persisted by building or running it
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Sketches.heavyHittersBy(df, "g", "k", 9).count()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"heavyHittersBy leaked cached blocks: $leaked")
   }
 
   test("quantiles: integer-deterministic histogram quantiles match brute force") {
@@ -348,12 +353,11 @@ class SketchSpec extends AnyFunSuite {
     assert(hhNull.toSeq == Seq(("<NULL>", 60L)), s"got ${hhNull.toSeq}")
     // empty input
     assert(Sketches.heavyHitters(Seq.empty[Tuple1[String]].toDF("k"), "k", 5).count() == 0)
-    // the pass-1 persist must not leak: after a call, the only new cached
-    // entry is the localCheckpoint'ed RESULT itself (which lives exactly
-    // as long as the returned DataFrame — the selectBudget discipline)
+    // the result is a lazy plan: neither building nor running it
+    // persists anything
     val before = spark.sparkContext.getPersistentRDDs.keySet
     Sketches.heavyHitters(df, "k", 5).count()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 1, s"heavyHitters leaked cached blocks: $leaked")
+    assert(leaked.isEmpty, s"heavyHitters leaked cached blocks: $leaked")
   }
 }

@@ -709,8 +709,10 @@ class StreamingSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("absent_sink").outputMode("append").start()
     def e(key: String, id: Long, t: String, tsUs: Long) = CepEvent(key, tsUs, id, t, 0.0)
     try {
-      // u1: A then B arrives in a LATER batch inside the window → no emit
-      in.addData(Seq(e("u1", 1, "A", 0L)));            q.processAllAvailable()
+      // u1: A then B arrives in a LATER batch inside the window → no emit.
+      // Both sit above the initial watermark (0): an event AT it is
+      // dropped as late and would never reach the kernel
+      in.addData(Seq(e("u1", 1, "A", 1000000L)));      q.processAllAvailable()
       in.addData(Seq(e("u1", 2, "B", 5000000L)));      q.processAllAvailable()
       // u2: A never followed by B
       in.addData(Seq(e("u2", 3, "A", 20000000L)));     q.processAllAvailable()
