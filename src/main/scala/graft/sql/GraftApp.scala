@@ -561,15 +561,8 @@ object GraftApp {
           throw SqlError("malformed WITH clause — expected: WITH Name AS " +
             "(SELECT …) [, Name2 AS (…)] INSERT INTO …"))
         val name = h.group(1)
-        var depth = 1; var i = h.end; var inQ = false
-        while (i < rest.length && depth > 0) {
-          val c = rest.charAt(i)
-          if (c == '\'') inQ = !inQ
-          else if (!inQ && c == '(') depth += 1
-          else if (!inQ && c == ')') depth -= 1
-          i += 1
-        }
-        if (depth != 0)
+        val i = PatternCompiler.closeParen(rest, h.end)
+        if (i < 0)
           throw SqlError(s"unbalanced parentheses in WITH clause for '$name'")
         val body = rest.substring(h.end, i - 1).trim
         if (!body.matches("(?is)^SELECT\\b.*"))
@@ -1089,15 +1082,8 @@ object GraftApp {
     PatternPrefixRe.findPrefixMatchOf(stmt).map { m =>
       val (target, select, mode) = (m.group(1), m.group(2), m.group(3))
       // balanced close paren (grouping parens may nest inside)
-      var depth = 1; var i = m.end; var inQ = false
-      while (i < stmt.length && depth > 0) {
-        val c = stmt.charAt(i)
-        if (c == '\'') inQ = !inQ
-        else if (!inQ && c == '(') depth += 1
-        else if (!inQ && c == ')') depth -= 1
-        i += 1
-      }
-      if (depth != 0) throw SqlError(s"unbalanced parens in pattern: ${stmt.take(60)}")
+      val i = PatternCompiler.closeParen(stmt, m.end)
+      if (i < 0) throw SqlError(s"unbalanced parens in pattern: ${stmt.take(60)}")
       var stepsRaw = stmt.substring(m.end, i - 1)
       var rest = stmt.substring(i)
       // WITHIN inside the parens (trailing) or after them
@@ -1351,16 +1337,8 @@ object GraftApp {
     if (outerSel != "*") throw SqlError(
       "MATCH_RECOGNIZE output columns are the PARTITION BY key plus the " +
         "MEASURES aliases — write SELECT * and project in a downstream query")
-    // balanced close paren, quote-aware
-    var depth = 1; var i = m.end; var inQ = false
-    while (i < stmt.length && depth > 0) {
-      val c = stmt.charAt(i)
-      if (c == '\'') inQ = !inQ
-      else if (!inQ && c == '(') depth += 1
-      else if (!inQ && c == ')') depth -= 1
-      i += 1
-    }
-    if (depth != 0) throw SqlError(s"unbalanced parens in MATCH_RECOGNIZE: ${stmt.take(60)}")
+    val i = PatternCompiler.closeParen(stmt, m.end)
+    if (i < 0) throw SqlError(s"unbalanced parens in MATCH_RECOGNIZE: ${stmt.take(60)}")
     val body = stmt.substring(m.end, i - 1)
     val residue = stmt.substring(i).replace(";", " ").trim
     if (residue.nonEmpty) throw SqlError(
@@ -1370,15 +1348,8 @@ object GraftApp {
     val pm = """(?is)\bPATTERN\s*\(""".r.findFirstMatchIn(maskQuotes(body))
       .getOrElse(throw SqlError("MATCH_RECOGNIZE needs a PATTERN (...) clause"))
     val header = body.substring(0, pm.start)
-    var d2 = 1; var j = pm.end; var q2 = false
-    while (j < body.length && d2 > 0) {
-      val c = body.charAt(j)
-      if (c == '\'') q2 = !q2
-      else if (!q2 && c == '(') d2 += 1
-      else if (!q2 && c == ')') d2 -= 1
-      j += 1
-    }
-    if (d2 != 0) throw SqlError("unbalanced parens in PATTERN (...)")
+    val j = PatternCompiler.closeParen(body, pm.end)
+    if (j < 0) throw SqlError("unbalanced parens in PATTERN (...)")
     val patternRaw = body.substring(pm.end, j - 1).trim
 
     // ---- clause excision: every recognized clause is CUT OUT of a working
@@ -1536,7 +1507,7 @@ object GraftApp {
     // from ALL ROWS PER MATCH output (in ONE ROW mode exclusion is ANSI's
     // defined no-op). Nested/sequence grouping and QUANTIFIED alternation
     // stay typed errors: the engine's OR steps take no count quantifier
-    // (compileVariant rejects it too).
+    // (compileBatch rejects it too).
     // a quantifier may carry ANSI's reluctant marker (`+?`, `{n,m}?`,
     // `??`, `*?`): lex-MIN parse preference under skip-mode selection
     // round 13 adds bounded GROUP repetition `(A B){n,m}` (space-separated

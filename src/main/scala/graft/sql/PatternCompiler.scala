@@ -23,7 +23,7 @@ import graft.streaming.{Cep, CepEvent, MidGuard, PatternSpec, Step}
   *    LogicalPreStateProcessor enumerates arrival orders; its SQL surface
   *    `#[ignore]`s both shapes — patterns.rs:611,1228), capped at
   *    [[MaxVariants]] and executed as ONE shared per-key NFA pass
-  *    ([[compileMulti]])
+  *    ([[compileBatch]])
   *  - zero-or-more `e=S*` and `{0,m}` quantifiers — presence/absence
   *    variant pair, `A* -> B` ≡ `B OR (A+ -> B)`; the zero branch
   *    NULL-pads the alias's select refs
@@ -316,34 +316,10 @@ object PatternCompiler {
         row_number().over(Window.partitionBy(col("__key")).orderBy(col("ts"))).cast("long"))
       .persist()
     onPersist(ordered)
-
-    if (q.variants.size == 1)
-      compileVariant(spark, q, q.variants.head, ordered, onPersist)
-    else compileMulti(spark, q, ordered, onPersist)
+    compileBatch(spark, q, ordered, onPersist)
   }
 
-  /** Multi-variant compile (AND arrival orderings, `A*` presence pairs):
-    * every variant's NFA runs in ONE per-key pass over ONE shared event
-    * encoding ([[Cep.detectMulti]] — match-flag bits keyed by distinct
-    * padded step value, so all variants read the same etype/vals columns),
-    * and the per-variant match relations project onto ONE canonical
-    * step-group layout feeding a SINGLE join/select phase. V variants
-    * therefore cost one exchange + one set of join-backs instead of V of
-    * each (the naive expansion: a 3-way AND = 6 NFA shuffles + 18 joins).
-    * Match sets are bit-for-bit those of V independent passes — each
-    * variant folds the identical [[Cep.runNfa]] over the same per-key
-    * sorted history.
-    *
-    * Canonical layout: step GROUPS are keyed by alias set (a step's alias
-    * set is unique within a variant and value-identical across variants);
-    * a variant lacking a group (the `A*` no-step branch) NULL-pads its ids
-    * array, and the join/select phase resolves the absence relationally —
-    * outer joins for possibly-absent aliases, `coalesce(size(…),0)` for
-    * counts, left-joined aggregates — instead of the per-variant text
-    * NULL-rewriting the legacy per-variant path used (absentAliasRewriter
-    * still rewrites step PREDICATES, which ride the NFA bits).
-    */
-  /** Shared multi-variant classification (batch [[compileMulti]] and
+  /** Shared multi-variant classification (batch [[compileBatch]] and
     * streaming [[streamMulti]]): canonical step groups keyed by alias set,
     * per-variant padded chains, one match-flag bit per distinct padded
     * step value, one value-slot registry — so every variant's NFA reads
@@ -351,9 +327,8 @@ object PatternCompiler {
     * per-key pass.
     */
   private final case class MultiBuild(
-      groups: Seq[PatternStep], gIdx: Map[Seq[String], Int],
-      posOf: Seq[Map[Int, Int]], omittable: Seq[Boolean],
-      paddedVariants: Seq[Seq[PatternStep]],
+      groups: Seq[PatternStep], posOf: Seq[Map[Int, Int]],
+      omittable: Seq[Boolean],
       bitsCol: Column, valsCol: Column, specs: Seq[PatternSpec])
 
   private def buildMulti(q: PatternQuery,
@@ -439,19 +414,47 @@ object PatternCompiler {
         withinUs = q.withinUs, withinEvents = q.withinEvents)
     }
     specs.foreach(requireBoundedState)
-    MultiBuild(groups, gIdx, posOf, omittable, paddedVariants,
+    MultiBuild(groups, posOf, omittable,
       concat(flagCols.result(): _*), valsColumn(valReg), specs)
   }
 
-  private def compileMulti(spark: SparkSession, q: PatternQuery,
+  /** Batch lowering of every pattern shape — one step chain, or a variant
+    * family (AND arrival orderings, `A*` presence pairs). Every variant's
+    * NFA runs in ONE per-key pass over ONE shared event encoding
+    * ([[buildMulti]] — match-flag bits keyed by distinct padded step value,
+    * so all variants read the same etype/vals columns), and the per-variant
+    * match relations project onto ONE canonical step-group layout feeding a
+    * SINGLE join/select phase. V variants therefore cost one exchange + one
+    * set of join-backs instead of V of each (the naive expansion: a 3-way
+    * AND = 6 NFA shuffles + 18 joins). Match sets are bit-for-bit those of
+    * V independent passes — each variant folds the identical
+    * [[Cep.runNfa]] over the same per-key sorted history.
+    *
+    * Canonical layout: step GROUPS are keyed by alias set (a step's alias
+    * set is unique within a variant and value-identical across variants);
+    * a variant lacking a group (the `A*` no-step branch) NULL-pads its ids
+    * array, and the join/select phase resolves the absence relationally —
+    * outer joins for possibly-absent aliases, `coalesce(size(…),0)` for
+    * counts, left-joined aggregates (absentAliasRewriter still rewrites
+    * step PREDICATES, which ride the NFA bits). Members of a zero-min inner
+    * group are possibly-absent the same way, even in a single chain.
+    *
+    * The variant count shows in three places only: one chain runs
+    * [[Cep.detect]] with the query's match selection (SKIP PAST / SKIP TO /
+    * reluctant parse preference), a family runs [[Cep.detectMulti]]; NOT
+    * guards (single-chain only — parseSteps rejects them with variants)
+    * anti-join the result; and the output order (below).
+    */
+  private def compileBatch(spark: SparkSession, q: PatternQuery,
                            ordered: DataFrame,
-                           onPersist: DataFrame => Unit = _ => ()): DataFrame = {
+                           onPersist: DataFrame => Unit): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, LongType}
     import spark.implicits._
     val typeOfCol = (c: String) =>
       ordered.schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType.sql)
     val mb = buildMulti(q, typeOfCol)
-    import mb.{groups, gIdx, omittable, posOf}
+    import mb.{groups, omittable, posOf}
+    val single = q.variants.size == 1
 
     val cepIn = ordered.withColumn("__bits", mb.bitsCol).select(
         col("__key").as("key"),
@@ -462,44 +465,71 @@ object PatternCompiler {
         mb.valsCol.as("vals"),
         typedlit(Seq.empty[String]).as("svals"))
       .as[CepEvent]
-    // persist: the canonical base feeds scalar join-backs AND the
-    // aggregate explode — one NFA pass instead of one per consumer
-    // (same rationale as compileVariant's persist)
-    val matches = {
-      val m = Cep.detectMulti(cepIn, mb.specs).toDF().persist()
-      onPersist(m)
-      m
+    // SKIP PAST LAST ROW / SKIP TO FIRST|LAST: the incremental
+    // consume-on-match NFA ([[Cep.detect]] with a skip selection) emits the
+    // greedy leftmost non-overlapping subset directly — the full EVERY
+    // match set is never materialized (a k-row monotone streak costs O(k),
+    // not the O(k²) collected events of enumerate-then-filter).
+    // persist: the match relation feeds BOTH the scalar join-backs and the
+    // aggregate explode — without it the NFA runs once per consumer
+    // (round 14: measured 2x the kernel cost on every aggregate-bearing
+    // pattern query); it is matches-sized, registered for end-of-run
+    // unpersist like `ordered`. A family's matches carry the variant tag.
+    val (matches, variantTag) = {
+      val (m, tag) =
+        if (single) (Cep.detect(cepIn, mb.specs.head,
+          selection = q.selection(q.variants.head)).toDF(), Nil)
+        else (Cep.detectMulti(cepIn, mb.specs).toDF(), Seq(col("variant")))
+      val p = m.persist()
+      onPersist(p)
+      (p, tag)
     }
 
-    // canonical base: one projection over the tagged matches — group gi's
-    // ids array resolves per variant by that variant's step position
-    // (CASE on the variant tag), NULL where the variant lacks the group
+    // canonical base: one projection over the (tagged) matches — group
+    // gi's ids array reads the step at its position when every variant
+    // holds it at the same one (always, for one chain); else a CASE on the
+    // variant tag, NULL where the variant lacks the group. NOT guards add
+    // per-step end timestamps for their FOR anchors.
     val nullIds = lit(null).cast(ArrayType(LongType))
-    var base = matches.select(
-      col("variant") +: col("key").as("__mkey") +: col("endUs").as("__endUs") +:
-      groups.indices.map { gi =>
-        val arms = q.variants.indices.flatMap(vi => posOf(vi).get(gi).map(i =>
-          (vi, expr(s"transform(steps[$i].events, x -> x.eventId)"))))
-        arms.foldRight(nullIds) { case ((vi, ids), acc) =>
-          when(col("variant") === vi, ids).otherwise(acc)
-        }.as(s"__ids_$gi")
-      }: _*)
+    def stepIds(i: Int): Column = expr(s"transform(steps[$i].events, x -> x.eventId)")
+    val idsCols = groups.indices.map { gi =>
+      val pos = q.variants.indices.map(vi => posOf(vi).get(gi))
+      (pos.distinct match {
+        case Seq(Some(i)) => stepIds(i)
+        case _ => pos.zipWithIndex.foldRight(nullIds) {
+          case ((Some(i), vi), acc) => when(col("variant") === vi, stepIds(i)).otherwise(acc)
+          case (_, acc) => acc
+        }
+      }).as(s"__ids_$gi")
+    }
+    val endTsCols = if (q.absents.isEmpty) Nil else groups.indices.map(i =>
+      expr(s"element_at(steps[$i].events, -1).tsUs").as(s"__endts_$i"))
+    var base = matches.select(variantTag ++
+      Seq(col("key").as("__mkey"), col("endUs").as("__endUs")) ++
+      idsCols ++ endTsCols: _*)
 
-    // ---- unified select/WHERE rewriting + join planning over the groups
+    // ---- select/WHERE rewriting + join planning over the groups
     val multi = groups.zipWithIndex.collect { case (st, gi) if st.max > 1 || st.looped =>
       st.aliases.head -> gi
     }.toMap
     if (multi.nonEmpty && groups.exists(st => st.max > 1 && st.alts.size > 1))
       throw GraftApp.SqlError("count quantifiers on OR steps are not supported")
 
+    // joins: joinName -> (idExpr over base, streams, alias-qualified
+    // residual predicate for OR alternatives, outer?)
     val joins = scala.collection.mutable.LinkedHashMap.empty[String, JoinPlan]
+    // collection aggregations: group -> (outputCol, aggSql over alias __c)
     val aggItems = scala.collection.mutable.LinkedHashMap.empty[Int, Vector[(String, String)]]
     var aggN = 0
 
     def idAt(gi: Int, idx: String): Column = idx.replaceAll("\\s", "") match {
       case "last" => element_at(col(s"__ids_$gi"), -1)
+      // `last-k` counts back from the buffer end (MEASURES LAST(V.x, k));
+      // try_: past the collected count is NULL, not an ANSI error
       case s if s.startsWith("last-") =>
         try_element_at(col(s"__ids_$gi"), lit(-(1 + s.stripPrefix("last-").toInt)))
+      // try_: an index past a range quantifier's collected count (or into
+      // an omitted group) is NULL — the left join yields NULL columns
       case n => try_element_at(col(s"__ids_$gi"), lit(n.toInt + 1))
     }
     def qualify(alias: String, pred: String): Column = {
@@ -510,15 +540,17 @@ object PatternCompiler {
       }
       org.apache.spark.sql.graftbridge.Bridge.column(parsed)
     }
+    // one join per single-event alias; OR alternatives and possibly-absent
+    // groups join left so the unmatched side is NULL. An OR alternative's
+    // join re-applies its predicate, alias-qualified (cross refs are
+    // rejected on OR steps, so the full pred IS local) — same-stream
+    // alternatives would otherwise BOTH bind the matched event
     groups.zipWithIndex.foreach { case (st, gi) =>
       if (st.max == 1 && !st.looped) {
         val orStep = st.aliases.size > 1
         st.aliases.foreach { a =>
           val altIdx = st.alts.indexWhere(_.alias == a)
           val altStreams = st.alts.filter(_.alias == a).map(_.stream)
-          // OR steps re-apply the alt's LOCAL predicate (cross refs are
-          // rejected on OR steps, so the full pred IS local) — same-stream
-          // alternatives would otherwise both bind the matched event
           val residual =
             if (orStep) st.alts(altIdx).pred.map(p => qualify(a, p)) else None
           joins(a) = JoinPlan(a, idAt(gi, "0"), altStreams, residual,
@@ -535,11 +567,14 @@ object PatternCompiler {
     def rewrite(text0: String): String = {
       // EMIT ALL ROWS RUNNING marker: opaque here (resolved post-explode)
       if (RunningMarkerRe.findFirstMatchIn(text0).isDefined) return text0
-      // PREV/NEXT physical navigation — same contract as the
-      // single-variant path (anchored at the variable's last matched
-      // event, per-key row_number arithmetic, NULL at partition edges);
-      // an omitted group's NULL anchor left-joins to NULL columns.
-      var text1 = navRe.replaceAllIn(text0, m => {
+      // physical navigation PREV(V.x, k) / NEXT(V.x, k): the row k PLACES
+      // before/after V's LAST matched event in the per-key event-time
+      // order (ANSI MATCH_RECOGNIZE's physical offsets, anchored at the
+      // variable's final row). Event ids are per-key row_numbers, so the
+      // neighbor id is plain arithmetic; the left join yields NULL at the
+      // partition edge — PREV/NEXT's out-of-range contract — and for an
+      // omitted group's NULL anchor.
+      var text = navRe.replaceAllIn(text0, m => {
         val (fn, alias, c) = (m.group(1).toLowerCase, m.group(2), m.group(3))
         val k = Option(m.group(4)).map(_.toInt).getOrElse(1)
         groups.indices.find(gi => groups(gi).aliases.contains(alias)) match {
@@ -556,31 +591,36 @@ object PatternCompiler {
             s"$fn() references '$alias' which is not a pattern step alias")
         }
       })
-      var text = aggRe.replaceAllIn(text1, m => {
+      // collection aggregations over count-quantified steps. A possibly-
+      // absent group's aggregate left-joins below, so its count coalesces
+      // to the zero-repeat 0 (sum/avg/min/max stay NULL, ANSI's
+      // empty-aggregate contract)
+      text = aggRe.replaceAllIn(text, m => {
         val (fn, alias, c) = (m.group(1), m.group(2), m.group(3))
         multi.get(alias) match {
           case Some(gi) =>
             val name = s"__agg_$aggN"; aggN += 1
             aggItems(gi) = aggItems.getOrElse(gi, Vector.empty) :+
               (name, s"${fn.toLowerCase}(__c.$c)")
-            // a left-joined absent group's count is NULL — the zero-repeat
-            // count is 0 (sum/avg/min/max stay NULL, as the padder types)
             if (fn.equalsIgnoreCase("count") && omittable(gi))
               s"coalesce($name, CAST(0 AS BIGINT))"
             else name
           case None => java.util.regex.Matcher.quoteReplacement(m.matched)
         }
       })
+      // count(e) over a quantified step = collected size; size(NULL) is -1
+      // under legacy sizeOfNull, so an omittable group tests the array
       text = countStepRe.replaceAllIn(text, m => {
         multi.get(m.group(1)) match {
           case Some(gi) =>
-            // size(NULL) is -1 under legacy sizeOfNull — test the array
             if (omittable(gi))
               s"CAST(if(__ids_$gi IS NULL, 0, size(__ids_$gi)) AS BIGINT)"
             else s"CAST(size(__ids_$gi) AS BIGINT)"
           case None => java.util.regex.Matcher.quoteReplacement(m.matched)
         }
       })
+      // indexed access e[j].col / e[last].col (the index may exceed the
+      // collected count: outer)
       text = idxRe.replaceAllIn(text, m => {
         val (alias, idx) = (m.group(1), m.group(2))
         groups.indices.find(gi => groups(gi).aliases.contains(alias) &&
@@ -595,6 +635,8 @@ object PatternCompiler {
           case None => java.util.regex.Matcher.quoteReplacement(m.matched)
         }
       })
+      // plain e.col on a quantified step = first collected event; NULL
+      // (not a dropped match) when the group may be empty
       multi.foreach { case (alias, gi) =>
         val plainRe = ("\\b" + alias + "\\s*\\.").r
         if (plainRe.findFirstIn(text).isDefined) {
@@ -617,9 +659,11 @@ object PatternCompiler {
         fusedJoinBack(base, ordered, livePlans, aggStepsSeq)
       else None)
       .getOrElse {
-      // legacy per-name join path (a lookup name shadows a base column)
+      // legacy per-name join path (below the fuse threshold, or a lookup
+      // name shadows a base column): one join per alias, one
+      // explode+agg+join-back per quantified step
       //
-      // FIXED-SIZE match identity (round 13): (variant, key, first id +
+      // FIXED-SIZE match identity (round 13): ([variant,] key, first id +
       // count per group). Within one NFA run a match's membership follows
       // deterministically from its start and per-step counts (the same
       // invariant the NFA's distinctPartials dedup pins), so this is exact
@@ -629,13 +673,12 @@ object PatternCompiler {
       // streaks (SkipStreakBench). Variant tag included: two variants CAN
       // share a key + identical present groups when one pads an absent
       // group NULL (firsts/counts coalesce that to a sentinel).
-      val needMatchId = aggItems.nonEmpty
-      if (needMatchId) {
+      if (aggItems.nonEmpty) {
         val idParts = groups.indices.flatMap(gi => Seq(
           coalesce(try_element_at(col(s"__ids_$gi"), lit(1)), lit(-1L)),
           coalesce(size(col(s"__ids_$gi")).cast("long"), lit(-1L))))
         base = base.withColumn("__match_id",
-          struct(col("variant") +: col("__mkey") +: idParts: _*))
+          struct(variantTag ++ (col("__mkey") +: idParts): _*))
       }
       var o = base
       livePlans.foreach { j =>
@@ -652,11 +695,35 @@ object PatternCompiler {
             col("__c.__id") === col("__eid") && col("__c.__key") === col("__mkey"))
         val aggCols = items.map { case (name, sql) => expr(sql).as(name) }
         val agg = exploded.groupBy(col("__match_id")).agg(aggCols.head, aggCols.tail: _*)
+        // a possibly-absent group's explode yields no rows for the match,
+        // so an inner join would DROP it — left join, count coalesces at
+        // the item
         o = o.join(agg, Seq("__match_id"), if (omittable(gi)) "left" else "inner")
       }
       o
     }
     whereRw.foreach(w => out = out.filter(expr(w)))
+
+    // NOT guards: anti-join against the absent stream's matching events in
+    // the guarded gap (arrival order via per-key __id). FOR narrows the
+    // guard to d after the ANCHORING step's match — mandatory on trailing
+    // guards (unbounded absence is undecidable), optional mid-chain (the
+    // next step's match bounds the gap; FOR additionally bounds it in
+    // time). Result-level form of the absent pattern — the streaming flush
+    // variant is Cep.detectStream with trailing guards.
+    q.absents.foreach { a =>
+      val ab0 = ordered.filter(col("__stream") === a.alt.stream)
+      val ab = a.alt.pred.map(p => ab0.filter(expr(p))).getOrElse(ab0)
+        .select(col("__key").as("__akey"), col("__id").as("__aid"),
+          unix_micros(col("ts")).as("__ats"))
+      val lower = element_at(col(s"__ids_${a.afterStep}"), -1)
+      var cond = col("__akey") === col("__mkey") && col("__aid") > lower
+      if (a.afterStep < groups.size - 1)
+        cond = cond && col("__aid") < element_at(col(s"__ids_${a.afterStep + 1}"), 1)
+      a.forUs.foreach(d =>
+        cond = cond && col("__ats") <= col(s"__endts_${a.afterStep}") + d)
+      out = out.join(ab, cond, "left_anti")
+    }
 
     if (q.allRows)
       return emitAllRows(out, ordered, groups.indices.map(gi => s"__ids_$gi"),
@@ -666,10 +733,16 @@ object PatternCompiler {
       case (e, Some(a)) => expr(e).as(a)
       case (e, None) => expr(e)
     }
-    // output columns are plain values — sorting by all of them is a total,
+    // one chain keeps its long-standing (key, first id per step) order; a
+    // family sorts by all its output columns — plain values, so a total,
     // engine-portable order (the single post-union sort contract)
-    val res = out.select(selectCols: _*)
-    res.orderBy(res.columns.map(col): _*)
+    if (single)
+      out.orderBy(col("__mkey") +: groups.indices.map(gi => element_at(col(s"__ids_$gi"), 1)): _*)
+        .select(selectCols: _*)
+    else {
+      val res = out.select(selectCols: _*)
+      res.orderBy(res.columns.map(col): _*)
+    }
   }
 
   /** `EMIT ALL ROWS` lowering (MATCH_RECOGNIZE's ALL ROWS PER MATCH): one
@@ -708,7 +781,7 @@ object PatternCompiler {
     * whose per-key id equals `idExpr` (NULL columns when `outer` and the
     * id is out of range / the residual `pred` fails; row dropped when not
     * `outer` and there is no qualifying event — the historical inner-join
-    * contract). Shared by [[compileVariant]] and [[compileMulti]].
+    * contract). Planned by [[compileBatch]].
     */
   private final case class JoinPlan(name: String, idExpr: Column,
                                     streams: Seq[String], pred: Option[Column],
@@ -733,8 +806,8 @@ object PatternCompiler {
       texts.exists(t => p.matcher(t).find())
     }
 
-  /** Cost gate of [[fusedJoinBack]], shared by compileVariant and
-    * compileMulti (round 17, A/B-measured): the fused pivot's extra
+  /** Cost gate of [[fusedJoinBack]] in [[compileBatch]] (round 17,
+    * A/B-measured): the fused pivot's extra
     * matches-sized exchange only pays once it replaces enough lookups —
     * each aggregated step replaces its own explode+agg+join-back (~two
     * joins' worth). Below the threshold the per-name broadcast joins win:
@@ -839,54 +912,73 @@ object PatternCompiler {
     Some(out)
   }
 
-  private def emitAllRows(out: DataFrame, ordered: DataFrame,
-                          idsCols: Seq[String], emitSteps: Seq[PatternStep],
-                          items: Seq[(String, Option[String])],
-                          excluding: Seq[String],
-                          unmatched: Boolean): DataFrame = {
-    val classifiers = emitSteps.flatMap(_.aliases)
-    excluding.find(v => !classifiers.contains(v)).foreach(v =>
+  // ---- EMIT ALL ROWS measures, shared by the batch and both streaming
+  // emitters: CLASSIFIER()/MATCH_NUMBER() markers alias the columns the
+  // emitters append, RUNNING per-prefix aggregates are PER-ROW values
+  // resolved after the explode; everything else keeps FINAL semantics
+  // (constant per match, evaluated on the per-match relation)
+  private sealed trait MKind
+  private case object MNormal extends MKind
+  private case object MCls extends MKind
+  private case object MNum extends MKind
+  private final case class MRun(fn: String, v: String, c: String) extends MKind
+
+  /** `normalCols` evaluate the FINAL measures on the match relation under
+    * the names `normalNames`; `out` is every measure, in the user's
+    * order, with its kind and output name. */
+  private final case class AllRowsMeasures(normalCols: Seq[Column],
+                                           normalNames: Seq[String],
+                                           out: Seq[(MKind, String)]) {
+    def runItems: Seq[(MRun, String)] = out.collect { case (r: MRun, a) => (r, a) }
+    /** Output measure columns, after the emitted row's own columns. */
+    def columns: Seq[Column] = out.map {
+      case (MCls, a) => col("mr_classifier").as(a)
+      case (MNum, a) => col("mr_match_number").as(a)
+      case (_, n) => col(n)
+    }
+  }
+
+  /** Classify an EMIT ALL ROWS select and reject what no emitter can
+    * output: EXCLUDING or RUNNING over a non-variable, an unaliased
+    * per-row measure, a measure name that collides with an emitted stream
+    * column or a reserved output column. `guard` wraps each FINAL measure
+    * (the streaming WITH UNMATCHED NULLing). */
+  private def allRowsMeasures(items: Seq[(String, Option[String])],
+                              variables: Seq[String], excluding: Seq[String],
+                              matches: DataFrame, evCols: Seq[String],
+                              guard: Column => Column = identity): AllRowsMeasures = {
+    excluding.find(v => !variables.contains(v)).foreach(v =>
       throw GraftApp.SqlError(
         s"EXCLUDING names '$v' which is not a pattern step variable"))
-    // measure classification: CLASSIFIER()/MATCH_NUMBER() markers and
-    // RUNNING per-prefix aggregates are PER-ROW values, resolved after the
-    // explode; everything else keeps FINAL semantics (constant per match,
-    // evaluated on the per-match relation as before)
-    sealed trait MKind
-    case object MNormal extends MKind
-    case object MCls extends MKind
-    case object MNum extends MKind
-    final case class MRun(fn: String, v: String, c: String) extends MKind
     def needAlias(e: String, a: Option[String]): String = a.getOrElse(
       throw GraftApp.SqlError(
         s"EMIT ALL ROWS measure '${e.trim.take(40)}' needs an AS alias"))
     val kinds: Seq[(MKind, String)] = items.map { case (e, a) =>
-      e.trim.toLowerCase match {
-        case "__mr_classifier" => (MCls, needAlias(e, a))
-        case "__mr_match_number" => (MNum, needAlias(e, a))
-        case _ => e.trim match {
-          case RunningMarkerRe(fn, v, c) =>
-            if (!classifiers.contains(v)) throw GraftApp.SqlError(
-              s"RUNNING aggregate references '$v' which is not a pattern " +
-                "step variable")
-            (MRun(fn.toLowerCase, v, c), needAlias(e, a))
-          case _ => (MNormal, "") // name resolved from the select below
-        }
+      val t = e.trim.toLowerCase
+      if (t == "__mr_classifier") (MCls, needAlias(e, a))
+      else if (t == "__mr_match_number") (MNum, needAlias(e, a))
+      else e.trim match {
+        case RunningMarkerRe(fn, v, c) =>
+          if (!variables.contains(v)) throw GraftApp.SqlError(
+            s"RUNNING aggregate references '$v' which is not a pattern " +
+              "step variable")
+          (MRun(fn.toLowerCase, v, c), needAlias(e, a))
+        case _ if t.contains("__mr_running_") => throw GraftApp.SqlError(
+          "RUNNING must be a measure's entire aggregate — RUNNING agg(V.col)")
+        case _ => (MNormal, "") // name resolved from the select below
       }
     }
     val normalCols = items.zip(kinds).collect { case ((e, a), (MNormal, _)) =>
-      a.map(al => expr(e).as(al)).getOrElse(expr(e)) }
-    val keep = out.select((col("__mkey") +: idsCols.map(col)) ++ normalCols: _*)
-    val normalNames = keep.columns.drop(1 + idsCols.size).toSeq
+      a.map(al => guard(expr(e)).as(al)).getOrElse(guard(expr(e))) }
+    val normalNames = matches.select(normalCols: _*).columns.toSeq
     // stitch the user's measure order back together (normal names consumed
-    // in sequence; deferred kinds carry their own alias)
+    // in sequence; per-row kinds carry their own alias)
     val nIt = normalNames.iterator
-    val outMeasures: Seq[(MKind, String)] = kinds.map {
+    val out = kinds.map {
       case (MNormal, _) => (MNormal, nIt.next())
       case other => other
     }
-    val measureNames = outMeasures.map(_._2)
-    val evCols = ordered.columns.filterNot(_.startsWith("__")).toSeq
+    val measureNames = out.map(_._2)
     val clash = measureNames.intersect(evCols)
     if (clash.nonEmpty) throw GraftApp.SqlError(
       s"EMIT ALL ROWS: measure alias(es) ${clash.mkString(", ")} collide " +
@@ -896,7 +988,37 @@ object PatternCompiler {
       n.equalsIgnoreCase("mr_classifier") || n.equalsIgnoreCase("mr_match_number"))
       .foreach(n => throw GraftApp.SqlError(
         s"EMIT ALL ROWS reserves the output column name '$n'"))
-    val runItems = outMeasures.collect { case (r: MRun, a) => (r, a) }
+    AllRowsMeasures(normalCols, normalNames, out)
+  }
+
+  /** Per-row `mr_classifier` of one step chain, by the row's `__stepIdx`:
+    * a single-alternative step names its variable; an OR step names
+    * whichever ALTERNATIVE the row satisfies — `stream` tag + local
+    * predicate re-evaluated against the row, first textual alternative
+    * winning on ties (ANSI's alternation preference). */
+  private def stepClassifier(steps: Seq[PatternStep], stream: Column): Column =
+    steps.zipWithIndex.foldLeft(lit(null).cast("string")) { case (acc, (st, si)) =>
+      val inner =
+        if (st.alts.size == 1) lit(st.alts.head.alias)
+        else st.alts.foldRight(lit(null).cast("string")) { (alt, a2) =>
+          val cond = stream === alt.stream &&
+            alt.pred.map(p => expr(p)).getOrElse(lit(true))
+          when(cond, lit(alt.alias)).otherwise(a2)
+        }
+      when(col("__stepIdx") === si, inner).otherwise(acc)
+    }
+
+  private def emitAllRows(out: DataFrame, ordered: DataFrame,
+                          idsCols: Seq[String], emitSteps: Seq[PatternStep],
+                          items: Seq[(String, Option[String])],
+                          excluding: Seq[String],
+                          unmatched: Boolean): DataFrame = {
+    val evCols = ordered.columns.filterNot(_.startsWith("__")).toSeq
+    val ms = allRowsMeasures(items, emitSteps.flatMap(_.aliases), excluding,
+      out, evCols)
+    val normalNames = ms.normalNames
+    val keep = out.select((col("__mkey") +: idsCols.map(col)) ++ ms.normalCols: _*)
+    val runItems = ms.runItems
     runItems.foreach { case (r, _) =>
       if (!evCols.exists(_.equalsIgnoreCase(r.c))) throw GraftApp.SqlError(
         s"RUNNING ${r.fn}(${r.v}.${r.c}): '${r.c}' is not a stream column")
@@ -934,24 +1056,11 @@ object PatternCompiler {
         "transform(a, e -> named_struct('__stepIdx', si, '__eid', e)))))"): _*)
     var rows = perStep.join(ordered.as("__row"),
       col("__row.__id") === col("__eid") && col("__row.__key") === col("__mkey"))
-    // classifier per ROW (round 12b): single-alternative steps name their
-    // variable; an OR step's classifier is whichever ALTERNATIVE the
-    // matched row satisfies — re-evaluated against the row (stream tag +
-    // local predicate), first textual alternative winning on ties (ANSI's
-    // alternation preference). Bare refs resolve to the __row side: the
-    // collision checks above guarantee measure aliases never shadow them.
-    val clsCol = emitSteps.zipWithIndex.foldLeft(lit(null).cast("string")) {
-      case (acc, (st, si)) =>
-        val inner =
-          if (st.alts.size == 1) lit(st.alts.head.alias)
-          else st.alts.foldRight(lit(null).cast("string")) { (alt, a2) =>
-            val cond = col("__row.__stream") === alt.stream &&
-              alt.pred.map(p => expr(p)).getOrElse(lit(true))
-            when(cond, lit(alt.alias)).otherwise(a2)
-          }
-        when(col("__stepIdx") === si, inner).otherwise(acc)
-    }
-    rows = rows.withColumn("mr_classifier", clsCol)
+    // classifier per ROW (round 12b). Bare refs in OR predicates resolve
+    // to the __row side: the collision checks guarantee measure aliases
+    // never shadow them.
+    rows = rows.withColumn("mr_classifier",
+      stepClassifier(emitSteps, col("__row.__stream")))
     // RUNNING measures: a per-prefix window over the match's exploded rows
     // in event order (__eid = per-key row_number). Excluded rows still feed
     // the window (ANSI: exclusion affects OUTPUT only) — filtered after.
@@ -977,12 +1086,7 @@ object PatternCompiler {
     val kept =
       if (excluding.isEmpty) rows
       else rows.filter(!col("mr_classifier").isin(excluding: _*))
-    val mCols = outMeasures.map {
-      case (MCls, a) => col("mr_classifier").as(a)
-      case (MNum, a) => col("mr_match_number").as(a)
-      case (_, n) => col(n)
-    }
-    val matched = kept.select(evCols.map(c => col(s"__row.$c")) ++ mCols ++
+    val matched = kept.select(evCols.map(c => col(s"__row.$c")) ++ ms.columns ++
       Seq(col("mr_match_number"), col("mr_classifier")): _*)
     // WITH UNMATCHED: union the input rows NO match claimed, measures and
     // classifier/number NULL (typed from the matched side's schema). The
@@ -1251,17 +1355,11 @@ object PatternCompiler {
     else array(svalReg.keys.toSeq.map(c =>
       overrides.getOrElse(c, col(c)).cast("string")): _*)
 
-  private def streamVariant(q: PatternQuery, steps0: Seq[PatternStep],
+  private def streamVariant(q: PatternQuery, steps: Seq[PatternStep],
                             evs: DataFrame): DataFrame = {
     val colTypes: Map[String, String] =
       evs.schema.fields.map(f => f.name.toLowerCase -> f.dataType.sql).toMap
-    // min=0 no-step branch: NULL-pad refs to this variant's omitted aliases
-    val omitted = q.variants.flatMap(_.flatMap(_.aliases)).toSet --
-      steps0.flatMap(_.aliases).toSet
-    val padAbsent = absentAliasRewriter(omitted, c => colTypes.get(c.toLowerCase))
-    val steps = steps0.map(st => st.copy(alts = st.alts.map(a =>
-      a.copy(pred = a.pred.map(padAbsent)))))
-    val nb = classifySteps(q, steps)
+    val nb = classifySteps(steps)
 
     // slot registry: source column -> svals index; refs rewrite to a slot
     // extraction cast back to the column's type
@@ -1273,7 +1371,7 @@ object PatternCompiler {
           throw GraftApp.SqlError(s"pattern select references unknown column '$colName'")
         svalReg.getOrElseUpdate(colName, svalReg.size)
     }
-    val rewrite = streamRewriter(q, steps0, colTypes, slot)
+    val rewrite = streamRewriter(q, steps, colTypes, slot)
     val items = q.selectItems.map { case (e, a) => (rewrite(e), a) }
     val whereRw = q.where.map(rewrite)
 
@@ -1287,7 +1385,7 @@ object PatternCompiler {
     val svalExpr = scala.collection.mutable.LinkedHashMap.empty[String, Column]
     if (q.allRows) {
       evs.columns.filterNot(_.startsWith("__")).foreach(slot)
-      if (steps0.exists(_.alts.size > 1)) slot("__stream")
+      if (steps.exists(_.alts.size > 1)) slot("__stream")
       // RUNNING over an OR ALTERNATIVE (round 13): the step buffer
       // interleaves alternatives, so the prefix fold needs per-event
       // attribution. A dedicated derived slot per (alternative, column) —
@@ -1383,68 +1481,24 @@ object PatternCompiler {
                                 colTypes: Map[String, String],
                                 slot: String => Int,
                                 items: Seq[(String, Option[String])]): DataFrame = {
-    val allAliases = steps.flatMap(_.aliases)
-    q.allRowsExcluding.find(v => !allAliases.contains(v)).foreach(v =>
-      throw GraftApp.SqlError(
-        s"EXCLUDING names '$v' which is not a pattern step variable"))
     val hasOr = steps.exists(_.alts.size > 1)
-    // per-row measure kinds: CLASSIFIER()/MATCH_NUMBER() alias the columns
-    // this lowering appends anyway; RUNNING (round 12b, streams too) is a
-    // PREFIX aggregate over buffers the NFA already holds — a match's rows
-    // all emit at completion, so the per-row re-aggregation is a slice
-    // fold over the state that produced them, no retraction involved
-    sealed trait MKind
-    case object MNormal extends MKind
-    case object MCls extends MKind
-    case object MNum extends MKind
-    final case class MRun(fn: String, v: String, c: String) extends MKind
-    def needAlias(e: String, a: Option[String]): String = a.getOrElse(
-      throw GraftApp.SqlError(
-        s"EMIT ALL ROWS measure '${e.trim.take(40)}' needs an AS alias"))
-    val kinds: Seq[(MKind, String)] = items.map { case (e, a) =>
-      val t = e.trim.toLowerCase
-      if (t == "__mr_classifier") (MCls, needAlias(e, a))
-      else if (t == "__mr_match_number") (MNum, needAlias(e, a))
-      else e.trim match {
-        case RunningMarkerRe(fn, v, c) => (MRun(fn.toLowerCase, v, c), needAlias(e, a))
-        case _ if t.contains("__mr_running_") => throw GraftApp.SqlError(
-          "RUNNING must be a measure's entire aggregate — RUNNING agg(V.col)")
-        case _ => (MNormal, "")
-      }
-    }
     // measures NULL out on WITH UNMATCHED pseudo-matches (matchSeq = -1)
     val guard = (c: Column) =>
       if (q.allRowsUnmatched) when(col("matchSeq") === -1L, lit(null)).otherwise(c)
       else c
-    val normalCols = items.zip(kinds).collect { case ((e, a), (MNormal, _)) =>
-      a.map(al => guard(expr(e)).as(al)).getOrElse(guard(expr(e))) }
-    val normalNames = matches.select(normalCols: _*).columns.toSeq
-    val nIt = normalNames.iterator
-    val outMeasures: Seq[(MKind, String)] = kinds.map {
-      case (MNormal, _) => (MNormal, nIt.next())
-      case other => other
-    }
-    val measureNames = outMeasures.map(_._2)
     val evCols = evs.columns.filterNot(_.startsWith("__")).toSeq
-    val clash = measureNames.intersect(evCols)
-    if (clash.nonEmpty) throw GraftApp.SqlError(
-      s"EMIT ALL ROWS: measure alias(es) ${clash.mkString(", ")} collide " +
-        "with the stream's own columns (every input column is emitted per " +
-        "matched row) — rename the measure")
-    (measureNames ++ evCols).find(n =>
-      n.equalsIgnoreCase("mr_classifier") || n.equalsIgnoreCase("mr_match_number"))
-      .foreach(n => throw GraftApp.SqlError(
-        s"EMIT ALL ROWS reserves the output column name '$n'"))
-    // RUNNING (streaming): the prefix aggregate for an emitted row reads
-    // variable V's buffered events at-or-before that row in processing
-    // order — see runExprFor. Excluded steps still feed these buffers
-    // (ANSI: exclusion is output-only), because the prefixes read the
-    // match STATE, not the emitted rows.
-    val runItems = outMeasures.collect { case (r: MRun, a) => (r, a) }
+    val ms = allRowsMeasures(items, steps.flatMap(_.aliases), q.allRowsExcluding,
+      matches, evCols, guard)
+    // RUNNING (round 12b, streams too) is a PREFIX aggregate over buffers
+    // the NFA already holds — a match's rows all emit at completion, so
+    // the per-row re-aggregation is a slice fold over the state that
+    // produced them, no retraction involved. The prefix for an emitted row
+    // reads variable V's buffered events at-or-before that row in
+    // processing order. Excluded steps still feed these buffers (ANSI:
+    // exclusion is output-only), because the prefixes read the match
+    // STATE, not the emitted rows.
     def runExprFor(r: MRun): String = {
       val k = steps.indexWhere(_.aliases.contains(r.v))
-      if (k < 0) throw GraftApp.SqlError(
-        s"RUNNING aggregate references '${r.v}' which is not a pattern step variable")
       val t = colTypes.getOrElse(r.c.toLowerCase, throw GraftApp.SqlError(
         s"RUNNING ${r.fn}(${r.v}.${r.c}): '${r.c}' is not a stream column"))
       // OR step (round 13): the buffer interleaves alternatives, so the
@@ -1490,14 +1544,14 @@ object PatternCompiler {
     // WITH UNMATCHED pseudo-matches (matchSeq = -1, one buffered row)
     // flow through the same pipeline: their measures/markers NULL out via
     // the __mseq guards below.
-    var exploded = matches.select(normalCols ++ Seq(
+    var exploded = matches.select(ms.normalCols ++ Seq(
       guard(col("matchSeq")).as("mr_match_number"),
       col("matchSeq").as("__mseq"),
       col("steps").as("__steps"),
       expr("inline(flatten(transform(steps, (s, si) -> " +
         "transform(s.events, (e, p) -> " +
         "named_struct('__stepIdx', si, '__pos', p, '__ev', e)))))")): _*)
-    runItems.foreach { case (r, a) =>
+    ms.runItems.foreach { case (r, a) =>
       val body = runExprFor(r)
       val e0 =
         if (q.allRowsUnmatched)
@@ -1507,16 +1561,13 @@ object PatternCompiler {
     }
     val perStep = exploded.drop("__steps", "__pos")
     // materialize the source columns (and, under OR steps, the stream tag)
-    // from the svals slots, then resolve the per-row classifier: single-
-    // alternative steps name their variable; an OR step's classifier is
-    // whichever ALTERNATIVE the row satisfies — (stream, local predicate)
-    // re-evaluated on the reconstructed row, first textual alternative
-    // winning (ANSI's alternation preference)
+    // from the svals slots, then resolve the per-row classifier on the
+    // reconstructed row
     val srcCols = evCols.map(c =>
       expr(s"CAST(__ev.svals[${slot(c)}] AS ${colTypes(c.toLowerCase)})").as(c))
-    val matCols = outMeasures.collect {
+    val matCols = ms.out.collect {
       case (MNormal, n) => col(n)
-      case (r: MRun, a) => col(a)
+      case (_: MRun, a) => col(a)
     }
     val streamTag =
       if (hasOr) Seq(expr(s"CAST(__ev.svals[${slot("__stream")}] AS STRING)")
@@ -1524,17 +1575,7 @@ object PatternCompiler {
       else Nil
     val withSrc = perStep.select(srcCols ++ matCols ++
       Seq(col("mr_match_number"), col("__stepIdx"), col("__mseq")) ++ streamTag: _*)
-    val clsCol0 = steps.zipWithIndex.foldLeft(lit(null).cast("string")) {
-      case (acc, (st, si)) =>
-        val inner =
-          if (st.alts.size == 1) lit(st.alts.head.alias)
-          else st.alts.foldRight(lit(null).cast("string")) { (alt, a2) =>
-            val cond = col("__stream") === alt.stream &&
-              alt.pred.map(p => expr(p)).getOrElse(lit(true))
-            when(cond, lit(alt.alias)).otherwise(a2)
-          }
-        when(col("__stepIdx") === si, inner).otherwise(acc)
-    }
+    val clsCol0 = stepClassifier(steps, col("__stream"))
     // WITH UNMATCHED pseudo-rows carry a NULL classifier (ANSI)
     val clsCol =
       if (q.allRowsUnmatched)
@@ -1548,12 +1589,7 @@ object PatternCompiler {
       if (q.allRowsExcluding.isEmpty) rowsCls
       else rowsCls.filter(col("mr_classifier").isNull ||
         !col("mr_classifier").isin(q.allRowsExcluding: _*))
-    val mCols = outMeasures.map {
-      case (MCls, a) => col("mr_classifier").as(a)
-      case (MNum, a) => col("mr_match_number").as(a)
-      case (_, n) => col(n)
-    }
-    kept.select(evCols.map(col) ++ mCols ++
+    kept.select(evCols.map(col) ++ ms.columns ++
       Seq(col("mr_match_number"), col("mr_classifier")): _*)
   }
 
@@ -1681,41 +1717,14 @@ object PatternCompiler {
                                      colTypes: Map[String, String],
                                      slot: String => Int,
                                      items: Seq[(String, Option[String])]): DataFrame = {
-    val allAliases = q.variants.flatten.flatMap(_.aliases).distinct
-    q.allRowsExcluding.find(v => !allAliases.contains(v)).foreach(v =>
-      throw GraftApp.SqlError(
-        s"EXCLUDING names '$v' which is not a pattern step variable"))
     val hasOr = q.variants.exists(_.exists(_.alts.size > 1))
-    // marker kinds from the RAW select texts (markers are whole
-    // expressions, variant-invariant, and survive the per-variant CASE
-    // rewrite untouched); RUNNING was rejected at the gate
-    sealed trait MKind
-    case object MNormal extends MKind
-    case object MCls extends MKind
-    case object MNum extends MKind
-    val kinds: Seq[(MKind, String)] = q.selectItems.zip(items).map {
-      case ((raw, a0), (_, a)) =>
-        val alias = a.orElse(a0).getOrElse(raw.trim)
-        raw.trim.toLowerCase match {
-          case "__mr_classifier" => (MCls, alias)
-          case "__mr_match_number" => (MNum, alias)
-          case _ => (MNormal, alias)
-        }
-    }
-    val normalCols = items.zip(kinds).collect { case ((e, a), (MNormal, al)) =>
-      expr(e).as(a.getOrElse(al)) }
-    val measureNames = kinds.map(_._2)
+    // markers are whole expressions, variant-invariant, so they survive the
+    // per-variant CASE rewrite untouched; every item carries an alias, and
+    // RUNNING was rejected at the gate
     val evCols = evs.columns.filterNot(_.startsWith("__")).toSeq
-    val clash = measureNames.intersect(evCols)
-    if (clash.nonEmpty) throw GraftApp.SqlError(
-      s"EMIT ALL ROWS: measure alias(es) ${clash.mkString(", ")} collide " +
-        "with the stream's own columns (every input column is emitted per " +
-        "matched row) — rename the measure")
-    (measureNames ++ evCols).find(n =>
-      n.equalsIgnoreCase("mr_classifier") || n.equalsIgnoreCase("mr_match_number"))
-      .foreach(n => throw GraftApp.SqlError(
-        s"EMIT ALL ROWS reserves the output column name '$n'"))
-    val exploded = matches.select(normalCols ++ Seq(
+    val ms = allRowsMeasures(items, q.variants.flatten.flatMap(_.aliases).distinct,
+      q.allRowsExcluding, matches, evCols)
+    val exploded = matches.select(ms.normalCols ++ Seq(
       col("matchSeq").as("mr_match_number"),
       col("variant").as("__variant"),
       expr("inline(flatten(transform(steps, (s, si) -> " +
@@ -1727,36 +1736,20 @@ object PatternCompiler {
       if (hasOr) Seq(expr(s"CAST(__ev.svals[${slot("__stream")}] AS STRING)")
         .as("__stream"))
       else Nil
-    val matCols = kinds.collect { case (MNormal, n) => col(n) }
-    val withSrc = exploded.select(srcCols ++ matCols ++
+    val withSrc = exploded.select(srcCols ++ ms.normalNames.map(col) ++
       Seq(col("mr_match_number"), col("__variant"), col("__stepIdx")) ++ streamTag: _*)
     // classifier: (variant, step position) → the variant chain's alias at
     // that position; OR steps discriminate alternatives like single-chain
     val clsCol = q.variants.zipWithIndex.foldLeft(lit(null).cast("string")) {
       case (acc, (chain, vi)) =>
-        val inner = chain.zipWithIndex.foldLeft(lit(null).cast("string")) {
-          case (acc2, (st, si)) =>
-            val stepCls =
-              if (st.alts.size == 1) lit(st.alts.head.alias)
-              else st.alts.foldRight(lit(null).cast("string")) { (alt, a2) =>
-                val cond = col("__stream") === alt.stream &&
-                  alt.pred.map(p => expr(p)).getOrElse(lit(true))
-                when(cond, lit(alt.alias)).otherwise(a2)
-              }
-            when(col("__stepIdx") === si, stepCls).otherwise(acc2)
-        }
-        when(col("__variant") === vi, inner).otherwise(acc)
+        when(col("__variant") === vi, stepClassifier(chain, col("__stream")))
+          .otherwise(acc)
     }
     val rowsCls = withSrc.withColumn("mr_classifier", clsCol)
     val kept =
       if (q.allRowsExcluding.isEmpty) rowsCls
       else rowsCls.filter(!col("mr_classifier").isin(q.allRowsExcluding: _*))
-    val mCols = kinds.map {
-      case (MCls, a) => col("mr_classifier").as(a)
-      case (MNum, a) => col("mr_match_number").as(a)
-      case (MNormal, n) => col(n)
-    }
-    kept.select(evCols.map(col) ++ mCols ++
+    kept.select(evCols.map(col) ++ ms.columns ++
       Seq(col("mr_match_number"), col("mr_classifier")): _*)
   }
 
@@ -1787,8 +1780,7 @@ object PatternCompiler {
     ids.toSeq
   }
   private final case class NfaBuild(bits: Column, valsCol: Column,
-                                    specSteps: Seq[Step],
-                                    perAltLocal: Seq[Seq[Option[String]]])
+                                    specSteps: Seq[Step])
 
   /** Per-step predicate split for one step chain: each alt's predicate
     * decomposes into LOCAL conjuncts (evaluable on the candidate event
@@ -1926,7 +1918,7 @@ object PatternCompiler {
     else base
   }
 
-  private def classifySteps(q: PatternQuery, steps: Seq[PatternStep]): NfaBuild = {
+  private def classifySteps(steps: Seq[PatternStep]): NfaBuild = {
     val valReg = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val classified = classifyChain(steps, e => valReg.getOrElseUpdate(e.trim, valReg.size))
     val bits = concat(steps.zip(classified).map { case (st, (perAlt, _)) =>
@@ -1935,302 +1927,7 @@ object PatternCompiler {
     val specSteps = steps.zipWithIndex.map { case (st, i) =>
       nfaStep(st, i, classified(i)._2)
     }
-    NfaBuild(bits, valsColumn(valReg), specSteps, classified.map(_._1))
-  }
-
-  // ---- one step-chain variant → matches → resolved select
-
-  private def compileVariant(spark: SparkSession, q: PatternQuery,
-                             steps0: Seq[PatternStep], ordered: DataFrame,
-                             onPersist: DataFrame => Unit = _ => ()): DataFrame = {
-    import spark.implicits._
-    // duplicate aliases across steps would make join-back ambiguous
-    val dup = steps0.flatMap(_.aliases).groupBy(identity).collect { case (a, as) if as.size > 1 => a }
-    if (dup.nonEmpty)
-      throw GraftApp.SqlError(s"duplicate step alias(es) ${dup.mkString(",")} across steps")
-
-    // aliases present in OTHER variants but not this one (a min=0 step's
-    // no-step branch): their refs NULL-pad so the variant union lines up
-    val omitted = q.variants.flatMap(_.flatMap(_.aliases)).toSet --
-      steps0.flatMap(_.aliases).toSet
-    val padAbsent = absentAliasRewriter(omitted, c =>
-      ordered.schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType.sql))
-    val steps = steps0.map(st => st.copy(alts = st.alts.map(a =>
-      a.copy(pred = a.pred.map(padAbsent)))))
-
-    val nb = classifySteps(q, steps)
-
-    val cepIn = ordered.withColumn("__bits", nb.bits).select(
-        col("__key").as("key"),
-        unix_micros(col("ts")).as("tsUs"),
-        col("__id").as("eventId"),
-        col("__bits").as("etype"),
-        lit(0.0).as("value"),
-        nb.valsCol.as("vals"),
-        typedlit(Seq.empty[String]).as("svals"))
-      .as[CepEvent]
-    val spec = PatternSpec(nb.specSteps, strict = q.strict, every = q.every,
-      withinUs = q.withinUs, withinEvents = q.withinEvents)
-    requireBoundedState(spec)
-    // SKIP PAST LAST ROW / SKIP TO FIRST|LAST: the incremental
-    // consume-on-match NFA ([[Cep.detect]] with a skip selection) emits the greedy
-    // leftmost non-overlapping subset directly — the full EVERY match set
-    // is never materialized (a k-row monotone streak costs O(k), not the
-    // O(k²) collected events of enumerate-then-filter), and every
-    // downstream join/aggregation runs over the selected set only
-    // the match relation feeds BOTH the scalar join-backs and the
-    // aggregate explode — without a persist the NFA MapGroups runs once
-    // per consumer (round 14: measured 2x the kernel cost on every
-    // aggregate-bearing pattern query); the relation is matches-sized
-    // (small), registered for end-of-run unpersist like `ordered`
-    val matches = {
-      val m =
-        Cep.detect(cepIn, spec, selection = q.selection(steps)).toDF()
-      val p = m.persist()
-      onPersist(p)
-      p
-    }
-
-    // base projection: key + match end time + per-step matched-event-id
-    // arrays (+ per-step end timestamps when NOT guards need FOR anchors)
-    var base = matches.select(
-      col("key").as("__mkey") +: col("endUs").as("__endUs") +:
-      (steps.indices.map { i =>
-        expr(s"transform(steps[$i].events, x -> x.eventId)").as(s"__ids_$i")
-      } ++ (if (q.absents.isEmpty) Nil else steps.indices.map { i =>
-        expr(s"element_at(steps[$i].events, -1).tsUs").as(s"__endts_$i")
-      })): _*)
-    // ---- select/WHERE rewriting + join planning
-    val multi = steps.zipWithIndex.collect { case (st, i) if st.max > 1 || st.looped =>
-      st.aliases.head -> i
-    }.toMap
-    if (multi.nonEmpty && steps.exists(st => st.max > 1 && st.alts.size > 1))
-      throw GraftApp.SqlError("count quantifiers on OR steps are not supported")
-    // steps whose buffer may be EMPTY in a completed match: members of a
-    // zero-min inner group (round 16 — the zero-iteration derivation)
-    val maybeEmpty: Int => Boolean = steps.zipWithIndex.collect {
-      case (st, li) if st.innerLoopBack >= 0 && st.innerMinIters == 0 =>
-        (li - st.innerLoopBack) to li
-    }.flatten.toSet
-
-    // joins: joinName -> (idExpr over base, streams, alias-qualified
-    // residual predicate for OR alternatives, outer?)
-    val joins = scala.collection.mutable.LinkedHashMap.empty[String, JoinPlan]
-    // collection aggregations: stepIdx -> (outputCol, aggSql over alias __c)
-    val aggItems = scala.collection.mutable.LinkedHashMap.empty[Int, Vector[(String, String)]]
-    var aggN = 0
-
-    def idAt(i: Int, idx: String): Column = idx.replaceAll("\\s", "") match {
-      case "last" => element_at(col(s"__ids_$i"), -1)
-      // `last-k` counts back from the buffer end (MEASURES LAST(V.x, k));
-      // try_: past the collected count is NULL, not an ANSI error
-      case s if s.startsWith("last-") =>
-        try_element_at(col(s"__ids_$i"), lit(-(1 + s.stripPrefix("last-").toInt)))
-      // try_: an index past a range quantifier's collected count is NULL
-      // (the left join then yields NULL columns), not an ANSI error
-      case n => try_element_at(col(s"__ids_$i"), lit(n.toInt + 1))
-    }
-
-    // register joins for every single-event alias (matched id is always
-    // present; OR alternatives join left so the unmatched side is NULL).
-    // An OR alternative's join re-applies its LOCAL predicate, alias-
-    // qualified — same-stream alternatives would otherwise BOTH bind the
-    // matched event instead of NULLing the one whose predicate failed.
-    def qualify(alias: String, pred: String): Column = {
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-      val parsed = spark.sessionState.sqlParser.parseExpression(pred).transform {
-        case ua: UnresolvedAttribute if ua.nameParts.size == 1 =>
-          UnresolvedAttribute(alias +: ua.nameParts)
-      }
-      org.apache.spark.sql.graftbridge.Bridge.column(parsed)
-    }
-    steps.zip(nb.perAltLocal).zipWithIndex.foreach { case ((st, perAlt), i) =>
-      if (st.max == 1 && !st.looped) {
-        val outer = st.aliases.size > 1
-        st.aliases.foreach { a =>
-          val altIdx = st.alts.indexWhere(_.alias == a)
-          val altStreams = st.alts.filter(_.alias == a).map(_.stream)
-          val residual =
-            if (outer) perAlt(altIdx).map(p => qualify(a, p)) else None
-          joins(a) = JoinPlan(a, element_at(col(s"__ids_$i"), 1), altStreams, residual, outer)
-        }
-      }
-    }
-
-    val aggRe = """(?i)\b(sum|avg|min|max|count)\s*\(\s*(\w+)\s*\.\s*(\w+)\s*\)""".r
-    val countStepRe = """(?i)\bcount\s*\(\s*(\w+)\s*\)""".r
-    val idxRe = """\b(\w+)\s*\[\s*(\d+|last(?:\s*-\s*\d+)?)\s*\]\s*\.""".r
-    val navRe = """(?i)\b(prev|next)\s*\(\s*(\w+)\s*\.\s*(\w+)\s*(?:,\s*(\d+)\s*)?\)""".r
-    val allStreams = q.allAlts.map(_.stream).distinct
-
-    def rewrite(text0: String): String = {
-      // EMIT ALL ROWS RUNNING marker: opaque here (resolved post-explode)
-      if (RunningMarkerRe.findFirstMatchIn(text0).isDefined) return text0
-      var text = padAbsent(text0)
-      // physical navigation PREV(V.x, k) / NEXT(V.x, k): the row k PLACES
-      // before/after V's LAST matched event in the per-key event-time
-      // order (ANSI MATCH_RECOGNIZE's physical offsets, anchored at the
-      // variable's final row). Event ids are per-key row_numbers, so the
-      // neighbor id is plain arithmetic; the left join yields NULL at the
-      // partition edge — exactly PREV/NEXT's out-of-range contract.
-      text = navRe.replaceAllIn(text, m => {
-        val (fn, alias, c) = (m.group(1).toLowerCase, m.group(2), m.group(3))
-        val k = Option(m.group(4)).map(_.toInt).getOrElse(1)
-        steps.indices.find(i => steps(i).aliases.contains(alias)) match {
-          case Some(i) =>
-            if (steps(i).alts.size > 1) throw GraftApp.SqlError(
-              s"$fn() navigation is not supported on OR steps ('$alias')")
-            val delta = if (fn == "prev") -k else k
-            val name = s"__nav_${fn}_${alias}_$k"
-            joins.getOrElseUpdate(name,
-              JoinPlan(name, idAt(i, "last") + lit(delta), allStreams,
-                pred = None, outer = true))
-            s"$name.$c"
-          case None => throw GraftApp.SqlError(
-            s"$fn() references '$alias' which is not a pattern step alias")
-        }
-      })
-      // collection aggregations over count-quantified steps. A zero-min
-      // inner group's member may hold an EMPTY buffer (round 16) — its
-      // aggregate left-joins below and count coalesces to the zero-repeat
-      // 0 (sum/avg/min/max stay NULL, ANSI's empty-aggregate contract)
-      text = aggRe.replaceAllIn(text, m => {
-        val (fn, alias, c) = (m.group(1), m.group(2), m.group(3))
-        multi.get(alias) match {
-          case Some(i) =>
-            val name = s"__agg_$aggN"; aggN += 1
-            aggItems(i) = aggItems.getOrElse(i, Vector.empty) :+
-              (name, s"${fn.toLowerCase}(__c.$c)")
-            if (fn.equalsIgnoreCase("count") && maybeEmpty(i))
-              s"coalesce($name, CAST(0 AS BIGINT))"
-            else name
-          case None => java.util.regex.Matcher.quoteReplacement(m.matched)
-        }
-      })
-      // count(e) over a quantified step = collected size
-      text = countStepRe.replaceAllIn(text, m => {
-        multi.get(m.group(1)) match {
-          case Some(i) => s"CAST(size(__ids_$i) AS BIGINT)"
-          case None => java.util.regex.Matcher.quoteReplacement(m.matched)
-        }
-      })
-      // indexed access e[j].col / e[last].col
-      text = idxRe.replaceAllIn(text, m => {
-        val (alias, idx) = (m.group(1), m.group(2))
-        steps.indices.find(i => steps(i).aliases.contains(alias) &&
-            (steps(i).max > 1 || steps(i).looped)) match {
-          case Some(i) =>
-            // sanitize `last-k` for the SQL alias ('-' would parse as minus)
-            val name = s"__${alias}_${idx.replaceAll("\\s", "").replace("-", "_m")}"
-            joins.getOrElseUpdate(name,
-              JoinPlan(name, idAt(i, idx), steps(i).alts.map(_.stream),
-                pred = None, outer = true)) // index may exceed collected count
-            s"$name."
-          case None => java.util.regex.Matcher.quoteReplacement(m.matched)
-        }
-      })
-      // plain e.col on a quantified step = first collected event
-      multi.foreach { case (alias, i) =>
-        val plainRe = ("\\b" + alias + "\\s*\\.").r
-        if (plainRe.findFirstIn(text).isDefined) {
-          val name = s"__${alias}_0"
-          joins.getOrElseUpdate(name,
-            JoinPlan(name, idAt(i, "0"), steps(i).alts.map(_.stream),
-              pred = None, outer = false))
-          text = plainRe.replaceAllIn(text, s"$name.")
-        }
-      }
-      text
-    }
-
-    val items = q.selectItems.map { case (e, a) => (rewrite(e), a) }
-    val whereRw = q.where.map(rewrite)
-
-    val aggStepsSeq = aggItems.toSeq.map { case (i, its) => (s"__ids_$i", its: Seq[(String, String)]) }
-    val livePlans = pruneUnreferenced(joins.values.toSeq,
-      items.map(_._1) ++ whereRw.toSeq)
-    var out = (if (fuseJoinBack(livePlans.size, aggStepsSeq.size))
-        fusedJoinBack(base, ordered, livePlans, aggStepsSeq)
-      else None)
-      .getOrElse {
-      // legacy per-name join path (below the fuse threshold, or a lookup
-      // name shadows a base column):
-      // one join per alias, one explode+agg+join-back per quantified step
-      //
-      // FIXED-SIZE match identity for re-joining aggregates (round 13): a
-      // match within a key is determined by its (first id, count) per
-      // step — membership follows deterministically from start + counts
-      // (the distinctPartials invariant) — so the identity is O(steps)
-      // bytes; the old full-ids concat_ws string was O(match length) and
-      // the aggItems explode duplicated it onto every exploded row
-      // (O(len²) per match, an OOM on adversarial streaks —
-      // SkipStreakBench pins the fix)
-      val needMatchId = aggItems.nonEmpty
-      if (needMatchId) {
-        val idParts = steps.indices.flatMap(i => Seq(
-          coalesce(try_element_at(col(s"__ids_$i"), lit(1)), lit(-1L)),
-          coalesce(size(col(s"__ids_$i")).cast("long"), lit(-1L))))
-        base = base.withColumn("__match_id", struct(col("__mkey") +: idParts: _*))
-      }
-      var o = base
-      livePlans.foreach { j =>
-        var cond = col(s"${j.name}.__id") === j.idExpr &&
-          col(s"${j.name}.__key") === col("__mkey") &&
-          col(s"${j.name}.__stream").isin(j.streams: _*)
-        j.pred.foreach(p => cond = cond && p)
-        o = o.join(ordered.as(j.name), cond, if (j.outer) "left_outer" else "inner")
-      }
-      aggItems.foreach { case (i, items) =>
-        val exploded = base
-          .select(col("__match_id"), col("__mkey"), explode(col(s"__ids_$i")).as("__eid"))
-          .join(ordered.as("__c"),
-            col("__c.__id") === col("__eid") && col("__c.__key") === col("__mkey"))
-        val aggCols = items.map { case (name, sql) => expr(sql).as(name) }
-        val agg = exploded.groupBy(col("__match_id")).agg(aggCols.head, aggCols.tail: _*)
-        // a zero-min inner member's buffer may be EMPTY: its explode yields
-        // no rows for the match, so an inner join would DROP every
-        // zero-iteration match — left join, count coalesces at the item
-        o = o.join(agg, Seq("__match_id"),
-          if (maybeEmpty(i)) "left" else "inner")
-      }
-      o
-    }
-    whereRw.foreach(w => out = out.filter(expr(w)))
-
-    // NOT guards: anti-join against the absent stream's matching events in
-    // the guarded gap (arrival order via per-key __id). FOR narrows the
-    // guard to d after the ANCHORING step's match — mandatory on trailing
-    // guards (unbounded absence is undecidable), optional mid-chain (the
-    // next step's match bounds the gap; FOR additionally bounds it in
-    // time). Result-level form of the absent pattern — the streaming flush
-    // variant is Cep.detectStream with trailing guards.
-    q.absents.foreach { a =>
-      val ab0 = ordered.filter(col("__stream") === a.alt.stream)
-      val ab = a.alt.pred.map(p => ab0.filter(expr(p))).getOrElse(ab0)
-        .select(col("__key").as("__akey"), col("__id").as("__aid"),
-          unix_micros(col("ts")).as("__ats"))
-      val lower = element_at(col(s"__ids_${a.afterStep}"), -1)
-      var cond = col("__akey") === col("__mkey") && col("__aid") > lower
-      if (a.afterStep < steps.size - 1)
-        cond = cond && col("__aid") < element_at(col(s"__ids_${a.afterStep + 1}"), 1)
-      a.forUs.foreach(d =>
-        cond = cond && col("__ats") <= col(s"__endts_${a.afterStep}") + d)
-      out = out.join(ab, cond, "left_anti")
-    }
-
-    if (q.allRows)
-      return emitAllRows(out, ordered, steps.indices.map(i => s"__ids_$i"),
-        steps, items, q.allRowsExcluding, q.allRowsUnmatched)
-
-    val selectCols = items.map {
-      case (e, Some(a)) => expr(e).as(a)
-      case (e, None) => expr(e)
-    }
-    // deterministic (key, first-id-per-step) order, the long-standing
-    // single-variant output contract (multi-variant patterns compile via
-    // [[compileMulti]], which sorts once over the final output columns)
-    out.orderBy(col("__mkey") +: steps.indices.map(i => element_at(col(s"__ids_$i"), 1)): _*)
-      .select(selectCols: _*)
+    NfaBuild(bits, valsColumn(valReg), specSteps)
   }
 
   // ---- parsing
@@ -2744,7 +2441,7 @@ object PatternCompiler {
   }
 
   /** Hard cap on the step-order variants one pattern may expand to. All
-    * variant NFAs fold inside ONE per-key pass ([[compileMulti]] /
+    * variant NFAs fold inside ONE per-key pass ([[compileBatch]] /
     * [[Cep.detectMulti]]) — the cap bounds the per-key CPU of that fold
     * and the compile cost, not shuffle count (3-way AND = 6,
     * (A->B) AND C = 3, one star step ×2 — real shapes sit far below it).
@@ -2852,20 +2549,27 @@ object PatternCompiler {
 
   // ---- text utilities (depth-aware: parens, brackets, single quotes)
 
+  /** Index just past the `)` closing a paren whose content starts at
+    * `from`, skipping parens inside single-quoted literals; -1 when the
+    * text ends first. */
+  private[sql] def closeParen(s: String, from: Int): Int = {
+    var depth = 1; var inQ = false; var i = from
+    while (i < s.length && depth > 0) {
+      val c = s.charAt(i)
+      if (c == '\'') inQ = !inQ
+      else if (!inQ && c == '(') depth += 1
+      else if (!inQ && c == ')') depth -= 1
+      i += 1
+    }
+    if (depth == 0) i else -1
+  }
+
   private def stripOuterParens(s0: String): String = {
     val s = s0.trim
-    if (!(s.startsWith("(") && s.endsWith(")"))) return s
     // only strip if the opening paren closes at the very end
-    var depth = 0
-    for (i <- s.indices) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-          if (depth == 0 && i != s.length - 1) return s
-        case _ =>
-      }
-    }
-    if (depth == 0) stripOuterParens(s.substring(1, s.length - 1)) else s
+    if (s.startsWith("(") && closeParen(s, 1) == s.length)
+      stripOuterParens(s.substring(1, s.length - 1))
+    else s
   }
 
   /** Split on a symbol separator (`->`) at depth 0. */

@@ -3013,6 +3013,21 @@ class GraftAppSpec extends AnyFunSuite {
       .sortBy(_._3).toSeq
     assert(got == Seq((1L, 0L, 1L, -1.0), (1L, 0L, 2L, -1.0), (1L, 1L, 3L, 5.0)),
       s"$got")
+    // naming a member of the zero-min inner group (D.v) keeps the
+    // zero-iteration matches, with D.v NULL there (ANSI: an unmatched
+    // variable's columns are NULL) — the plain ref is a left lookup
+    val native =
+      """CREATE STREAM E (ts TIMESTAMP, user_id BIGINT, kind STRING, v DOUBLE);
+        |CREATE STREAM Out (a_v DOUBLE, d_v DOUBLE, n_c BIGINT);
+        |INSERT INTO Out SELECT A.v AS a_v, D.v AS d_v, count(C.v) AS n_c
+        |FROM SEQUENCE (EVERY (A=E[kind='a'] -> ((D=E[kind='d'] -> U=E[kind='u'])*
+        |  -> C=E[kind='c'])+)) WITHIN 1 HOUR PARTITION BY user_id;""".stripMargin
+    val gotD = GraftApp.run(spark, native, Map("E" -> in))("Out")
+      .collect().map(r => (r.getDouble(0),
+        if (r.isNullAt(1)) None else Some(r.getDouble(1)), r.getLong(2)))
+      .sortBy(_._3).toSeq
+    assert(gotD == Seq((1.0, None, 1L), (1.0, None, 2L), (1.0, Some(4.0), 3L)),
+      s"$gotD")
     // typed gates: trailing zero-min inner group; reluctant zero-min
     def err(pat: String): String =
       intercept[GraftApp.SqlError](GraftApp.parse(
@@ -3027,6 +3042,34 @@ class GraftAppSpec extends AnyFunSuite {
            |         C AS C.kind = 'c'
            |);""".stripMargin)).getMessage
     assert(err("A (C (D U)*)+").contains("END"), err("A (C (D U)*)+"))
+  }
+  test("a quoted paren in a step predicate parses (pattern dialect and MATCH_RECOGNIZE)") {
+    val in = Seq((1, "a)"), (2, "b"))
+      .map(t => (t._1, 1L, t._2, t._1.toDouble))
+      .toDF("sec", "user_id", "kind", "v")
+      .selectExpr("CAST(timestamp_seconds(sec) AS TIMESTAMP) AS ts",
+        "user_id", "kind", "v")
+    val native =
+      """CREATE STREAM E (ts TIMESTAMP, user_id BIGINT, kind STRING, v DOUBLE);
+        |CREATE STREAM Out (a DOUBLE, b DOUBLE);
+        |INSERT INTO Out SELECT A.v AS a, B.v AS b
+        |FROM SEQUENCE (EVERY (A=E[kind = 'a)'] -> B=E[kind = 'b']))
+        |PARTITION BY user_id;""".stripMargin
+    val mr =
+      """CREATE STREAM E (ts TIMESTAMP, user_id BIGINT, kind STRING, v DOUBLE);
+        |CREATE STREAM Out (user_id BIGINT, a DOUBLE, b DOUBLE);
+        |INSERT INTO Out SELECT * FROM E MATCH_RECOGNIZE (
+        |  PARTITION BY user_id ORDER BY ts
+        |  MEASURES A.v AS a, B.v AS b
+        |  ONE ROW PER MATCH
+        |  AFTER MATCH SKIP TO NEXT ROW
+        |  PATTERN (A B)
+        |  DEFINE A AS A.kind = 'a)', B AS B.kind = 'b');""".stripMargin
+    def ab(app: String): Seq[(Double, Double)] =
+      GraftApp.run(spark, app, Map("E" -> in))("Out").select("a", "b")
+        .collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq
+    assert(ab(native) == Seq((1.0, 2.0)), s"${ab(native)}")
+    assert(ab(mr) == Seq((1.0, 2.0)), s"${ab(mr)}")
   }
   test("reluctant OUTER group over a nested group (round 16): ((A B)+ C)+? prefers fewest outer iterations") {
     def app(q: String) =

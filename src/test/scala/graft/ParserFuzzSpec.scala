@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sql.GraftApp
+import graft.sql.{GraftApp, PatternCompiler}
 
 /** Robustness fuzz over the SQL front end: whatever garbage an app text
   * contains, the compiler must either parse it or fail with the TYPED
@@ -378,6 +378,48 @@ class ParserFuzzSpec extends AnyFunSuite {
     }
     // (the WITHIN gate on unbounded forms fires at COMPILE, not parse —
     // CompatSpec's unbounded-quantifier test pins that typed rejection)
+  }
+
+  /** A string literal that holds pattern syntax: parens, brackets, `->`,
+    * ` AND `, ` OR ` (at least one of them). */
+  private val syntaxLiteral: Gen[String] = for {
+    n <- Gen.choose(0, 4)
+    parts <- Gen.listOfN(n, Gen.oneOf("(", ")", "[", "]", "->", " AND ", " OR ", "x"))
+    special <- Gen.oneOf("(", ")", "[", "]", "->", " AND ", " OR ")
+    at <- Gen.choose(0, n)
+  } yield parts.patch(at, Seq(special), 0).mkString("'", "", "'")
+
+  /** Pattern shapes, each with one step predicate comparing to `'x'`: a
+    * chain, an OR step, an AND element, a `(A B)+` group, a NOT … FOR
+    * guard. */
+  private val literalShapes = Seq(
+    "A=S[k = 'x'] -> B=S[k = 'b']",
+    "A=S[k = 'x'] OR B=S[k = 'b'] -> C=S[k = 'c']",
+    "A=S[k = 'x'] AND B=S[k = 'b']",
+    "(A=S[k = 'x'] -> B=S[k = 'b'])+ -> C=S[k = 'c']",
+    "A=S[k = 'a'] -> NOT N=S[k = 'x'] FOR 5 SECONDS -> B=S[k = 'b']")
+
+  test("a string literal holding pattern syntax parses to the same PatternQuery") {
+    def parsed(body: String): PatternCompiler.PatternQuery =
+      GraftApp.parse(
+        s"""CREATE STREAM S (ts TIMESTAMP, k STRING, v DOUBLE);
+           |CREATE STREAM Out (a DOUBLE);
+           |INSERT INTO Out SELECT A.v AS a
+           |FROM SEQUENCE (EVERY ($body)) WITHIN 1 HOURS PARTITION BY k;""".stripMargin)
+        .patterns.head
+    // the query with `lit` in place of 'x', mapped back to 'x'
+    def unsubst(q: PatternCompiler.PatternQuery, lit: String): PatternCompiler.PatternQuery = {
+      def alt(a: PatternCompiler.StepAlt) = a.copy(pred = a.pred.map(_.replace(lit, "'x'")))
+      q.copy(variants = q.variants.map(_.map(st => st.copy(alts = st.alts.map(alt)))),
+        absents = q.absents.map(a => a.copy(alt = alt(a.alt))))
+    }
+    val bases = literalShapes.map(sh => sh -> parsed(sh))
+    check(Prop.forAll(syntaxLiteral) { lit =>
+      bases.forall { case (shape, base) =>
+        val q = parsed(shape.replace("'x'", lit))
+        q.allAlts.exists(_.pred.exists(_.contains(lit))) && unsubst(q, lit) == base
+      }
+    })
   }
 
   private val trailingJunk: Gen[String] = for {
