@@ -146,8 +146,9 @@ object Dedup {
     * hash-min on a 400-node chain would need 400 shuffling rounds; this
     * needs ~10. Per round: one join on the symmetric edge list + one
     * self-join on the (id, label) relation, both narrow (two longs per
-    * row). Each generation is checkpointed ([[Checkpoints.flat]]) and the
-    * previous one freed, keeping lineage flat across iterations;
+    * row). Each generation is checkpointed through a
+    * [[Checkpoints.Generations]] tracker, keeping lineage flat across
+    * iterations, and freed once the result is checkpointed;
     * convergence is detected by an any-label-changed probe on the
     * checkpointed frame, so building the result runs Spark jobs.
     *
@@ -156,35 +157,22 @@ object Dedup {
     * rounds bound is a safety rail, with a loud warning if exhausted.
     */
   private def clustersByRounds(edges: DataFrame, maxIter: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sc = edges.sparkSession.sparkContext
-    // track the EXACT checkpoint-RDD ids this call creates (diff around
-    // each localCheckpoint) — an end-of-call whole-context sweep would
-    // unpersist RDDs other threads persisted mid-call, truncating a
-    // foreign localCheckpoint's lineage into missing-block failures
-    val created = scala.collection.mutable.Set.empty[Int]
-    def checkpointTracked(df: DataFrame): DataFrame = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.transform(Checkpoints.flat)
-      created ++= sc.getPersistentRDDs.keySet -- before
-      out
-    }
+    val gen = new Checkpoints.Generations(edges.sparkSession.sparkContext)
     // explode both directions from ONE scan: union(pairs, pairs-flipped)
     // would re-execute the caller's pair-mining plan once per branch
     // (round 16, guide §2.4 — same fix as the graph symmetrization)
-    val sym = edges
+    val sym = gen.persist(edges
       .select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .persist(MEMORY_AND_DISK)
+      .distinct())
     // eager localCheckpoint per generation: materializes AND truncates the
     // logical plan — a persist() alone leaves lineage growing exponentially
     // across iterations (each round's plan embeds the previous round's
     // whole tree, OOMing the driver on plan strings well before data does)
     // init = the first propagate round for free: label(v) = min(v, N(v))
-    var labels = checkpointTracked(sym
+    var labels = gen.pin(sym
       .groupBy(col("src").as("id")).agg(min(col("dst")).as("mn"))
       .select(col("id"), least(col("id"), col("mn")).as("label")))
     var iter = 0
@@ -206,7 +194,7 @@ object Dedup {
       // the change flag rides INSIDE the checkpointed frame (computed in
       // the same job as the round itself); the convergence probe is then a
       // limit-1 scan of the materialized RDD, not an extra join job
-      val next = checkpointTracked(jump(jump(propagated)).as("n")
+      val next = gen.pin(jump(jump(propagated)).as("n")
         .join(labels.select(col("id"), col("label").as("old")).as("o"), "id")
         .select(col("id"), col("label"), (col("label") < col("old")).as("chg")))
       val changed = next.filter(col("chg")).limit(1).count() > 0
@@ -218,19 +206,10 @@ object Dedup {
       s"Dedup.clusters: not converged after $maxIter rounds — component " +
         "diameter exceeds the bound; labels are a valid refinement but may " +
         "split true components. Raise maxIter.")
-    sym.unpersist()
-    // re-checkpoint the final generation, then free every intermediate
-    // checkpoint RDD this call created (they otherwise stay registered
-    // until GC — executor memory held hostage to driver garbage timing);
-    // only ids in `created` are touched, never foreign persists
-    val beforeFinal = sc.getPersistentRDDs.keySet
-    val result = labels.select(col("id"), col("label").as("cluster_id"))
-      .transform(Checkpoints.flat)
-    created --= sc.getPersistentRDDs.keySet -- beforeFinal
-    created.foreach { id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
-    result
+    // re-checkpoint the final generation, then free the intermediate ones
+    // (they otherwise stay registered until GC — executor memory held
+    // hostage to driver garbage timing)
+    gen.finish(labels.select(col("id"), col("label").as("cluster_id")))
   }
 
   /** Keep one canonical document per near-dup cluster — the final stage of

@@ -16,15 +16,13 @@ import org.apache.spark.sql.functions._
   * results replay bit-identically in any engine — the DuckDB oracles
   * compare hashes, and floating-point PageRank would diverge in the last
   * ulp across summation orders. Determinism also makes incremental re-runs
-  * diffable (Curation.corpusDiff works on rank snapshots).
+  * diffable ([[Curation.corpusDiff]] works on rank snapshots).
+  *
+  * [[pageRank]] and [[trustRank]] differ only in which nodes get the base
+  * term and the start mass; both run the one loop [[rankRun]], whose
+  * generations [[Checkpoints.Generations]] checkpoints and frees.
   */
 object Graph {
-
-  /** Iterations executed by the most recent pageRank/trustRank call on this
-    * JVM — observability for the epsilon-stopping specs (pins that `tolPm`
-    * actually stopped early). Not part of the operator contract.
-    */
-  @volatile private[graft] var lastRunIters: Int = -1
 
   /** Weighted propagation requires strictly positive weights: a source
     * whose out-weights sum to <= 0 (or a NULL weight) makes `rank div deg`
@@ -64,11 +62,12 @@ object Graph {
     * ONCE and persisted hash-partitioned on `src` — iterations then shuffle
     * only the narrow `(node, rank)` relation (two longs per node) to meet
     * it, plus one aggregation exchange on `dst`. The corpus-sized side
-    * (edges) never re-shuffles. Each generation is eagerly
-    * checkpointed (lineage stays flat — an iterative plan otherwise
-    * embeds every previous round's tree) and the previous generation's
-    * blocks are freed; `localCheckpoint` by default, reliable DFS
-    * `checkpoint` when the context has a checkpoint dir (see
+    * (edges) never re-shuffles. Every 8th generation and the result are
+    * eagerly checkpointed (lineage stays flat — an iterative plan
+    * otherwise embeds every previous round's tree), and the call frees its
+    * intermediate generations once the result is materialized
+    * ([[Checkpoints.Generations]]); `localCheckpoint` by default, reliable
+    * DFS `checkpoint` when the context has a checkpoint dir (see
     * [[Checkpoints.flat]] for the cluster durability contract). Overflow headroom: `sum(contribs)` is bounded by
     * total mass ≈ n_nodes*scale, and the damping multiply adds two decimal
     * digits — safe in BIGINT up to ~9e16 node-mass, i.e. 9e7 nodes at the
@@ -76,7 +75,7 @@ object Graph {
     * nodes at web scale).
     *
     * `tolPm` (optional) adds epsilon stopping for runs to convergence on an
-    * unknown graph: every `ckptEvery` rounds, ONE max-abs-delta
+    * unknown graph: at every checkpoint round, ONE max-abs-delta
     * aggregation between CONSECUTIVE generations (i vs i-1, both pinned
     * eagerly at the checkpoint round) stops the loop early when no node's
     * rank moved by more than `scale*tolPm/1000` in one step — a
@@ -91,109 +90,9 @@ object Graph {
                scale: Long = 1000000000L,
                weightCol: Option[String] = None,
                tolPm: Option[Long] = None): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
-    require(scale > 0, s"scale must be positive, got $scale")
-    tolPm.foreach(t => require(t > 0, s"tolPm must be positive, got $t"))
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sc = edges.sparkSession.sparkContext
-    val created = scala.collection.mutable.Set.empty[Int]
-    def checkpointTracked(df: DataFrame): DataFrame = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.transform(Checkpoints.flat)
-      created ++= sc.getPersistentRDDs.keySet -- before
-      out
-    }
-    // unweighted runs carry NO weight column: `(rank div deg) * 1` ==
-    // `rank div deg`, so dropping the constant narrows the persisted edge
-    // relation and the per-iteration arithmetic (round 16, guide §2.3)
-    val weighted = weightCol.isDefined
-    val e = edges.select(Seq(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")) ++
-      weightCol.map(c => positiveWeight(col(c).cast("long")).as("w")).toSeq: _*)
-    // degree folded in as a WINDOW over the src partition (round 17):
-    // the former groupBy+join spelled two pipeline stages over the edge
-    // relation (aggregate, then sort-merge join) on the shared src
-    // exchange; the window computes the same per-src count/sum on that
-    // one exchange with no join. Same rows, same values, same output
-    // partitioning (hashpartitioning(src)) feeding the persist.
-    val wSrc = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-    val eDeg = e.withColumn("deg",
-        if (weighted) sum(col("w")).over(wSrc) else count(lit(1)).over(wSrc))
-      .persist(MEMORY_AND_DISK)
-    // node spine from the PERSISTED degree relation — deriving it from
-    // `e` would re-execute the caller's (unpersisted, often join-shaped)
-    // edge plan a second time. explode, not union-of-two-selects: one
-    // cache scan instead of two (round 16, guide §2.4).
-    val nodes = eDeg.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-      .persist(MEMORY_AND_DISK)
-    val base = scale * (100 - dampingPct) / 100
-    // iterations CHAIN LAZILY (plan depth is linear in iters — each round
-    // references the previous rank once and the persisted eDeg/nodes), with
-    // an eager localCheckpoint every few rounds + at the end: enough to
-    // keep lineage flat on long runs without paying one job BARRIER per
-    // iteration (the all-eager variant measured ~1 job-scheduling round
-    // trip per iteration of pure overhead on small graphs — and a typical
-    // 5-10 round run now executes as ONE job).
-    val ckptEvery = 8
-    // per-edge contributions UNION a zero row per node, ONE aggregation:
-    // folding the spine into the agg replaces the left-outer re-join
-    // (an extra broadcast + join stage per round) — nodes with no
-    // in-edges still get a row, so sum(c) is never null
-    def step(r: DataFrame): DataFrame = {
-      val cExpr = if (weighted) expr("(rank div deg) * w") else expr("rank div deg")
-      val contrib = eDeg
-        .join(r.select(col("node").as("src"), col("rank")), "src")
-        .select(col("dst").as("node"), cExpr.as("c"))
-      contrib
-        .union(nodes.select(col("node"), lit(0L).as("c")))
-        .groupBy("node").agg(sum(col("c")).as("s"))
-        .select(col("node"),
-          (lit(base) + expr(s"($dampingPct * s) div 100")).as("rank"))
-    }
-    var rank = nodes.select(col("node"), lit(scale).as("rank"))
-    var i = 0
-    var converged = false
-    // epsilon stopping (`tolPm`): every ckptEvery rounds, pin generation
-    // i-1 eagerly, take ONE step from the pinned relation, and compare
-    // CONSECUTIVE generations with a max-abs-delta aggregation (a
-    // co-partitioned join of two (node, rank) relations, no corpus
-    // touch). The delta MUST be between i and i-1 — a span delta (i vs
-    // i-ckptEvery) reports any oscillation whose period divides ckptEvery
-    // as converged, e.g. a 2-cycle at dampingPct=100. Tolerance is
-    // per-mille of `scale`: tolPm=1 stops when no rank moved by more than
-    // scale/1000 in one step.
-    while (i < iters && !converged) {
-      i += 1
-      if (i % ckptEvery == 0 && i < iters) {
-        tolPm match {
-          case Some(tol) =>
-            val prev = checkpointTracked(rank)
-            val ck = checkpointTracked(step(prev))
-            val d = ck.join(prev.select(col("node"), col("rank").as("__pr")), "node")
-              .agg(max(abs(col("rank") - col("__pr"))).as("d"))
-              .head()
-            if (d.isNullAt(0) || d.getLong(0) <= scale * tol / 1000) converged = true
-            rank = ck
-          case None =>
-            rank = checkpointTracked(step(rank))
-        }
-      } else rank = step(rank)
-    }
-    // materialize the final generation FIRST (it is a lazy plan over the
-    // persisted nodes/eDeg), then free the inputs and every intermediate
-    // checkpoint this call created — never foreign persists
-    lastRunIters = i
-    val beforeFinal = sc.getPersistentRDDs.keySet
-    val result = rank.select(col("node"), col("rank")).transform(Checkpoints.flat)
-    created --= sc.getPersistentRDDs.keySet -- beforeFinal
-    nodes.unpersist()
-    eDeg.unpersist()
-
-    created.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
-    result
+    rankRun(edges, srcCol, dstCol, None, iters, dampingPct, scale, weightCol, tolPm).ranks
   }
 
   /** TrustRank — personalized PageRank with the teleport mass restricted
@@ -208,8 +107,9 @@ object Graph {
     * nodes, 0 otherwise — and a seed-biased start vector (`scale` on
     * seeds, 0 elsewhere). Seeds are a node-sized relation (hand-curated
     * lists are thousands of rows): they broadcast into the spine join and
-    * add nothing to the per-iteration exchanges. `weightCol` weights the
-    * propagation exactly as in [[pageRank]].
+    * add nothing to the per-iteration exchanges; seeds that are not graph
+    * nodes are ignored. `weightCol` weights the propagation exactly as in
+    * [[pageRank]].
     */
   def trustRank(edges: DataFrame, srcCol: String, dstCol: String,
                 seeds: DataFrame, seedCol: String,
@@ -217,21 +117,30 @@ object Graph {
                 scale: Long = 1000000000L,
                 weightCol: Option[String] = None,
                 tolPm: Option[Long] = None): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampingPct >= 0 && dampingPct < 100,
       s"dampingPct must be in [0,100) — at 100 no trust mass is ever " +
         s"injected and every rank is 0; got $dampingPct")
+    val seedSet = seeds.select(col(seedCol).cast("long").as("node")).distinct()
+    rankRun(edges, srcCol, dstCol, Some(seedSet), iters, dampingPct, scale, weightCol,
+      tolPm).ranks
+  }
+
+  /** What [[rankRun]] returns: the `(node, rank)` result and the number of
+    * iterations run, below `iters` when `tolPm` stopped the loop early. */
+  private[graft] final case class RankRun(ranks: DataFrame, iters: Int)
+
+  /** The rank loop behind [[pageRank]] and [[trustRank]]. `seeds` (one
+    * `node` column) gets the base term and starts at `scale`, every other
+    * node gets no base and starts at 0; None seeds every node.
+    */
+  private[graft] def rankRun(edges: DataFrame, srcCol: String, dstCol: String,
+                             seeds: Option[DataFrame], iters: Int, dampingPct: Int,
+                             scale: Long, weightCol: Option[String],
+                             tolPm: Option[Long]): RankRun = {
+    require(iters >= 0, s"iters must be >= 0, got $iters")
     require(scale > 0, s"scale must be positive, got $scale")
     tolPm.foreach(t => require(t > 0, s"tolPm must be positive, got $t"))
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sc = edges.sparkSession.sparkContext
-    val created = scala.collection.mutable.Set.empty[Int]
-    def checkpointTracked(df: DataFrame): DataFrame = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.transform(Checkpoints.flat)
-      created ++= sc.getPersistentRDDs.keySet -- before
-      out
-    }
+    val gen = new Checkpoints.Generations(edges.sparkSession.sparkContext)
     // unweighted runs carry NO weight column: `(rank div deg) * 1` ==
     // `rank div deg`, so dropping the constant narrows the persisted edge
     // relation and the per-iteration arithmetic (round 16, guide §2.3)
@@ -240,74 +149,63 @@ object Graph {
       col(dstCol).cast("long").as("dst")) ++
       weightCol.map(c => positiveWeight(col(c).cast("long")).as("w")).toSeq: _*)
     // degree folded in as a WINDOW over the src partition (round 17):
-    // the former groupBy+join spelled two pipeline stages over the edge
-    // relation (aggregate, then sort-merge join) on the shared src
-    // exchange; the window computes the same per-src count/sum on that
-    // one exchange with no join. Same rows, same values, same output
-    // partitioning (hashpartitioning(src)) feeding the persist.
+    // the per-src count/sum is computed on the src exchange with no join,
+    // and the persisted relation stays hashpartitioning(src)
     val wSrc = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-    val eDeg = e.withColumn("deg",
-        if (weighted) sum(col("w")).over(wSrc) else count(lit(1)).over(wSrc))
-      .persist(MEMORY_AND_DISK)
-    val seedSet = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-    // spine carries the per-node base term: seed → base, non-seed → 0;
-    // derived from the PERSISTED degree relation so the caller's edge
-    // plan executes once (see pageRank)
+    val eDeg = gen.persist(e.withColumn("deg",
+      if (weighted) sum(col("w")).over(wSrc) else count(lit(1)).over(wSrc)))
+    // node spine from the PERSISTED degree relation — deriving it from
+    // `e` would re-execute the caller's (unpersisted, often join-shaped)
+    // edge plan a second time. explode, not union-of-two-selects: one
+    // cache scan instead of two (round 16, guide §2.4).
+    val nodes = eDeg.select(explode(array(col("src"), col("dst"))).as("node")).distinct()
+    val seeded = seeds.fold(nodes.withColumn("seed", lit(true)))(s =>
+      nodes.join(broadcast(s.withColumn("seed", lit(true))), Seq("node"), "left_outer"))
     val base = scale * (100 - dampingPct) / 100
-    // explode, not union-of-two-selects: one cache scan (see pageRank)
-    val nodes = eDeg.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-      .join(broadcast(seedSet.withColumn("__seed", lit(true))), Seq("node"), "left_outer")
-      .select(col("node"),
-        when(col("__seed"), lit(base)).otherwise(lit(0L)).as("node_base"))
-      .persist(MEMORY_AND_DISK)
+    // the start vector is explicit: at dampingPct = 100 the base is 0
+    // everywhere, yet pageRank still starts every node at `scale`
+    val spine = gen.persist(seeded.select(col("node"),
+      when(col("seed"), lit(base)).otherwise(lit(0L)).as("b"),
+      when(col("seed"), lit(scale)).otherwise(lit(0L)).as("start")))
+    // per-edge contributions UNION one row per node carrying its base, ONE
+    // aggregation: nodes with no in-edges still get a row and no join
+    // re-attaches the base. A contribution row carries dampingPct*c and
+    // the node row 100*b, so `sum div 100` is exactly
+    // b + (dampingPct * sum(c)) div 100: every term is non-negative and
+    // 100*b is a multiple of 100.
+    val cExpr = if (weighted) expr("(rank div deg) * w") else expr("rank div deg")
+    def step(r: DataFrame): DataFrame =
+      eDeg.join(r.select(col("node").as("src"), col("rank")), "src")
+        .select(col("dst").as("node"), (cExpr * dampingPct).as("c"))
+        .union(spine.select(col("node"), (col("b") * 100).as("c")))
+        .groupBy("node").agg(expr("sum(c) div 100").as("rank"))
+    // iterations CHAIN LAZILY (plan depth is linear in iters), with an
+    // eager checkpoint every few rounds and at the end: lineage stays flat
+    // on long runs without one job barrier per iteration, and a typical
+    // 5-10 round run executes as ONE job.
     val ckptEvery = 8
-    // spine rows carry the per-node base as a second aggregated column
-    // (contrib rows carry 0), so base re-attachment costs no extra join
-    def step(r: DataFrame): DataFrame = {
-      val cExpr = if (weighted) expr("(rank div deg) * w") else expr("rank div deg")
-      val contrib = eDeg
-        .join(r.select(col("node").as("src"), col("rank")), "src")
-        .select(col("dst").as("node"), cExpr.as("c"),
-          lit(0L).as("b"))
-      contrib
-        .union(nodes.select(col("node"), lit(0L).as("c"), col("node_base").as("b")))
-        .groupBy("node").agg(sum(col("c")).as("s"), sum(col("b")).as("b"))
-        .select(col("node"),
-          (col("b") + expr(s"($dampingPct * s) div 100")).as("rank"))
-    }
-    var rank = nodes.select(col("node"),
-      when(col("node_base") > 0L, lit(scale)).otherwise(lit(0L)).as("rank"))
+    var rank = spine.select(col("node"), col("start").as("rank"))
     var i = 0
     var converged = false
-    // same epsilon stopping as pageRank: one max-abs-delta agg between
-    // CONSECUTIVE generations (i vs i-1, both pinned at the checkpoint
-    // round — never a checkpoint-span delta, which oscillations defeat)
+    // epsilon stopping (`tolPm`): at a checkpoint round, pin generation
+    // i-1 too and compare CONSECUTIVE generations with one max-abs-delta
+    // aggregation (a co-partitioned join of two (node, rank) relations, no
+    // corpus touch). A span delta (i vs i-ckptEvery) would report any
+    // oscillation whose period divides ckptEvery as converged, e.g. a
+    // 2-cycle at dampingPct=100.
     while (i < iters && !converged) {
       i += 1
       if (i % ckptEvery == 0 && i < iters) {
-        tolPm match {
-          case Some(tol) =>
-            val prev = checkpointTracked(rank)
-            val ck = checkpointTracked(step(prev))
-            val d = ck.join(prev.select(col("node"), col("rank").as("__pr")), "node")
-              .agg(max(abs(col("rank") - col("__pr"))).as("d"))
-              .head()
-            if (d.isNullAt(0) || d.getLong(0) <= scale * tol / 1000) converged = true
-            rank = ck
-          case None =>
-            rank = checkpointTracked(step(rank))
+        val prev = if (tolPm.isDefined) gen.pin(rank) else rank
+        rank = gen.pin(step(prev))
+        tolPm.foreach { tol =>
+          val d = rank.join(prev.select(col("node"), col("rank").as("__pr")), "node")
+            .agg(max(abs(col("rank") - col("__pr")))).head()
+          converged = d.isNullAt(0) || d.getLong(0) <= scale * tol / 1000
         }
       } else rank = step(rank)
     }
-    lastRunIters = i
-    val beforeFinal = sc.getPersistentRDDs.keySet
-    val result = rank.select(col("node"), col("rank")).transform(Checkpoints.flat)
-    created --= sc.getPersistentRDDs.keySet -- beforeFinal
-    nodes.unpersist()
-    eDeg.unpersist()
-    created.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
-    result
+    RankRun(gen.finish(rank), i)
   }
 
   /** Degree table for an edge relation: out-degree, in-degree, and total

@@ -74,6 +74,42 @@ class CheckpointSpec extends AnyFunSuite {
     assert(Seq(1L, 2L, 3L).forall(labels(_) == 1L))
   }
 
+  test("persist hygiene: each loop leaves only its result's RDD persisted, on both paths") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val edges = Seq(
+      (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 4L), (6L, 1L)
+    ).toDF("src", "dst")
+    val seeds = Seq(Tuple1(1L)).toDF("s")
+    val pairs = ((100L until 139L).map(i => (i, i + 1)) ++ Seq((1L, 2L), (2L, 3L)))
+      .toDF("a", "b")
+    val loops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (() => Graph.pageRank(edges, "src", "dst", iters = 17)),
+      "pageRank tolPm" -> (() =>
+        Graph.pageRank(edges, "src", "dst", iters = 17, tolPm = Some(1L))),
+      "trustRank" -> (() =>
+        Graph.trustRank(edges, "src", "dst", seeds, "s", iters = 17)),
+      "trustRank tolPm" -> (() =>
+        Graph.trustRank(edges, "src", "dst", seeds, "s", iters = 17, tolPm = Some(1L))),
+      "clusters by rounds" -> (() =>
+        Dedup.clustersBounded(pairs, "a", "b", 25, unionFindMaxBytes = 0)))
+    // the RDDs the loop added to the context's persisted set, and the
+    // checkpoint RDD the returned frame scans
+    def check(reliable: Boolean): Unit = for ((name, run) <- loops) {
+      val before = sc.getPersistentRDDs.keySet
+      val out = run()
+      val added = sc.getPersistentRDDs.keySet -- before
+      val backing = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert(backing.size == 1, s"$name: result scans $backing")
+      // a reliable checkpoint is a file, not a persisted RDD
+      val expected = if (reliable) Set.empty[Int] else backing
+      assert(added == expected, s"$name (reliable=$reliable): added $added, result $backing")
+    }
+    check(reliable = false)
+    withCheckpointDir(check(reliable = true))
+  }
+
   test("reliable path actually writes checkpoint files") {
     import spark.implicits._
     val sc = spark.sparkContext

@@ -8,9 +8,9 @@ import graft.operators.{Bloom, Graph}
 /** Specs for the link-graph operators (Graph.pageRank / Graph.degrees) and
   * the bloom-pruned membership joins (Bloom.semiJoin / Bloom.antiJoin).
   *
-  * PageRank values are checked against a HAND-COMPUTED fixed-point
-  * trace — the arithmetic is exact integers, so equality is literal, not
-  * tolerance-based.
+  * Rank values are checked against HAND-COMPUTED fixed-point traces and a
+  * driver-side reference (`referenceRank`) — the arithmetic is exact
+  * integers, so equality is literal, not tolerance-based.
   */
 class GraphSpec extends AnyFunSuite {
 
@@ -104,6 +104,12 @@ class GraphSpec extends AnyFunSuite {
         iters = 1, dampingPct = 85, scale = 1000000L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(rp == Map(1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 0L))
+    // seeds start at `scale` even when the base rounds to 0:
+    // scale 10, damping 95 ⇒ base 0; r1: contrib(2) = 10 ⇒ (95*10) div 100 = 9
+    val rz = graft.operators.Graph.trustRank(chain, "src", "dst", seeds, "s",
+        iters = 1, dampingPct = 95, scale = 10L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(rz == Map(1L -> 0L, 2L -> 9L, 3L -> 0L, 4L -> 0L))
     intercept[IllegalArgumentException](graft.operators.Graph.trustRank(
       chain, "src", "dst", seeds, "s", iters = 1, dampingPct = 100))
   }
@@ -129,25 +135,28 @@ class GraphSpec extends AnyFunSuite {
     // exactly, so the first delta check (i=8, comparing generations 7 and
     // 8) sees delta 0 and stops — the hard cap of 64 is not run.
     val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val converged = Graph.pageRank(cycle, "src", "dst", iters = 64,
-        dampingPct = 100, scale = 1000000L, tolPm = Some(1L))
+    val cRun = Graph.rankRun(cycle, "src", "dst", None, iters = 64,
+        dampingPct = 100, scale = 1000000L, weightCol = None, tolPm = Some(1L))
+    val converged = cRun.ranks
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Graph.lastRunIters == 8, s"expected early stop at 8, ran ${Graph.lastRunIters}")
+    assert(cRun.iters == 8, s"expected early stop at 8, ran ${cRun.iters}")
     assert(converged == Map(1L -> 1000000L, 2L -> 1000000L, 3L -> 1000000L))
     // without tolPm the same call runs all 64 iterations (and matches)
-    val full = Graph.pageRank(cycle, "src", "dst", iters = 64,
-        dampingPct = 100, scale = 1000000L)
+    val fRun = Graph.rankRun(cycle, "src", "dst", None, iters = 64,
+        dampingPct = 100, scale = 1000000L, weightCol = None, tolPm = None)
+    val full = fRun.ranks
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Graph.lastRunIters == 64)
+    assert(fRun.iters == 64)
     assert(full == converged)
     // trustRank: seed chain converges to the exact fixed point fast; the
     // epsilon stop returns the same ranks as the full run
     val chain = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
     val seeds = Seq(Tuple1(1L)).toDF("s")
-    val tEps = Graph.trustRank(chain, "src", "dst", seeds, "s", iters = 64,
-        dampingPct = 85, scale = 1000000L, tolPm = Some(1L))
+    val tRun = Graph.rankRun(chain, "src", "dst", Some(seeds.select(col("s").as("node"))),
+        iters = 64, dampingPct = 85, scale = 1000000L, weightCol = None, tolPm = Some(1L))
+    val tEps = tRun.ranks
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val tIters = Graph.lastRunIters
+    val tIters = tRun.iters
     assert(tIters < 64, s"expected early stop, ran $tIters")
     val tFull = Graph.trustRank(chain, "src", "dst", seeds, "s", iters = 64,
         dampingPct = 85, scale = 1000000L)
@@ -164,11 +173,12 @@ class GraphSpec extends AnyFunSuite {
     // 2 divides 8, falsely reporting convergence; the consecutive-
     // generation delta (i vs i-1) reads s and must run to the hard cap.
     val osc = Seq((1L, 2L), (2L, 1L), (3L, 1L)).toDF("src", "dst")
-    val r = Graph.pageRank(osc, "src", "dst", iters = 40,
-        dampingPct = 100, scale = 1000000L, tolPm = Some(1L))
+    val run = Graph.rankRun(osc, "src", "dst", None, iters = 40,
+        dampingPct = 100, scale = 1000000L, weightCol = None, tolPm = Some(1L))
+    val r = run.ranks
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Graph.lastRunIters == 40,
-      s"oscillation falsely converged at ${Graph.lastRunIters}")
+    assert(run.iters == 40,
+      s"oscillation falsely converged at ${run.iters}")
     // gen 40 (even) == gen 2: a=s, b=2s, c=0
     assert(r == Map(1L -> 1000000L, 2L -> 2000000L, 3L -> 0L), r.toString)
   }
@@ -182,28 +192,33 @@ class GraphSpec extends AnyFunSuite {
       3L -> ((0L, 1L, 1L))))
   }
 
-  /** Naive single-machine fixed-point PageRank — the independent reference
-    * the distributed operator is property-checked against. */
-  private def naivePageRank(edges: Seq[(Long, Long)], iters: Int,
-                            dampingPct: Int, scale: Long,
-                            seeds: Option[Set[Long]] = None): Map[Long, Long] = {
-    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
-    val deg = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
+  /** Driver-side reference of the documented rank formula over weighted
+    * edges `(src, dst, w)` (w = 1 for unweighted runs): a node splits its
+    * rank as `(rank div sum_out_w) * w`, dangling mass is dropped, parallel
+    * edges count multiply, `next = b + (dampingPct * sum_in) div 100` with
+    * `b = scale*(100-dampingPct)/100` on seeded nodes and 0 elsewhere, and
+    * seeded nodes start at `scale`, the rest at 0 (`seeds = None` seeds
+    * every node). With `tolPm`, at `i % 8 == 0 && i < iters` the loop stops
+    * when no rank moved by more than `scale*tolPm/1000` from generation
+    * i-1 to i. */
+  private def referenceRank(edges: Seq[(Long, Long, Long)], seeds: Option[Set[Long]],
+                            iters: Int, dampingPct: Int, scale: Long,
+                            tolPm: Option[Long]): Map[Long, Long] = {
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val outW = edges.groupMapReduce(_._1)(_._3)(_ + _)
+    val seeded: Long => Boolean = v => seeds.forall(_(v))
     val base = scale * (100 - dampingPct) / 100
-    val baseOf: Long => Long = seeds match {
-      case Some(ss) => v => if (ss(v)) base else 0L
-      case None     => _ => base
-    }
-    var rank: Map[Long, Long] = seeds match {
-      case Some(ss) => nodes.map(v => v -> (if (ss(v)) scale else 0L)).toMap
-      case None     => nodes.map(_ -> scale).toMap
-    }
-    for (_ <- 1 to iters) {
-      val contrib = edges.groupBy(_._2).map { case (d, es) =>
-        d -> es.map { case (s, _) => rank(s) / deg(s) }.sum
-      }
-      rank = nodes.map(v =>
-        v -> (baseOf(v) + dampingPct * contrib.getOrElse(v, 0L) / 100)).toMap
+    var rank = nodes.map(v => v -> (if (seeded(v)) scale else 0L)).toMap
+    var i = 0
+    var stop = false
+    while (i < iters && !stop) {
+      i += 1
+      val in = edges.groupMapReduce(_._2) { case (s, _, w) => rank(s) / outW(s) * w }(_ + _)
+      val next = nodes.map(v =>
+        v -> ((if (seeded(v)) base else 0L) + dampingPct * in.getOrElse(v, 0L) / 100)).toMap
+      if (i % 8 == 0 && i < iters)
+        tolPm.foreach(t => stop = nodes.map(v => math.abs(next(v) - rank(v))).max <= scale * t / 1000)
+      rank = next
     }
     rank
   }
@@ -223,19 +238,56 @@ class GraphSpec extends AnyFunSuite {
       val got = graft.operators.Graph.pageRank(edf, "src", "dst", iters,
           dampingPct = 85, scale = 1000000L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val want = naivePageRank(es, iters, 85, 1000000L)
+      val unit = es.map { case (s, d) => (s, d, 1L) }
+      val want = referenceRank(unit, None, iters, 85, 1000000L, None)
       val trustOk = if (seedSet.isEmpty) true else {
         val sdf = seedSet.toSeq.toDF("s")
         val gotT = graft.operators.Graph.trustRank(edf, "src", "dst", sdf, "s",
             iters, dampingPct = 85, scale = 1000000L)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val nodeSet = (es.map(_._1) ++ es.map(_._2)).toSet
-        gotT == naivePageRank(es, iters, 85, 1000000L,
-          seeds = Some(seedSet.intersect(nodeSet)))
+        gotT == referenceRank(unit, Some(seedSet), iters, 85, 1000000L, None)
       }
       got == want && trustOk
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("pageRank/trustRank match the driver-side reference across checkpoints, weights and tolPm (property)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // self-loops and parallel edges come from drawing endpoints with
+    // replacement; node ids up to nNodes+2 as seeds include phantom seeds
+    val genCase = for {
+      nNodes <- Gen.choose(2, 8)
+      nEdges <- Gen.choose(1, 16)
+      es <- Gen.listOfN(nEdges, Gen.zip(Gen.choose(0L, nNodes - 1L),
+        Gen.choose(0L, nNodes - 1L), Gen.choose(1L, 5L)))
+      weighted <- Gen.oneOf(true, false)
+      dampingPct <- Gen.oneOf(0, 50, 85, 100)
+      iters <- Gen.oneOf(0, 1, 9, 17)
+      tolPm <- Gen.oneOf(None, Some(1L), Some(200L))
+      scale <- Gen.oneOf(1000L, 1000000L)
+      seeds <- Gen.listOf(Gen.choose(0L, nNodes + 2L))
+    } yield (es, weighted, dampingPct, iters, tolPm, scale, seeds.toSet)
+    val prop = Prop.forAllNoShrink(genCase) {
+      case c @ (es, weighted, dampingPct, iters, tolPm, scale, seeds) =>
+        val edf = es.toDF("src", "dst", "w")
+        val weightCol = if (weighted) Some("w") else None
+        val refEdges = if (weighted) es else es.map { case (s, d, _) => (s, d, 1L) }
+        def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+          df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val pr = asMap(Graph.pageRank(edf, "src", "dst", iters, dampingPct, scale,
+          weightCol, tolPm))
+        val prOk = pr == referenceRank(refEdges, None, iters, dampingPct, scale, tolPm)
+        // trustRank rejects dampingPct = 100
+        val trOk = dampingPct == 100 || asMap(Graph.trustRank(edf, "src", "dst",
+            seeds.toSeq.toDF("s"), "s", iters, dampingPct, scale, weightCol, tolPm)) ==
+          referenceRank(refEdges, Some(seeds), iters, dampingPct, scale, tolPm)
+        Prop(prOk && trOk) :| s"case $c: pageRank ok=$prOk, trustRank ok=$trOk"
+    }
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(24)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261020L))
+    val res = SCTest.check(params, prop)
     assert(res.passed, res.status.toString)
   }
 
