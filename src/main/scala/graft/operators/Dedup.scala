@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFns, VectorFns}
+import graft.streaming.StateCodec
 
 /** One LSH-banded row of a streaming document: `bucket` is the 64-bit band
   * key (xxhash64 of the band's signature slice + band index), `sig` the full
@@ -15,12 +16,23 @@ final case class NearDupBandRow(bucket: Long, band: Int, id: Long, tsUs: Long,
   * future arrivals in this bucket verify against.
   */
 final case class NearDupMember(id: Long, tsUs: Long, sig: Seq[Long])
+object NearDupMember {
+  implicit val codec: StateCodec[NearDupMember] = StateCodec.product[NearDupMember] {
+    (w, m) => w.long(m.id); w.long(m.tsUs); w.seq(m.sig)
+  }(r => NearDupMember(r.long(), r.long(), r.seq[Long]()))
+}
 
 /** Keyed state for one LSH bucket. `saturatedDrops` counts arrivals that
   * could not be recorded past maxBucketSize (skew guard).
   */
 final case class NearDupBucketState(members: Seq[NearDupMember],
                                     saturatedDrops: Long)
+object NearDupBucketState {
+  implicit val codec: StateCodec[NearDupBucketState] =
+    StateCodec.product[NearDupBucketState] { (w, s) =>
+      w.seq(s.members); w.long(s.saturatedDrops)
+    }(r => NearDupBucketState(r.seq[NearDupMember](), r.long()))
+}
 
 /** Per-band verdict: `dupOf`/`estJaccard` set iff a bucket member within
   * the horizon verified as a near-duplicate of this arrival.
@@ -843,7 +855,8 @@ object Dedup {
       .select(col("bucket"), col("band"), col("id"), col("tsUs"), col("sig"),
         col("eventTime"))
     implicit val rowEnc: Encoder[NearDupBandRow] = Encoders.product[NearDupBandRow]
-    implicit val stEnc: Encoder[NearDupBucketState] = Encoders.product[NearDupBucketState]
+    implicit val stEnc: Encoder[Array[Byte]] = Encoders.BINARY
+    val codec = NearDupBucketState.codec
     implicit val outEnc: Encoder[NearDupVerdict] = Encoders.product[NearDupVerdict]
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
     def estJac(a: Seq[Long], b: Seq[Long]): Double = {
@@ -854,23 +867,23 @@ object Dedup {
     val ds = banded.as[NearDupBandRow](rowEnc)
     ds.groupByKey(_.bucket).flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: Long, it: Iterator[NearDupBandRow], state: GroupState[NearDupBucketState]) =>
+      (_: Long, it: Iterator[NearDupBandRow], state: GroupState[Array[Byte]]) =>
         val wmUs = state.getCurrentWatermarkMs() * 1000L
         def live(ms: Seq[NearDupMember]): Seq[NearDupMember] =
           ms.filter(m => m.tsUs + horizonUs >= wmUs)
         if (state.hasTimedOut) {
-          val st = state.getOption.getOrElse(NearDupBucketState(Nil, 0L))
+          val st = state.getOption.fold(NearDupBucketState(Nil, 0L))(codec.decode)
           val kept = live(st.members)
           if (kept.isEmpty) state.remove()
           else {
-            state.update(st.copy(members = kept))
+            state.update(codec.encode(st.copy(members = kept)))
             state.setTimeoutTimestamp(math.max(
               (kept.map(_.tsUs + horizonUs).max + 999L) / 1000L,
               state.getCurrentWatermarkMs() + 1))
           }
           Iterator.empty
         } else {
-          val st = state.getOption.getOrElse(NearDupBucketState(Nil, 0L))
+          val st = state.getOption.fold(NearDupBucketState(Nil, 0L))(codec.decode)
           var members = live(st.members).toVector
           var drops = st.saturatedDrops
           val out = Vector.newBuilder[NearDupVerdict]
@@ -902,7 +915,7 @@ object Dedup {
           // worst cost of forgetting is a repeated saturation warning)
           if (members.isEmpty) state.remove()
           else {
-            state.update(NearDupBucketState(members, drops))
+            state.update(codec.encode(NearDupBucketState(members, drops)))
             state.setTimeoutTimestamp(math.max(
               (members.map(_.tsUs + horizonUs).max + 999L) / 1000L,
               state.getCurrentWatermarkMs() + 1))

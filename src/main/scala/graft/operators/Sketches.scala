@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import graft.streaming.StateCodec
 
 /** Bounded-state sketches for corpus-scale cardinality and frequency —
   * the two questions every 100 TB curation run asks first ("how many
@@ -449,7 +450,10 @@ object Sketches {
     * Misra-Gries pruning pass so no full-corpus groupBy runs. NULL keys
     * count as their own group, exactly like the SQL `GROUP BY` the oracle
     * replays (a dominant NULL lang IS a datacard finding, not noise).
-    * Output: `(key STRING, cnt BIGINT)`, count-descending then key.
+    * Output: `(key STRING, cnt BIGINT)`, unordered: every caller orders
+    * or packs the rows itself, and a sort here would be a second range
+    * exchange under their sort (`EliminateSorts` does not look through
+    * the `Union` of `q_sketch_heavy`).
     */
   def heavyHitters(df: DataFrame, keyCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -501,7 +505,6 @@ object Sketches {
       .groupBy(col("key"), col("__n")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") * (k + 1) > col("__n"))
       .select(col("key"), col("cnt"))
-      .orderBy(col("cnt").desc, col("key"))
   }
 
   /** Per-group exact heavy hitters — "heavy tokens per language", the
@@ -581,10 +584,19 @@ object Sketches {
                               hv: Option[Long], skey: String)
   /** Bottom-k state: sorted ascending, ≤ k values. */
   final case class KmvWinState(hvs: Seq[Long])
+  object KmvWinState {
+    implicit val codec: StateCodec[KmvWinState] =
+      StateCodec.product[KmvWinState]((w, s) => w.seq(s.hvs))(r => KmvWinState(r.seq[Long]()))
+  }
   final case class KmvWinOut(gk: String, winStartUs: Long, kUsed: Long,
                              kthHash: Long, estDistinct: Long)
   /** Misra-Gries state: ≤ k (key, counter) pairs. */
   final case class MgWinState(keys: Seq[String], cnts: Seq[Long])
+  object MgWinState {
+    implicit val codec: StateCodec[MgWinState] = StateCodec.product[MgWinState] {
+      (w, s) => w.seq(s.keys); w.seq(s.cnts)
+    }(r => MgWinState(r.seq[String](), r.seq[Long]()))
+  }
   final case class MgWinOut(gk: String, winStartUs: Long, hh: Seq[String])
 
   private def sketchWinInput(df: DataFrame, groupCols: Seq[String],
@@ -628,15 +640,16 @@ object Sketches {
     require(k >= 2, s"k must be >= 2, got $k")
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     implicit val keyEnc = Encoders.product[(String, Long)]
-    implicit val stEnc = Encoders.product[KmvWinState]
+    implicit val stEnc = Encoders.BINARY
+    val codec = KmvWinState.codec
     implicit val outEnc = Encoders.product[KmvWinOut]
     sketchWinInput(df, groupCols, keyCol, windowUs, lateness)
       .groupByKey(e => (e.gk, e.winStartUs))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long), it: Iterator[SkWinEvent], state: GroupState[KmvWinState]) =>
+        (key: (String, Long), it: Iterator[SkWinEvent], state: GroupState[Array[Byte]]) =>
           val (gk, win) = key
           if (state.hasTimedOut) {
-            val hvs = state.getOption.map(_.hvs).getOrElse(Nil)
+            val hvs = state.getOption.map(codec.decode(_).hvs).getOrElse(Nil)
             state.remove()
             if (hvs.isEmpty) Iterator.empty
             else {
@@ -648,13 +661,14 @@ object Sketches {
             }
           } else {
             val set = new java.util.TreeSet[java.lang.Long]()
-            state.getOption.foreach(_.hvs.foreach(h => set.add(h)))
+            state.getOption.foreach(codec.decode(_).hvs.foreach(h => set.add(h)))
             it.foreach(e => e.hv.foreach { h =>
               if (set.size < k) set.add(h)
               else if (h < set.last()) { if (set.add(h)) set.pollLast() }
             })
             import scala.jdk.CollectionConverters._
-            state.update(KmvWinState(set.iterator().asScala.map(_.longValue()).toSeq))
+            state.update(codec.encode(
+              KmvWinState(set.iterator().asScala.map(_.longValue()).toSeq)))
             state.setTimeoutTimestamp(math.max(ceilMs(win + windowUs),
               state.getCurrentWatermarkMs() + 1))
             Iterator.empty
@@ -677,15 +691,16 @@ object Sketches {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     implicit val keyEnc = Encoders.product[(String, Long)]
-    implicit val stEnc = Encoders.product[MgWinState]
+    implicit val stEnc = Encoders.BINARY
+    val codec = MgWinState.codec
     implicit val outEnc = Encoders.product[MgWinOut]
     sketchWinInput(df, groupCols, keyCol, windowUs, lateness)
       .groupByKey(e => (e.gk, e.winStartUs))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long), it: Iterator[SkWinEvent], state: GroupState[MgWinState]) =>
+        (key: (String, Long), it: Iterator[SkWinEvent], state: GroupState[Array[Byte]]) =>
           val (gk, win) = key
           if (state.hasTimedOut) {
-            val st = state.getOption.getOrElse(MgWinState(Nil, Nil))
+            val st = state.getOption.fold(MgWinState(Nil, Nil))(codec.decode)
             state.remove()
             if (st.keys.isEmpty) Iterator.empty
             else {
@@ -693,7 +708,7 @@ object Sketches {
             }
           } else {
             val counters = scala.collection.mutable.HashMap.empty[String, Long]
-            state.getOption.foreach(s => s.keys.zip(s.cnts).foreach {
+            state.getOption.map(codec.decode).foreach(s => s.keys.zip(s.cnts).foreach {
               case (kk, c) => counters(kk) = c })
             it.foreach { e =>
               val s = e.skey
@@ -708,7 +723,7 @@ object Sketches {
               }
             }
             val (ks, cs) = counters.toSeq.unzip
-            state.update(MgWinState(ks, cs))
+            state.update(codec.encode(MgWinState(ks, cs)))
             state.setTimeoutTimestamp(math.max(ceilMs(win + windowUs),
               state.getCurrentWatermarkMs() + 1))
             Iterator.empty
@@ -751,6 +766,15 @@ object Sketches {
       hb: Seq[Seq[Long]], hc: Seq[Seq[Long]],
       an: Seq[Long], asd: Seq[Double], asl: Seq[Long],
       amnd: Seq[Double], amxd: Seq[Double], amnl: Seq[Long], amxl: Seq[Long])
+  object MsWinState {
+    implicit val codec: StateCodec[MsWinState] = StateCodec.product[MsWinState] { (w, s) =>
+      w.seq(s.kmv); w.seq(s.mgKeys); w.seq(s.mgCnts); w.seq(s.hb); w.seq(s.hc)
+      w.seq(s.an); w.seq(s.asd); w.seq(s.asl)
+      w.seq(s.amnd); w.seq(s.amxd); w.seq(s.amnl); w.seq(s.amxl)
+    }(r => MsWinState(r.seq[Seq[Long]](), r.seq[Seq[String]](), r.seq[Seq[Long]](),
+      r.seq[Seq[Long]](), r.seq[Seq[Long]](), r.seq[Long](), r.seq[Double](),
+      r.seq[Long](), r.seq[Double](), r.seq[Double](), r.seq[Long](), r.seq[Long]()))
+  }
 
   /** One row per (group, window) at watermark close: per-section results
     * positionally aligned with the spec lists. `kmvEst` −1 = no non-NULL
@@ -798,7 +822,8 @@ object Sketches {
     import org.apache.spark.sql.Dataset
     implicit val evEnc = Encoders.product[MsWinEvent]
     implicit val keyEnc = Encoders.product[(String, Long)]
-    implicit val stEnc = Encoders.product[MsWinState]
+    implicit val stEnc = Encoders.BINARY
+    val codec = MsWinState.codec
     implicit val outEnc = Encoders.product[MsWinOut]
     val gkCol =
       if (groupCols.isEmpty) lit("")
@@ -866,10 +891,10 @@ object Sketches {
     input
       .groupByKey(e => (e.gk, e.winStartUs))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long), it: Iterator[MsWinEvent], state: GroupState[MsWinState]) =>
+        (key: (String, Long), it: Iterator[MsWinEvent], state: GroupState[Array[Byte]]) =>
           val (gk, win) = key
           if (state.hasTimedOut) {
-            val st = state.getOption
+            val st = state.getOption.map(codec.decode)
             state.remove()
             st match {
               case None => Iterator.empty
@@ -928,7 +953,7 @@ object Sketches {
                   aggL.toSeq, aggD.toSeq, aggNull.toSeq))
             }
           } else {
-            val s0 = state.getOption.getOrElse(MsWinState(
+            val s0 = state.getOption.map(codec.decode).getOrElse(MsWinState(
               Seq.fill(nKmv)(Nil), Seq.fill(nMg)(Nil), Seq.fill(nMg)(Nil),
               Seq.fill(nHist)(Nil), Seq.fill(nHist)(Nil),
               Seq.fill(nAgg)(0L), Seq.fill(nAgg)(0.0), Seq.fill(nAgg)(0L),
@@ -1002,12 +1027,12 @@ object Sketches {
             import scala.jdk.CollectionConverters._
             val mgPairs = mgMaps.toSeq.map(_.toSeq)
             val histPairs = histMaps.toSeq.map(_.toSeq)
-            state.update(MsWinState(
+            state.update(codec.encode(MsWinState(
               kmvSets.toSeq.map(_.iterator().asScala.map(_.longValue()).toSeq),
               mgPairs.map(_.map(_._1)), mgPairs.map(_.map(_._2)),
               histPairs.map(_.map(_._1)), histPairs.map(_.map(_._2)),
               an.toSeq, asd.toSeq, asl.toSeq,
-              amnd.toSeq, amxd.toSeq, amnl.toSeq, amxl.toSeq))
+              amnd.toSeq, amxd.toSeq, amnl.toSeq, amxl.toSeq)))
             state.setTimeoutTimestamp(math.max(ceilMs(win + windowUs),
               state.getCurrentWatermarkMs() + 1))
             Iterator.empty

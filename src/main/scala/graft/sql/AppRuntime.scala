@@ -1,7 +1,8 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** WITH-clause connector auto-attach (SURVEY §2.1; reference
   * auto_attach_from_sql_definitions, eventflux_app_runtime.rs:996-1040):
@@ -39,32 +40,45 @@ object AppRuntime {
     * discarded; 'log'/absent → the null-padded row passes through (the
     * pre-round-6 behavior, kept as the default).
     */
-  private def mapLines(raw: DataFrame, sd: GraftApp.StreamDef)
+  private[sql] def mapLines(raw: DataFrame, sd: GraftApp.StreamDef)
       : (DataFrame, Option[DataFrame]) = {
-    import org.apache.spark.sql.functions.{col, from_csv, get_json_object}
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import org.apache.spark.sql.functions.{col, from_csv, from_json, get_json_object, lit, when}
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField}
     if (sd.schema.fieldNames.toSeq == Seq("value")) return (raw, None)
     val onError = sd.options.get("on.error").map(_.toLowerCase)
     val (mapped, badLine) =
       if (sd.options.get("map.format").contains("json") ||
           sd.options.keys.exists(_.startsWith("json.mapping."))) {
-        val m = raw.select((col("value").as("__line") +: sd.schema.fields.map { f =>
+        def nested(t: DataType): Boolean = t match {
+          case _: StructType | _: ArrayType | _: MapType => true
+          case _ => false
+        }
+        // per column: the JSONPath extract, cast to the declared type;
+        // nested declared types (STRUCT/ARRAY columns, round 14): the
+        // JSONPath extract returns the sub-object's JSON text — parse it
+        // into the declared shape ($.a.b maps into a struct field)
+        def extract(f: StructField) = {
           val path = sd.options.getOrElse(s"json.mapping.${f.name}", s"$$.${f.name}")
           val extracted = get_json_object(col("value"), path)
-          f.dataType match {
-            // nested declared types (STRUCT/ARRAY columns, round 14): the
-            // JSONPath extract returns the sub-object's JSON text — parse
-            // it into the declared shape ($.a.b maps into a struct field)
-            case _: org.apache.spark.sql.types.StructType |
-                 _: org.apache.spark.sql.types.ArrayType |
-                 _: org.apache.spark.sql.types.MapType =>
-              org.apache.spark.sql.functions.from_json(extracted, f.dataType)
-                .as(f.name)
-            case _ => extracted.cast(f.dataType).as(f.name)
-          }
-        }.toIndexedSeq): _*)
+          if (nested(f.dataType)) from_json(extracted, f.dataType)
+          else extracted.cast(f.dataType)
+        }
         // a line that is not valid JSON extracts nothing — '$' itself nulls
-        (m, get_json_object(col("__line"), "$").isNull)
+        val invalid = get_json_object(col("value"), "$").isNull
+        val parseOnce = !sd.options.keys.exists(_.startsWith("json.mapping.")) &&
+          !sd.schema.fields.exists(f => nested(f.dataType))
+        // one parse: a trusted line casts the parse's strings, any other
+        // line takes the per-column extracts (CASE WHEN evaluates only the
+        // branch it picks)
+        val trusted = trustedJsonLine(col("value"), col("__r"), sd.schema)
+        def once(c: Column, perColumn: Column) =
+          if (parseOnce) when(trusted, c).otherwise(perColumn) else perColumn
+        val lines =
+          if (parseOnce) raw.select(col("value"), parseJsonOnce(col("value"), sd.schema).as("__r"))
+          else raw
+        (lines.select((col("value").as("__line") +: sd.schema.fields.map { f =>
+          once(col(s"__r.${f.name}").cast(f.dataType), extract(f)).as(f.name)
+        }.toIndexedSeq :+ once(lit(false), invalid).as("__bad")): _*), col("__bad"))
       } else {
         // PERMISSIVE parse with a corrupt-record column: a malformed line
         // (wrong arity / untypeable field) lands there verbatim
@@ -87,6 +101,48 @@ object AppRuntime {
       case _ => None
     }
     (good.select(sd.schema.fieldNames.map(col).toIndexedSeq: _*), faults)
+  }
+
+  /** The json mapper's one parse per line, for a declaration whose
+    * columns are all auto-mapped and atomic: one `from_json` of every
+    * declared field as a STRING, plus a corrupt-record column `__corrupt`.
+    * The parser options match `get_json_object`'s: NaN/Infinity are not
+    * numbers, raw control characters are allowed in strings.
+    */
+  private[sql] def parseJsonOnce(line: Column, schema: StructType): Column = {
+    import org.apache.spark.sql.functions.from_json
+    import org.apache.spark.sql.types.{StringType, StructField}
+    from_json(line, StructType(schema.fields.map(f => StructField(f.name, StringType)) :+
+      StructField("__corrupt", StringType)), Map("mode" -> "PERMISSIVE",
+      "columnNameOfCorruptRecord" -> "__corrupt", "allowNonNumericNumbers" -> "false",
+      "allowUnquotedControlChars" -> "true"))
+  }
+
+  /** Whether the [[parseJsonOnce]] result `parsed` of `line` answers it
+    * exactly as the per-column `get_json_object(line, '$.<name>')` extracts
+    * do. The parse must have produced an object (not null, no `__corrupt`):
+    * an empty, invalid or non-object line is the extracts' and the '$'
+    * probe's to classify. And no declared key may be duplicated, since
+    * `get_json_object` takes a duplicated key's FIRST value and `from_json`
+    * its last: the line has no backslash and no single quote (so every key
+    * is a plain double-quoted name) and each declared key's quoted name
+    * occurs at most once. A false negative costs only the per-column
+    * extracts for that line. AppRuntimeJsonSpec pins the parity.
+    */
+  private[sql] def trustedJsonLine(line: Column, parsed: Column, schema: StructType): Column = {
+    import org.apache.spark.sql.functions.udf
+    import org.apache.spark.sql.types.BooleanType
+    // one scan per key with the JDK's String.indexOf: Spark's instr/locate
+    // walk the line by characters and cost more than the parse itself. A
+    // Java UDF, because a typed Scala UDF resolves its input encoders at
+    // every analysis, and a streaming query re-analyzes each micro-batch
+    val keys = schema.fieldNames.map("\"" + _ + "\"")
+    val plainKeys = udf(new org.apache.spark.sql.api.java.UDF1[String, Boolean] {
+      def call(l: String): Boolean =
+        l != null && l.indexOf('\\') < 0 && l.indexOf('\'') < 0 &&
+          keys.forall { q => val i = l.indexOf(q); i < 0 || l.indexOf(q, i + 1) < 0 }
+    }, BooleanType)
+    parsed.isNotNull && parsed.getField("__corrupt").isNull && plainKeys(line)
   }
 
   /** Build source DataFrames for every WITH('type'='source') stream; a

@@ -44,7 +44,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 final case class CepEvent(key: String, tsUs: Long, eventId: Long, etype: String,
                           value: Double, vals: Seq[Double] = Nil,
                           svals: Seq[String] = Nil)
+object CepEvent {
+  implicit val codec: StateCodec[CepEvent] = StateCodec.product[CepEvent] { (w, e) =>
+    w.string(e.key); w.long(e.tsUs); w.long(e.eventId); w.string(e.etype)
+    w.double(e.value); w.seq(e.vals); w.seq(e.svals)
+  }(r => CepEvent(r.string(), r.long(), r.long(), r.string(), r.double(),
+    r.seq[Double](), r.seq[String]()))
+}
 final case class Collected(step: String, events: Seq[CepEvent])
+object Collected {
+  implicit val codec: StateCodec[Collected] = StateCodec.product[Collected] { (w, c) =>
+    w.string(c.step); w.seq(c.events)
+  }(r => Collected(r.string(), r.seq[CepEvent]()))
+}
 /** `matchSeq` (round 12): per-key 1-based ordinal in match-COMPLETION
   * order, carried across micro-batches through [[NfaState.matchSeq]] —
   * the streaming MATCH_NUMBER() equivalent (EMIT ALL ROWS groups a
@@ -54,6 +66,11 @@ final case class Collected(step: String, events: Seq[CepEvent])
   */
 final case class CepMatch(key: String, startUs: Long, endUs: Long,
                           steps: Seq[Collected], matchSeq: Long = 0L)
+object CepMatch {
+  implicit val codec: StateCodec[CepMatch] = StateCodec.product[CepMatch] { (w, m) =>
+    w.string(m.key); w.long(m.startUs); w.long(m.endUs); w.seq(m.steps); w.long(m.matchSeq)
+  }(r => CepMatch(r.string(), r.long(), r.long(), r.seq[Collected](), r.long()))
+}
 /** A [[CepMatch]] tagged with the index of the variant NFA that emitted it
   * (multi-variant patterns: AND arrival orderings, min=0 presence pairs).
   * `matchSeq`: per-key ordinal SHARED across variants, assigned in
@@ -224,12 +241,30 @@ final case class Partial(stepIdx: Int, startUs: Long, startSeq: Long,
                          // loop-back edge.
                          innerIters: Int = 0,
                          innerBase: Seq[Int] = Nil)
+object Partial {
+  implicit val codec: StateCodec[Partial] = StateCodec.product[Partial] { (w, p) =>
+    w.int(p.stepIdx); w.long(p.startUs); w.long(p.startSeq); w.seq(p.collected)
+    w.int(p.iters); w.seq(p.iterBase); w.seq(p.iterHist)
+    w.int(p.innerIters); w.seq(p.innerBase)
+  }(r => Partial(r.int(), r.long(), r.long(), r.seq[Seq[CepEvent]](),
+    r.int(), r.seq[Int](), r.seq[Int](), r.int(), r.seq[Int]()))
+}
 final case class NfaState(partials: Seq[Partial], done: Boolean, seq: Long = 0L,
                           dropped: Long = 0L, matchSeq: Long = 0L)
+object NfaState {
+  implicit val codec: StateCodec[NfaState] = StateCodec.product[NfaState] { (w, s) =>
+    w.seq(s.partials); w.bool(s.done); w.long(s.seq); w.long(s.dropped); w.long(s.matchSeq)
+  }(r => NfaState(r.seq[Partial](), r.bool(), r.long(), r.long(), r.long()))
+}
 /** One state-store entry for a multi-variant pattern family: the i-th
   * entry is variant i's independent NFA state.
   */
 final case class MultiNfaState(states: Seq[NfaState])
+object MultiNfaState {
+  implicit val codec: StateCodec[MultiNfaState] =
+    StateCodec.product[MultiNfaState]((w, s) => w.seq(s.states))(
+      r => MultiNfaState(r.seq[NfaState]()))
+}
 
 object Cep {
 
@@ -366,16 +401,9 @@ object Cep {
 
   private implicit val keyEnc: Encoder[String] = Encoders.STRING
   private implicit val matchEnc: Encoder[CepMatch] = Encoders.product[CepMatch]
-  private implicit val stateEnc: Encoder[NfaState] = Encoders.product[NfaState]
   private implicit val evEnc: Encoder[CepEvent] = Encoders.product[CepEvent]
   private implicit lazy val variantEnc: Encoder[VariantMatch] = Encoders.product[VariantMatch]
-  private implicit lazy val multiEnc: Encoder[MultiNfaState] = Encoders.product[MultiNfaState]
-  private implicit lazy val multiSeqEnc: Encoder[MultiSeqState] = Encoders.product[MultiSeqState]
-  private implicit lazy val skipEnc: Encoder[SkipNfaState] = Encoders.product[SkipNfaState]
-  private implicit lazy val unmatchedEnc: Encoder[UnmatchedNfaState] =
-    Encoders.product[UnmatchedNfaState]
-  private implicit lazy val absentEnc: Encoder[AbsentChainState] =
-    Encoders.product[AbsentChainState]
+  private implicit val stateEnc: Encoder[Array[Byte]] = Encoders.BINARY
 
 
   /** Shared member-completion advance for [[runNfa]] and
@@ -610,6 +638,13 @@ object Cep {
   final case class SkipCand(m: CepMatch, startSeq: Long, endSeq: Long,
                             counts: Seq[Long], groupIters: Long = -1L,
                             hist: Seq[Int] = Nil)
+  object SkipCand {
+    implicit val codec: StateCodec[SkipCand] = StateCodec.product[SkipCand] { (w, c) =>
+      w(c.m); w.long(c.startSeq); w.long(c.endSeq); w.seq(c.counts)
+      w.long(c.groupIters); w.seq(c.hist)
+    }(r => SkipCand(r[CepMatch](), r.long(), r.long(), r.seq[Long](), r.long(),
+      r.seq[Int]()))
+  }
 
   /** State of the streaming skip-past machine: the NFA state (partials
     * enumerate every (start, parse) pair exactly like EVERY mode), the
@@ -618,6 +653,11 @@ object Cep {
     * per start, best-parse-so-far).
     */
   final case class SkipNfaState(nfa: NfaState, pos: Long, cands: Seq[SkipCand])
+  object SkipNfaState {
+    implicit val codec: StateCodec[SkipNfaState] = StateCodec.product[SkipNfaState] {
+      (w, s) => w(s.nfa); w.long(s.pos); w.seq(s.cands)
+    }(r => SkipNfaState(r[NfaState](), r.long(), r.seq[SkipCand]()))
+  }
 
   /** Incremental `AFTER MATCH SKIP PAST LAST ROW` / `SKIP TO FIRST|LAST`
     * (greedy leftmost non-overlapping selection) for a STRICT single-chain
@@ -1026,6 +1066,11 @@ object Cep {
     * row_number ids).
     */
   final case class RowRef(tsUs: Long, eventId: Long)
+  object RowRef {
+    implicit val codec: StateCodec[RowRef] = StateCodec.product[RowRef] {
+      (w, ref) => w.long(ref.tsUs); w.long(ref.eventId)
+    }(r => RowRef(r.long(), r.long()))
+  }
   /** State of the unmatched-rows mode: the inner match machine
     * (SkipNfaState — for the EVERY selection only its `nfa` field is
     * used), the rows not yet provably unmatched, and the claimed refs of
@@ -1033,6 +1078,12 @@ object Cep {
     */
   final case class UnmatchedNfaState(skip: SkipNfaState, pending: Seq[CepEvent],
                                      claimed: Seq[RowRef])
+  object UnmatchedNfaState {
+    implicit val codec: StateCodec[UnmatchedNfaState] =
+      StateCodec.product[UnmatchedNfaState] { (w, s) =>
+        w(s.skip); w.seq(s.pending); w.seq(s.claimed)
+      }(r => UnmatchedNfaState(r[SkipNfaState](), r.seq[CepEvent](), r.seq[RowRef]()))
+  }
 
   /** Trailing absent guard (`… -> NOT B FOR d`, the streaming SQL
     * surface's trailing NOT): a completed base match waits out every
@@ -1051,6 +1102,12 @@ object Cep {
     */
   final case class AbsentChainState(nfa: NfaState, pending: Seq[CepMatch],
                                     seq: Long)
+  object AbsentChainState {
+    implicit val codec: StateCodec[AbsentChainState] =
+      StateCodec.product[AbsentChainState] { (w, s) =>
+        w(s.nfa); w.seq(s.pending); w.long(s.seq)
+      }(r => AbsentChainState(r[NfaState](), r.seq[CepMatch](), r.long()))
+  }
 
   /** State of the multi-variant all-rows mode: every variant's NFA state
     * plus the per-key match ordinal SHARED across variants (streaming EMIT
@@ -1058,6 +1115,11 @@ object Cep {
     * variant — two variants' counters would collide).
     */
   final case class MultiSeqState(states: Seq[NfaState], shared: Long)
+  object MultiSeqState {
+    implicit val codec: StateCodec[MultiSeqState] = StateCodec.product[MultiSeqState] {
+      (w, s) => w.seq(s.states); w.long(s.shared)
+    }(r => MultiSeqState(r.seq[NfaState](), r.long()))
+  }
 
   /** What [[detectStream]] runs besides the pattern specs — one record,
     * derived by the SQL compiler from the query:
@@ -1145,10 +1207,12 @@ object Cep {
     * drained key's entry or updates it and schedules the next wake-up
     * (event-time ms, rounded up; clamped above the watermark — registering
     * at-or-below it is rejected by the state store). Without a lateness
-    * the state is always kept and never times out.
+    * the state is always kept and never times out. The store holds `S` as
+    * one binary column through its [[StateCodec]].
     */
-  private def drive[S: Encoder, O: Encoder](ds: Dataset[CepEvent], m: Machine[S, O],
-                                           lateness: Option[String]): DataFrame = {
+  private def drive[S, O: Encoder](ds: Dataset[CepEvent], m: Machine[S, O],
+                                   lateness: Option[String])(
+      implicit codec: StateCodec[S]): DataFrame = {
     val in = lateness.fold(ds)(delay => ds.toDF()
       .withColumn("eventTime", timestamp_micros(col("tsUs")))
       .withWatermark("eventTime", delay)
@@ -1156,17 +1220,17 @@ object Cep {
     in.groupByKey(_.key).flatMapGroupsWithState(OutputMode.Append,
         if (lateness.isDefined) GroupStateTimeout.EventTimeTimeout
         else GroupStateTimeout.NoTimeout) {
-      (_: String, it: Iterator[CepEvent], state: GroupState[S]) =>
-        val s0 = state.getOption.getOrElse(m.empty)
+      (_: String, it: Iterator[CepEvent], state: GroupState[Array[Byte]]) =>
+        val s0 = state.getOption.fold(m.empty)(codec.decode)
         val wmUs =
           if (lateness.isDefined) state.getCurrentWatermarkMs() * 1000L else Long.MinValue
         val (out, s1) =
           if (state.hasTimedOut) m.sweep(s0, wmUs)
           else m.fold(s0, it.toSeq.sortBy(e => (e.tsUs, e.eventId)), wmUs)
-        if (lateness.isEmpty) state.update(s1)
+        if (lateness.isEmpty) state.update(codec.encode(s1))
         else if (!m.keep(s1)) state.remove()
         else {
-          state.update(s1)
+          state.update(codec.encode(s1))
           m.wake(s1).foreach(d => state.setTimeoutTimestamp(
             math.max(ceilMs(d), state.getCurrentWatermarkMs() + 1)))
         }

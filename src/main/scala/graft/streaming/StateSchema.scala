@@ -4,39 +4,43 @@ import org.apache.spark.sql.SparkSession
 
 /** Streaming kernel state-schema versioning.
   *
-  * The `flatMapGroupsWithState` kernels encode their state with case-class
-  * encoders (WinEvent/WinOut slots, CEP partial-match buffers, comparand
-  * slots); any change to those shapes breaks checkpoint compatibility, and
-  * Spark surfaces that as an opaque state-store schema-check failure deep in
-  * the first micro-batch. This object turns that into a TYPED, actionable
+  * The `flatMapGroupsWithState` kernels store their state as one binary
+  * column written by each state type's [[StateCodec]] (WinEvent buffers,
+  * CEP partial-match buffers, comparand slots, sketch counters); any change
+  * to those shapes or codecs breaks checkpoint compatibility, and Spark
+  * would surface that as an opaque failure deep in the first micro-batch.
+  * This object turns that into a TYPED, actionable
   * error at query-start time: every checkpoint directory the app runtime
   * uses gets a `graft-state-version.json` marker, and a restart against a
   * marker from another build fails with "written by v7, this build is v8 —
   * restart fresh" BEFORE any executor work.
   *
-  * [[Version]] must be bumped on every state-shape change (the bumps so
-  * far: round 7 svals carry-through, round 8 svals projection + sort-window
-  * string comparand, round 9 checkpointed sources, round 10 multi-variant
-  * patterns consolidate V per-variant NFA kernels into one MultiNfaState
-  * kernel, round 11(schema v11, shipped round 12): NfaState grows the
-  * per-key `matchSeq` match-completion counter backing streaming EMIT ALL
-  * ROWS' mr_match_number, round 13 (v12): AbsentChainState
+  * [[Version]] must be bumped on every state-shape or codec change (the
+  * bumps so far: round 7 svals carry-through, round 8 svals projection +
+  * sort-window string comparand, round 9 checkpointed sources, round 10
+  * multi-variant patterns consolidate V per-variant NFA kernels into one
+  * MultiNfaState kernel, round 11(schema v11, shipped round 12): NfaState
+  * grows the per-key `matchSeq` match-completion counter backing streaming
+  * EMIT ALL ROWS' mr_match_number, round 13 (v12): AbsentChainState
   * grows the conclusive-emission ordinal `seq` so guard-killed matches
   * never gap mr_match_number, plus the new MultiSeqState/UnmatchedNfaState
   * states (the multi-variant all-rows and unmatched-rows modes of
   * `Cep.detectStream`), round 14 (v13): Partial grows the loop-group
   * iteration frame `iters`/`iterBase`/`iterHist` backing quantified group
-  * members and bounded groups on the loop machine, round 15 (v14) =
-  * current: Partial grows the NESTED iteration frame `innerIters`/
-  * `innerBase` backing variable-count nested groups `((A B){1,3} C)+`).
-  * StateSchemaSpec pins every state encoder's schema to this version.
+  * members and bounded groups on the loop machine, round 15 (v14): Partial
+  * grows the NESTED iteration frame `innerIters`/`innerBase` backing
+  * variable-count nested groups `((A B){1,3} C)+`, v15 = current: every
+  * state type is stored as one BINARY column through its [[StateCodec]]
+  * instead of a case-class encoder, so no micro-batch compiles a state
+  * deserializer; the logical shapes are the v14 ones).
+  * StateSchemaSpec pins every state codec's bytes to this version.
   * Library users driving the kernels directly (not through AppRuntime)
   * can call [[guard]] themselves.
   */
 object StateSchema {
 
   /** Current state-schema generation of the streaming kernels. */
-  val Version: Int = 14
+  val Version: Int = 15
 
   private val MarkerName = "graft-state-version.json"
 

@@ -12,6 +12,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 final case class WinEvent(key: String, tsUs: Long, eventId: Long, value: Double,
                           vals: Seq[Double] = Nil, svals: Seq[String] = Nil)
+object WinEvent {
+  implicit val codec: StateCodec[WinEvent] = StateCodec.product[WinEvent] { (w, e) =>
+    w.string(e.key); w.long(e.tsUs); w.long(e.eventId); w.double(e.value)
+    w.seq(e.vals); w.seq(e.svals)
+  }(r => WinEvent(r.string(), r.long(), r.long(), r.double(), r.seq[Double](), r.seq[String]()))
+}
 final case class WinOut(key: String, tsUs: Long, eventId: Long, value: Double, op: Int,
                         svals: Seq[String] = Nil)
 
@@ -19,7 +25,16 @@ final case class WinOut(key: String, tsUs: Long, eventId: Long, value: Double, o
   * value, its count, and the latest retained event of that value.
   */
 final case class FreqEntry(attr: String, cnt: Long, ev: WinEvent)
+object FreqEntry {
+  implicit val codec: StateCodec[FreqEntry] = StateCodec.product[FreqEntry] { (w, e) =>
+    w.string(e.attr); w.long(e.cnt); w(e.ev)
+  }(r => FreqEntry(r.string(), r.long(), r[WinEvent]()))
+}
 final case class FreqState(entries: Seq[FreqEntry])
+object FreqState {
+  implicit val codec: StateCodec[FreqState] =
+    StateCodec.product[FreqState]((w, s) => w.seq(s.entries))(r => FreqState(r.seq[FreqEntry]()))
+}
 
 /** Manku-Motwani lossy-counting slot: tracked attribute value, observed
   * count since tracking began, the bucket-offset error bound Δ (events of
@@ -29,7 +44,17 @@ final case class FreqState(entries: Seq[FreqEntry])
   */
 final case class LossyEntry(attr: String, cnt: Long, delta: Long,
                             ev: WinEvent, emitted: Boolean)
+object LossyEntry {
+  implicit val codec: StateCodec[LossyEntry] = StateCodec.product[LossyEntry] { (w, e) =>
+    w.string(e.attr); w.long(e.cnt); w.long(e.delta); w(e.ev); w.bool(e.emitted)
+  }(r => LossyEntry(r.string(), r.long(), r.long(), r[WinEvent](), r.bool()))
+}
 final case class LossyState(n: Long, entries: Seq[LossyEntry])
+object LossyState {
+  implicit val codec: StateCodec[LossyState] = StateCodec.product[LossyState] { (w, s) =>
+    w.long(s.n); w.seq(s.entries)
+  }(r => LossyState(r.long(), r.seq[LossyEntry]()))
+}
 
 /** `OUTPUT FIRST|LAST|ALL EVERY n EVENTS` behavior selector
   * (output_rate.rs:10-22 `OutputRateBehavior` × `EventsOutputRate`).
@@ -45,6 +70,11 @@ object RateBehavior {
   * open chunk's buffer (ALL — bounded by n).
   */
 final case class RateBuffer(cnt: Long, pending: Seq[WinEvent])
+object RateBuffer {
+  implicit val codec: StateCodec[RateBuffer] = StateCodec.product[RateBuffer] { (w, s) =>
+    w.long(s.cnt); w.seq(s.pending)
+  }(r => RateBuffer(r.long(), r.seq[WinEvent]()))
+}
 
 /** Pure window-kernel state machines: (ordered events, state) → (changelog,
   * state). Kept Spark-free so invariants are property-testable directly
@@ -58,6 +88,11 @@ object WindowKernels {
 
   /** Kernel state: retained events + (for lengthBatch) the previous batch. */
   final case class WinBuffer(events: Seq[WinEvent], prev: Seq[WinEvent])
+  object WinBuffer {
+    implicit val codec: StateCodec[WinBuffer] = StateCodec.product[WinBuffer] { (w, b) =>
+      w.seq(b.events); w.seq(b.prev)
+    }(r => WinBuffer(r.seq[WinEvent](), r.seq[WinEvent]()))
+  }
   val EmptyBuffer: WinBuffer = WinBuffer(Nil, Nil)
 
   /** Changelog row constructors: the event's payload slots (svals) ride
@@ -352,29 +387,35 @@ object Windows {
 
   private implicit val keyEnc: Encoder[String] = Encoders.STRING
   private implicit val outEnc: Encoder[WinOut] = Encoders.product[WinOut]
-  private implicit val bufEnc: Encoder[WinBuffer] = Encoders.product[WinBuffer]
+  private implicit val stateEnc: Encoder[Array[Byte]] = Encoders.BINARY
 
   private def sorted(it: Iterator[WinEvent]): Seq[WinEvent] =
     it.toSeq.sortBy(e => (e.tsUs, e.eventId))
 
-  /** Kernel dispatch: streaming inputs run the keyed-state form; batch
-    * inputs fold through [[foldSorted]] — a spillable secondary sort plus a
+  /** Kernel dispatch: streaming inputs run the keyed-state form, with the
+    * state in one binary column through its [[StateCodec]]; batch inputs
+    * fold through [[foldSortedS]] — a spillable secondary sort plus a
     * fixed-size chunked fold, so a hot key's whole history is NEVER resident
     * (the flatMapGroupsWithState batch path materializes each key group).
     * Chunked ≡ one-shot is the WindowPropSpec/StreamingSpec-pinned property
     * every kernel satisfies by construction.
     */
-  private def kernel(ds: Dataset[WinEvent])(
-      f: (Seq[WinEvent], WinBuffer) => (Seq[WinOut], WinBuffer)): Dataset[WinOut] =
+  private def keyed[S](ds: Dataset[WinEvent], empty: S)(
+      f: (Seq[WinEvent], S) => (Seq[WinOut], S))(
+      implicit codec: StateCodec[S]): Dataset[WinOut] =
     if (ds.isStreaming)
       ds.groupByKey(_.key).flatMapGroupsWithState(
           OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[WinEvent], state: GroupState[WinBuffer]) =>
-          val (out, next) = f(sorted(it), state.getOption.getOrElse(EmptyBuffer))
-          state.update(next)
+        (_: String, it: Iterator[WinEvent], state: GroupState[Array[Byte]]) =>
+          val (out, next) = f(sorted(it), state.getOption.fold(empty)(codec.decode))
+          state.update(codec.encode(next))
           out.iterator
       }
-    else foldSorted(ds)(f)
+    else foldSortedS(ds, empty)(f)
+
+  private def kernel(ds: Dataset[WinEvent])(
+      f: (Seq[WinEvent], WinBuffer) => (Seq[WinOut], WinBuffer)): Dataset[WinOut] =
+    keyed(ds, EmptyBuffer)(f)
 
   /** Sliding count window of size n: every arrival emits Current; once full,
     * each arrival also evicts (Expired) the oldest event.
@@ -429,61 +470,27 @@ object Windows {
     * row_number-block query.
     */
   def outputEveryN(ds: Dataset[WinEvent], n: Int,
-                   behavior: RateBehavior): Dataset[WinOut] = {
-    implicit val rateEnc: Encoder[RateBuffer] = Encoders.product[RateBuffer]
-    if (ds.isStreaming)
-      ds.groupByKey(_.key).flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[WinEvent], state: GroupState[RateBuffer]) =>
-          val (out, next) = WindowKernels.everyNEvents(sorted(it),
-            state.getOption.getOrElse(RateBuffer(0L, Nil)), n, behavior)
-          state.update(next)
-          out.iterator
-      }
-    else foldSortedS(ds, RateBuffer(0L, Nil))(
-      (evs, st) => WindowKernels.everyNEvents(evs, st, n, behavior))
-  }
+                   behavior: RateBehavior): Dataset[WinOut] =
+    keyed(ds, RateBuffer(0L, Nil))(WindowKernels.everyNEvents(_, _, n, behavior))
 
   /** frequent window: Misra-Gries top-k by an attribute of the event
     * (default: the value field). State is O(k) per partition key.
     */
   def frequent(ds: Dataset[WinEvent], k: Int,
-               attrOf: WinEvent => String = _.value.toString): Dataset[WinOut] = {
-    implicit val freqEnc: Encoder[FreqState] = Encoders.product[FreqState]
-    if (ds.isStreaming)
-      ds.groupByKey(_.key).flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[WinEvent], state: GroupState[FreqState]) =>
-          val (out, next) = WindowKernels.frequent(sorted(it),
-            state.getOption.map(_.entries).getOrElse(Nil), k, attrOf)
-          state.update(FreqState(next))
-          out.iterator
-      }
-    else foldSortedS(ds, FreqState(Nil)) { (evs, st) =>
+               attrOf: WinEvent => String = _.value.toString): Dataset[WinOut] =
+    keyed(ds, FreqState(Nil)) { (evs, st) =>
       val (out, next) = WindowKernels.frequent(evs, st.entries, k, attrOf)
       (out, FreqState(next))
     }
-  }
 
   /** lossyCounting window: Manku-Motwani heavy hitters at a support
     * threshold with a hard error bound; state O((1/error)·log(error·N))
     * per partition key.
     */
   def lossyCounting(ds: Dataset[WinEvent], support: Double, error: Double,
-                    attrOf: WinEvent => String = _.value.toString): Dataset[WinOut] = {
-    implicit val lossyEnc: Encoder[LossyState] = Encoders.product[LossyState]
-    if (ds.isStreaming)
-      ds.groupByKey(_.key).flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[WinEvent], state: GroupState[LossyState]) =>
-          val (out, next) = WindowKernels.lossyCounting(sorted(it),
-            state.getOption.getOrElse(LossyState(0L, Nil)), support, error, attrOf)
-          state.update(next)
-          out.iterator
-      }
-    else foldSortedS(ds, LossyState(0L, Nil))(
-      (evs, st) => WindowKernels.lossyCounting(evs, st, support, error, attrOf))
-  }
+                    attrOf: WinEvent => String = _.value.toString): Dataset[WinOut] =
+    keyed(ds, LossyState(0L, Nil))(
+      WindowKernels.lossyCounting(_, _, support, error, attrOf))
 
   // --------------------------------------------------------------------
   // Watermark-driven idle-key state shedding (EventTimeTimeout variants).
@@ -522,21 +529,21 @@ object Windows {
   private def timeoutKernel[S](ds: Dataset[WinEvent], watermarkDelay: String,
       idleUs: Long, empty: S, isEmpty: S => Boolean, evict: S => Seq[WinOut])(
       f: (Seq[WinEvent], S) => (Seq[WinOut], S))(
-      implicit se: Encoder[S]): Dataset[WinOut] = {
+      implicit codec: StateCodec[S]): Dataset[WinOut] = {
     require(idleUs > 0, s"idle horizon must be positive, got $idleUs us")
     withEventTime(ds, watermarkDelay).groupByKey(_.key).flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: String, it: Iterator[WinEvent], state: GroupState[S]) =>
+      (_: String, it: Iterator[WinEvent], state: GroupState[Array[Byte]]) =>
         if (state.hasTimedOut) {
-          val out = state.getOption.map(evict).getOrElse(Nil)
+          val out = state.getOption.map(b => evict(codec.decode(b))).getOrElse(Nil)
           state.remove()
           out.iterator
         } else {
           val events = sorted(it)
-          val (out, next) = f(events, state.getOption.getOrElse(empty))
+          val (out, next) = f(events, state.getOption.fold(empty)(codec.decode))
           if (isEmpty(next)) state.remove()
           else {
-            state.update(next)
+            state.update(codec.encode(next))
             // ceil to ms, clamped above the watermark (the store rejects
             // at-or-below registrations)
             state.setTimeoutTimestamp(math.max(
@@ -626,7 +633,6 @@ object Windows {
   def lossyCountingWithTimeout(ds: Dataset[WinEvent], support: Double,
                                error: Double, idleTtlUs: Long, watermarkDelay: String,
                                attrOf: WinEvent => String = _.value.toString): Dataset[WinOut] = {
-    implicit val lossyEnc: Encoder[LossyState] = Encoders.product[LossyState]
     timeoutKernel[LossyState](ds, watermarkDelay, idleTtlUs, LossyState(0L, Nil),
       (s: LossyState) => s.n == 0L && s.entries.isEmpty,
       (s: LossyState) => expireAll(s.entries.filter(_.emitted).map(_.ev))) {
@@ -638,7 +644,6 @@ object Windows {
   def frequentWithTimeout(ds: Dataset[WinEvent], k: Int, idleTtlUs: Long,
                           watermarkDelay: String,
                           attrOf: WinEvent => String = _.value.toString): Dataset[WinOut] = {
-    implicit val freqEnc: Encoder[FreqState] = Encoders.product[FreqState]
     timeoutKernel[FreqState](ds, watermarkDelay, idleTtlUs, FreqState(Nil),
       (s: FreqState) => s.entries.isEmpty,
       (s: FreqState) => expireAll(s.entries.map(_.ev))) {
@@ -703,7 +708,6 @@ object Windows {
   def outputEveryNWithTimeout(ds: Dataset[WinEvent], n: Int,
                               behavior: RateBehavior, idleTtlUs: Long,
                               watermarkDelay: String): Dataset[WinOut] = {
-    implicit val rateEnc: Encoder[RateBuffer] = Encoders.product[RateBuffer]
     timeoutKernel[RateBuffer](ds, watermarkDelay, idleTtlUs, RateBuffer(0L, Nil),
       (s: RateBuffer) => s.cnt == 0L && s.pending.isEmpty,
       (s: RateBuffer) => releaseAll(s.pending)) {

@@ -323,8 +323,9 @@ class SketchSpec extends AnyFunSuite {
     val hh5 = Sketches.heavyHitters(df, "k", 5)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(hh5.toSeq == Seq(("hot", 500L)))
+    // the operator's rows are unordered: sort them count-desc then key
     val hh9 = Sketches.heavyHitters(df, "k", 9)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(t => (-t._2, t._1))
     assert(hh9.toSeq == Seq(("hot", 500L), ("warm", 120L)))
     // equality with the plain exact computation for several k (the MG
     // pass must be a pure prune)
@@ -335,7 +336,7 @@ class SketchSpec extends AnyFunSuite {
         .orderBy(col("count").desc, col("k"))
         .collect().map(r => (r.getString(0), r.getLong(1)))
       val sketched = Sketches.heavyHitters(df, "k", k)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
+        .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(t => (-t._2, t._1))
       assert(sketched.toSeq == exact.toSeq, s"k=$k mismatch")
     }
     // all-uniform input: nothing clears the threshold
